@@ -307,6 +307,11 @@ def embedding_near_duplicates_capped(
     Exact cosine still verifies every candidate; capping and tabling
     only shape the CANDIDATE set.
 
+    Construction is not lazy: the salted bucket frame is
+    ``localCheckpoint``-ed eagerly, so calling this function runs the
+    persist of the normalized vectors and the occupancy-window job
+    before the returned frame is ever executed.
+
     Plan shape (round 13): the per-table bucket folds are columns of
     the SAME persisted frame as the normalized vectors, so the
     8×``tables`` hyperplane dot products run once at materialization —

@@ -5743,7 +5743,11 @@ def q_stratified_sample(spark, sf):
 )
 def q_embedding_kmeans(spark, sf):
     """Spherical k-means clustering of the embedding corpus (4 clusters,
-    3 Lloyd iterations). Per iteration the cluster exchanges only
+    4 fused Lloyd iterations in one ``kmeans_fit`` call). Each
+    iteration emits the objective of the model it assigned with; the
+    model the 4th iteration trains is discarded, as that iteration
+    exists only to score the 3rd model on the same summation path.
+    Per iteration the cluster exchanges only
     model-sized state (k x dim sums) — the canonical driver-model /
     executor-data iterative shape.
 

@@ -877,7 +877,12 @@ class KafkaIngestTailer:
     Kafka defaults to. Each drain page fetches ALL lagging partitions
     in one request per broker (``fetch_records_multi``), and the group
     session timeout derives from the poll interval (3×, floor 10 s) so
-    slow pollers aren't evicted between polls."""
+    slow pollers aren't evicted between polls.
+
+    ``poll_failures`` counts polls that raised (the background loop
+    logs them and retries next interval), ``offset_resets`` counts
+    out-of-range auto-resets (records lost to retention), and
+    ``last_error`` describes the latest of either."""
 
     def __init__(
         self,
@@ -939,6 +944,9 @@ class KafkaIngestTailer:
         self._stop = threading.Event()
         self._thread = None
         self._threading = threading
+        self.poll_failures = 0
+        self.offset_resets = 0
+        self.last_error: Optional[str] = None
         # poll() runs on BOTH the background _loop thread and the
         # engine's synchronous read-your-writes path (INSERT through
         # the topic); without mutual exclusion both can fetch the same
@@ -1029,7 +1037,12 @@ class KafkaIngestTailer:
         run requires the fetch→emit→commit cycle to be atomic across
         callers)."""
         with self._poll_lock:
-            return self._poll_locked()
+            try:
+                return self._poll_locked()
+            except Exception as exc:
+                self.poll_failures += 1
+                self.last_error = f"{type(exc).__name__}: {exc}"
+                raise
 
     def _ensure_membership(self, client) -> list[int]:
         """Coordinated mode: keep a live consumer-group membership and
@@ -1176,6 +1189,11 @@ class KafkaIngestTailer:
                     EARLIEST if self._start_point == EARLIEST else LATEST
                 )
                 new_pos = client.list_offsets(self.topic, p, reset_point)
+                self.offset_resets += 1
+                self.last_error = (
+                    f"offset {active[p]} of {self.topic}[{p}] out of range; "
+                    f"reset to {new_pos}"
+                )
                 _LOG.warning(
                     "kafka offset %s for %s[%s] is out of range "
                     "(retention aged it out); auto-resetting to %s "
@@ -1262,7 +1280,7 @@ class KafkaIngestTailer:
         while not self._stop.wait(self.poll_interval):
             try:
                 self.poll()
-            except Exception:  # noqa: BLE001 — broker outage; retry
+            except Exception:  # noqa: BLE001 — counted by poll(); retry
                 _LOG.exception("kafka tailer poll failed; retrying next interval")
                 with self._poll_lock:
                     if self._client is not None:

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import logging
+import math
 import os
 import shutil
 import time
@@ -136,6 +137,24 @@ def _value_fits(v, dt: T.DataType) -> bool:
             _value_fits(x, dt.elementType) for x in v
         )
     return False  # dicts only coerce to StringType (handled above)
+
+
+# In-process page append (_arrow_page): for each logical type the
+# Arrow write handles, its Arrow type and the JSON-decoded values that
+# ``from_json`` returns unchanged under it. Any other column type or
+# value sends the whole page through the Spark ``from_json`` append.
+_I64 = 1 << 63
+_F64_EXACT = 1 << 53
+_ARROW_PAGE_TYPES = {
+    T.LongType: ("int64", lambda v: type(v) is int and -_I64 <= v < _I64),
+    T.DoubleType: (
+        "float64",
+        lambda v: (type(v) is float and math.isfinite(v))
+        or (type(v) is int and -_F64_EXACT < v < _F64_EXACT),
+    ),
+    T.StringType: ("string", lambda v: type(v) is str),
+    T.BooleanType: ("bool", lambda v: type(v) is bool),
+}
 
 
 def _payload_default(v):
@@ -1568,7 +1587,11 @@ class HStreamEngine:
         to a list of ``(record_dict, event_time_seconds)`` (kafka
         ingestion): payload streams evolve their value-typed schema per
         record; typed streams coerce via ``from_json`` (missing fields
-        → NULL, same as the reference's FlowObject ingestion)."""
+        → NULL, same as the reference's FlowObject ingestion).
+
+        A page ``_arrow_page`` can build is written in-process (one
+        pyarrow file, no Spark job); every other page runs the Spark
+        ``from_json`` append below."""
         if not records:
             return 0
         if info.dynamic:
@@ -1578,6 +1601,13 @@ class HStreamEngine:
                 pass
             if info.schema is None:
                 info.payload = True
+        if info.payload:
+            for rec, _ts in records:
+                self._evolve_payload_schema(info, rec)
+        page = self._arrow_page(info, records)
+        if page is not None:
+            self._write_arrow_page(info, page)
+            return len(records)
         rows = [
             (json.dumps(rec, default=_payload_default), float(ts))
             for rec, ts in records
@@ -1589,8 +1619,6 @@ class HStreamEngine:
         raw = self.spark.createDataFrame(rows, raw_schema)
         ts_col = F.timestamp_seconds(F.col("__ts_sec")).alias(EVENT_TIME_COL)
         if info.payload:
-            for rec, _ts in records:
-                self._evolve_payload_schema(info, rec)
             out = raw.select(
                 F.col("__j").alias(self._PAYLOAD_COL), ts_col
             )
@@ -1634,6 +1662,70 @@ class HStreamEngine:
         # fix
         out.coalesce(1).write.mode("append").parquet(info.path)
         return len(rows)
+
+    def _arrow_page(self, info: StreamInfo, records: list):
+        """The page as a pyarrow Table in the stream's physical layout,
+        holding exactly the rows the Spark append above would write —
+        or None when only that append reproduces them: pyarrow missing,
+        an event time ``timestamp_seconds`` would null or reject, a
+        typed column outside ``_ARROW_PAGE_TYPES``, or a value
+        ``from_json`` would coerce or null (1.5 or "7" into INTEGER,
+        2**64, NaN, 7 or {..} into STRING, a lone surrogate)."""
+        try:
+            import pyarrow as pa
+        except ImportError:
+            return None
+        ts = []
+        for _rec, t in records:
+            us = float(t) * 1_000_000  # timestamp_seconds truncates
+            if not (math.isfinite(us) and -_I64 <= us < _I64):
+                return None
+            ts.append(int(us))
+        if info.payload:
+            names = [self._PAYLOAD_COL]
+            arrays = [pa.array(
+                [json.dumps(rec, default=_payload_default) for rec, _t in records],
+                pa.string(),
+            )]
+        else:
+            names, arrays = [], []
+            for f in self._schema_of(info).fields:
+                if f.name == EVENT_TIME_COL:
+                    continue
+                spec = _ARROW_PAGE_TYPES.get(type(f.dataType))
+                if spec is None:
+                    return None
+                arrow_type, fits = spec
+                vals = [rec.get(f.name) for rec, _t in records]
+                if not all(v is None or fits(v) for v in vals):
+                    return None
+                try:
+                    arrays.append(pa.array(vals, arrow_type))
+                except UnicodeEncodeError:  # lone surrogate: Spark writes '?'
+                    return None
+                names.append(f.name)
+        names.append(EVENT_TIME_COL)
+        arrays.append(pa.array(ts, pa.timestamp("us", tz="UTC")))
+        return pa.table(arrays, names=names)
+
+    def _write_arrow_page(self, info: StreamInfo, page) -> None:
+        """One snappy parquet part per page, written under a dot-prefixed
+        temp name (hidden from Spark's listing and every ``.parquet``
+        scan here) and renamed into place: the stream's file source
+        sees the whole page or none of it, and the caller commits its
+        offsets only after the rename."""
+        import pyarrow.parquet as pq
+
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        tmp = os.path.join(info.path, f".{name}.tmp")
+        try:
+            pq.write_table(page, tmp, compression="snappy")
+            _fault("append-written")
+            os.replace(tmp, os.path.join(info.path, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     def _start_continuous(self, select: A.Select, sink_stream: str, sql: str,
                           qname: Optional[str] = None) -> QueryInfo:

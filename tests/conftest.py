@@ -15,17 +15,30 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 # deep-fuzz gate. CI/round-end runs set the flag; the driver's default
 # selection stays green and bounded.
 RUN_SLOW = os.environ.get("HSTREAM_SLOW_TESTS", "0") == "1"
+_SLOW_REASON = "slow test; set HSTREAM_SLOW_TESTS=1 to include"
 
 
 def pytest_collection_modifyitems(config, items):
     if RUN_SLOW:
         return
-    skip_slow = pytest.mark.skip(
-        reason="slow test; set HSTREAM_SLOW_TESTS=1 to include"
-    )
+    skip_slow = pytest.mark.skip(reason=_SLOW_REASON)
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip_slow)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how many slow tests the run left out, so a log of the
+    default run shows what it did not check."""
+    if RUN_SLOW:
+        return
+    n = sum(
+        1 for r in terminalreporter.stats.get("skipped", [])
+        if isinstance(r.longrepr, tuple) and _SLOW_REASON in r.longrepr[2]
+    )
+    terminalreporter.write_line(
+        f"slow tests not run: {n} (set HSTREAM_SLOW_TESTS=1 to run them)"
+    )
 
 
 @pytest.fixture(scope="session")

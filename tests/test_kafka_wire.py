@@ -1535,6 +1535,81 @@ def test_tailer_auto_offset_reset_after_retention(tmp_path):
         t.stop()
 
 
+
+def test_tailer_counts_offset_resets(tmp_path):
+    """An out-of-range auto-reset skips records the broker no longer
+    holds; the tailer counts it and names it in ``last_error``."""
+    from hstream_spark.sources.connectors import KafkaIngestTailer
+    from hstream_spark.sources.kafka_stub import KafkaStubBroker
+    from hstream_spark.sources.kafka_wire import KafkaClient
+
+    with KafkaStubBroker() as broker:
+        broker.create_topic("rc_t")
+        client = KafkaClient(broker.bootstrap)
+        client.produce("rc_t", [(None, b'{"i": %d}' % i, i) for i in range(3)])
+        t = KafkaIngestTailer(
+            broker.bootstrap, "rc_t", emit=len,
+            offsets_path=str(tmp_path / "off.json"),
+        )
+        assert t.poll() == 3
+        assert (t.offset_resets, t.poll_failures, t.last_error) == (0, 0, None)
+        client.produce("rc_t", [(None, b'{"i": %d}' % i, i) for i in range(3, 7)])
+        broker._topics["rc_t"][0].truncate_before(5)  # 3..4 aged out
+        assert t.poll() == 2
+        assert t.offset_resets == 1
+        assert "out of range" in t.last_error and "reset to 5" in t.last_error
+        assert t.poll() == 0
+        assert t.offset_resets == 1 and t.poll_failures == 0
+        client.close()
+        t.stop()
+
+
+def test_tailer_counts_background_poll_failures(tmp_path):
+    """A background poll that raises is counted and described, the loop
+    keeps running, and once the fault clears every record lands once."""
+    import threading
+    import time
+
+    from hstream_spark.sources.connectors import KafkaIngestTailer
+    from hstream_spark.sources.kafka_stub import KafkaStubBroker
+    from hstream_spark.sources.kafka_wire import KafkaClient
+
+    got = []
+    healthy = threading.Event()
+
+    def emit(batch):
+        if not healthy.is_set():
+            raise OSError("disk full")
+        got.extend(batch)
+        return len(batch)
+
+    def wait_for(cond):
+        deadline = time.monotonic() + 10
+        while not cond():
+            assert time.monotonic() < deadline
+            time.sleep(0.01)
+
+    with KafkaStubBroker() as broker:
+        broker.create_topic("pf_t")
+        client = KafkaClient(broker.bootstrap)
+        client.produce("pf_t", [(None, b'{"i": %d}' % i, i) for i in range(4)])
+        t = KafkaIngestTailer(
+            broker.bootstrap, "pf_t", emit=emit,
+            offsets_path=str(tmp_path / "off.json"), poll_interval=0.02,
+        ).start()
+        try:
+            wait_for(lambda: t.poll_failures >= 2)
+            assert t.last_error == "OSError: disk full"
+            assert t.offsets.get(0, 0) == 0  # nothing committed
+            healthy.set()
+            wait_for(lambda: len(got) == 4)
+            time.sleep(0.1)  # further polls find nothing new
+            assert sorted(r[0]["i"] for r in got) == [0, 1, 2, 3]
+            assert t.offset_resets == 0
+        finally:
+            t.stop()
+            client.close()
+
 def test_saslprep_unifies_unicode_forms_and_rejects_prohibited():
     """RFC 4013: composed and decomposed forms of the same password
     authenticate interchangeably (NFKC); control characters and empty
