@@ -45,6 +45,19 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.shuffle.spill.compress": "true",
+    # streaming checkpoints (offsets/commits logs, file-source logs,
+    # state-store files) rename through Hadoop's FileSystem instead of
+    # its FileContext: the engine's data_root is a local POSIX
+    # directory (every engine write already relies on os.rename/
+    # os.replace), where FileSystem.rename is the same atomic rename(2)
+    # — and, without libhadoop, FileContext resolves each rename by
+    # forking `readlink` (four forks per checkpoint file). A session
+    # default, not a per-query one: the file source builds its
+    # sources/0/ log with the caller's session.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("HSTREAM_SPARK_DRIVER_MEM", "16g"),
 }

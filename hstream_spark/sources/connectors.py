@@ -137,7 +137,114 @@ def jdbc_source(spark: SparkSession, options: dict) -> DataFrame:
         raise ConnectorError(f"jdbc source failed (driver jar on classpath?): {exc}") from exc
 
 
-class JdbcCdcTailer:
+class _WatermarkTailer:
+    """Watermark-column polling shared by the CDC tailers: each
+    ``poll()`` fetches the rows past the high-water mark ``last``,
+    emits them and advances ``last``.
+
+    ``poll_failures`` counts polls that raised (the background loop
+    logs them and retries next interval) and ``last_error`` describes
+    the latest. ``start()`` spawns a daemon polling thread; ``stop()``
+    matches the StreamingQuery handle shape so engine PAUSE/TERMINATE/
+    shutdown manage it uniformly."""
+
+    _name: str  # polling thread and log name
+    _row = "row"  # what one source record is called in errors
+    _columns = "columns"
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        options: dict,
+        emit: Callable[[DataFrame], None],
+        watermark_col: str,
+        last=None,
+        poll_interval: float = 5.0,
+    ):
+        import threading
+
+        self.spark = spark
+        self.options = dict(options)
+        self.emit = emit
+        self.watermark_col = watermark_col
+        self.last = last
+        self.poll_interval = float(poll_interval)
+        self.poll_failures = 0
+        self.last_error: Optional[str] = None
+        self._stop = threading.Event()
+        self._thread: Optional[threading.Thread] = None
+        self._threading = threading
+
+    def _fetch(self) -> Optional[DataFrame]:
+        """The source rows past ``last`` (all rows while ``last`` is
+        None); None when the source reports none."""
+        raise NotImplementedError
+
+    def poll(self) -> int:
+        """One incremental read; returns rows appended."""
+        try:
+            return self._poll_once()
+        except Exception as exc:
+            self.poll_failures += 1
+            self.last_error = f"{type(exc).__name__}: {exc}"
+            raise
+
+    def _poll_once(self) -> int:
+        inc = self._fetch()
+        if inc is None:
+            return 0
+        if self.watermark_col not in inc.columns:
+            raise ConnectorError(
+                f"watermark column {self.watermark_col!r} not in source "
+                f"{self._columns} {inc.columns}"
+            )
+        inc = inc.persist()
+        try:
+            agg = inc.agg(
+                F.max(self.watermark_col).alias("mx"),
+                F.count(F.lit(1)).alias("n"),
+            ).collect()[0]
+            if not agg["n"]:
+                return 0
+            if agg["mx"] is None:
+                # all-NULL watermark: `last` could never advance and every
+                # poll would re-emit the whole source — fail loudly instead
+                raise ConnectorError(
+                    f"watermark column {self.watermark_col!r} is NULL in "
+                    f"every fetched {self._row}; incremental tailing needs "
+                    "a monotone non-null watermark (use an id or sequence "
+                    "column)"
+                )
+            self.emit(inc)
+            self.last = agg["mx"]
+            return int(agg["n"])
+        finally:
+            inc.unpersist()
+
+    def _loop(self) -> None:
+        while not self._stop.wait(self.poll_interval):
+            try:
+                self.poll()
+            except Exception:  # noqa: BLE001 — counted by poll(); retry
+                _LOG.exception("%s poll failed; retrying next interval",
+                               self._name)
+
+    def start(self) -> "_WatermarkTailer":
+        if self._thread is None:
+            self._thread = self._threading.Thread(
+                target=self._loop, name=self._name, daemon=True
+            )
+            self._thread.start()
+        return self
+
+    def stop(self) -> None:
+        self._stop.set()
+        if self._thread is not None:
+            self._thread.join(timeout=30)
+            self._thread = None
+
+
+class JdbcCdcTailer(_WatermarkTailer):
     """Incremental CDC tailing after the JDBC snapshot — the long-running
     ingestion phase of the reference's source connectors
     (hstream-io/HStream/IO/Worker.hs:252-257 keeps a Debezium worker
@@ -160,86 +267,16 @@ class JdbcCdcTailer:
     with the initial snapshot only; an all-NULL watermark column is a
     configuration error and fails loudly (silently re-snapshotting
     every poll is the alternative).
-
-    ``start()`` spawns a daemon polling thread; ``stop()`` matches the
-    StreamingQuery handle shape so engine PAUSE/TERMINATE/shutdown
-    manage it uniformly.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        options: dict,
-        emit: Callable[[DataFrame], None],
-        watermark_col: str,
-        last=None,
-        poll_interval: float = 5.0,
-    ):
-        import threading
+    _name = "jdbc-cdc-tailer"
+    _columns = "table columns"
 
-        self.spark = spark
-        self.options = dict(options)
-        self.emit = emit
-        self.watermark_col = watermark_col
-        self.last = last
-        self.poll_interval = float(poll_interval)
-        self._stop = threading.Event()
-        self._thread: Optional[threading.Thread] = None
-        self._threading = threading
-
-    def poll(self) -> int:
-        """One incremental read; returns rows appended."""
+    def _fetch(self) -> DataFrame:
         df = jdbc_source(self.spark, self.options)
-        if self.watermark_col not in df.columns:
-            raise ConnectorError(
-                f"watermark column {self.watermark_col!r} not in source table "
-                f"columns {df.columns}"
-            )
-        inc = df
-        if self.last is not None:
-            inc = df.filter(F.col(self.watermark_col) > F.lit(self.last))
-        inc = inc.persist()
-        try:
-            agg = inc.agg(
-                F.max(self.watermark_col).alias("mx"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            if not agg["n"]:
-                return 0
-            if agg["mx"] is None:
-                # all-NULL watermark: `last` could never advance and every
-                # poll would re-emit the whole table — fail loudly instead
-                raise ConnectorError(
-                    f"watermark column {self.watermark_col!r} is NULL in "
-                    "every fetched row; incremental tailing needs a "
-                    "monotone non-null watermark (use an id column)"
-                )
-            self.emit(inc)
-            self.last = agg["mx"]
-            return int(agg["n"])
-        finally:
-            inc.unpersist()
-
-    def _loop(self) -> None:
-        while not self._stop.wait(self.poll_interval):
-            try:
-                self.poll()
-            except Exception:  # noqa: BLE001 — transient DB outage; retry
-                _LOG.exception("cdc tailer poll failed; retrying next interval")
-
-    def start(self) -> "JdbcCdcTailer":
-        if self._thread is None:
-            self._thread = self._threading.Thread(
-                target=self._loop, name="jdbc-cdc-tailer", daemon=True
-            )
-            self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=30)
-            self._thread = None
+        if self.last is None or self.watermark_col not in df.columns:
+            return df  # snapshot, or the missing column fails the poll
+        return df.filter(F.col(self.watermark_col) > F.lit(self.last))
 
 
 # ---------------------------------------------------------------------------
@@ -1511,7 +1548,7 @@ def mongodb_source(spark: SparkSession, options: dict, max_docs: int = 1_000_000
     return spark.createDataFrame(rows, StructType(fields))
 
 
-class MongoCdcTailer:
+class MongoCdcTailer(_WatermarkTailer):
     """Incremental tailing for the mongodb source — completes the
     source-connector matrix: every source now has BOTH a snapshot and
     a continuous phase. Same watermark contract as `JdbcCdcTailer`
@@ -1522,82 +1559,16 @@ class MongoCdcTailer:
     cross the wire. The first ``poll()`` with ``last=None`` IS the
     snapshot."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        options: dict,
-        emit: Callable[[DataFrame], None],
-        watermark_col: str,
-        last=None,
-        poll_interval: float = 5.0,
-    ):
-        import threading
+    _name = "mongo-cdc-tailer"
+    _row = "document"
+    _columns = "document fields"
 
-        self.spark = spark
-        self.options = dict(options)
-        self.emit = emit
-        self.watermark_col = watermark_col
-        self.last = last
-        self.poll_interval = float(poll_interval)
-        self._stop = threading.Event()
-        self._thread: Optional[threading.Thread] = None
-        self._threading = threading
-
-    def poll(self) -> int:
-        """One incremental read; returns rows appended."""
+    def _fetch(self) -> Optional[DataFrame]:
         flt = (
             None
             if self.last is None
             else {self.watermark_col: {"$gt": self.last}}
         )
-        inc = mongodb_source(self.spark, self.options, filter=flt,
-                             empty_ok=True)
-        if inc is None:
-            return 0  # idle poll — nothing new server-side
-        if self.watermark_col not in inc.columns:
-            raise ConnectorError(
-                f"watermark column {self.watermark_col!r} not in source "
-                f"document fields {inc.columns}"
-            )
-        inc = inc.persist()
-        try:
-            agg = inc.agg(
-                F.max(self.watermark_col).alias("mx"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            if not agg["n"]:
-                return 0
-            if agg["mx"] is None:
-                raise ConnectorError(
-                    f"watermark column {self.watermark_col!r} is NULL in "
-                    "every fetched document; incremental tailing needs a "
-                    "monotone non-null watermark (use an id/sequence field)"
-                )
-            self.emit(inc)
-            self.last = agg["mx"]
-            return int(agg["n"])
-        finally:
-            inc.unpersist()
-
-    def _loop(self) -> None:
-        while not self._stop.wait(self.poll_interval):
-            try:
-                self.poll()
-            except Exception:  # noqa: BLE001 — transient outage; retry
-                _LOG.exception(
-                    "mongo cdc tailer poll failed; retrying next interval"
-                )
-
-    def start(self) -> "MongoCdcTailer":
-        if self._thread is None:
-            self._thread = self._threading.Thread(
-                target=self._loop, name="mongo-cdc-tailer", daemon=True
-            )
-            self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=30)
-            self._thread = None
+        # None on an idle poll: nothing new server-side
+        return mongodb_source(self.spark, self.options, filter=flt,
+                              empty_ok=True)

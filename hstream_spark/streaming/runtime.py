@@ -384,20 +384,54 @@ class HStreamEngine:
             self._recover()
 
     @contextmanager
-    def _stream_start_conf(self):
-        """Scope ``streaming_shuffle_partitions`` around a streaming
-        ``.start()``: the new query's cloned session captures the
-        override; the live session conf is restored immediately."""
-        if self.streaming_shuffle_partitions is None:
-            yield
-            return
-        key = "spark.sql.shuffle.partitions"
-        old = self.spark.conf.get(key)
-        self.spark.conf.set(key, str(self.streaming_shuffle_partitions))
+    def _stream_start_conf(self, skip_no_data: bool = False):
+        """Scope per-query settings around a streaming ``.start()``:
+        ``streaming_shuffle_partitions``, and with ``skip_no_data`` no
+        no-data micro-batches (see ``_no_data_batches_idle``). The new
+        query's cloned session captures them; the live session conf is
+        restored immediately."""
+        overrides = {}
+        if self.streaming_shuffle_partitions is not None:
+            overrides["spark.sql.shuffle.partitions"] = str(
+                self.streaming_shuffle_partitions
+            )
+        if skip_no_data:
+            overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = (
+                "false"
+            )
+        conf = self.spark.conf
+        old = {k: conf.get(k, None) for k in overrides}
+        for k, v in overrides.items():
+            conf.set(k, v)
         try:
             yield
         finally:
-            self.spark.conf.set(key, old)
+            for k, v in old.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
+
+    @staticmethod
+    def _no_data_batches_idle(select: A.Select, mode: str) -> bool:
+        """True when a ``mode`` start of ``select`` gains nothing from
+        Spark's no-data micro-batches. Every stream read carries a
+        watermark on ``_ts``, so Spark follows each data batch with one
+        that only advances the watermark — for this shape (an update-
+        mode aggregate over a plain stream, no key on event time) its
+        only stateful operator has nothing to evict or emit, and the
+        batch just reloads and commits every state partition and the
+        offset logs.
+        Windows, joins, SESSION/SLIDING operators and complete mode
+        evict state and emit closed windows or outer rows in those
+        batches, so they keep them."""
+        return (
+            mode == "update"
+            and isinstance(select.from_, A.StreamRef)
+            and (bool(select.group_by)
+                 or any(find_aggs(it.expr) for it in select.items))
+            and all(g.name != EVENT_TIME_COL for g in select.group_by)
+        )
 
     # -- catalog durability --------------------------------------------------
     #
@@ -977,11 +1011,15 @@ class HStreamEngine:
         # readers use. A replayed epoch appends a duplicate delta with
         # identical content under a higher version — latest-wins
         # converges to the same values, so the path stays idempotent.
-        # No-data micro-batches (watermark bookkeeping) write ZERO rows:
-        # their tmp dir is discarded instead of renamed — an idle stream
-        # must not accrete empty deltas and re-compact O(state) forever
-        # — decided from the written parquet FOOTERS (driver-side
-        # metadata, no second execution of the batch subtree).
+        # A trigger that emits nothing writes ZERO rows: its tmp dir is
+        # discarded instead of renamed — an idle stream must not accrete
+        # empty deltas and re-compact O(state) forever — decided from
+        # the written parquet FOOTERS (driver-side metadata, no second
+        # execution of the batch subtree). Plain GROUP BY views start
+        # without no-data micro-batches (_no_data_batches_idle), so
+        # these come from windowed/SESSION views' watermark batches
+        # that closed nothing, and from data batches whose rows all
+        # fell to WHERE or late-data drops.
         base, ks = HStreamEngine._view_layout(vi.state_dir)
         if base is None:
             tmp_dir = os.path.join(vi.state_dir, ".tmp_v0")
@@ -1793,9 +1831,10 @@ class HStreamEngine:
         )
         qi = QueryInfo(qname, sql, sink_stream, self._checkpoint(qname), None,
                        mode=mode)
+        skip_no_data = self._no_data_batches_idle(select, mode)
 
         def _go():
-            with self._stream_start_conf():
+            with self._stream_start_conf(skip_no_data):
                 qi.handle = (
                     out.writeStream.outputMode(mode)
                     .option("checkpointLocation", self._checkpoint(qname))
@@ -2095,9 +2134,11 @@ class HStreamEngine:
                        self._checkpoint(f"view_{stmt.name}"), None,
                        mode=mode_label)
 
+        skip_no_data = self._no_data_batches_idle(stmt.select, mode)
+
         def _go():
             try:
-                with self._stream_start_conf():
+                with self._stream_start_conf(skip_no_data):
                     q = (
                         out.writeStream.outputMode(mode)
                         .option("checkpointLocation",
@@ -2622,8 +2663,9 @@ class HStreamEngine:
         # plans that reject update mode (e.g. session windows).
         mode = "update" if aggregated else "append"
         mode_label = "append" if sliding_append else mode
+        skip_no_data = self._no_data_batches_idle(stmt, mode)
         try:
-            with self._stream_start_conf():
+            with self._stream_start_conf(skip_no_data):
                 q = (
                     out.writeStream.outputMode(mode)
                     .format("memory")
@@ -2686,7 +2728,8 @@ class HStreamEngine:
                 return (int(lp.get("batchId", -1)), int(lp.get("numInputRows", -1)))
 
             rows = [
-                (q.name, q.status, q.mode, *(_progress(q)), q.sql)
+                (q.name, self._query_status(q), q.mode, *(_progress(q)),
+                 q.sql)
                 for q in self.queries.values()
             ]
             schema = (
@@ -2772,6 +2815,17 @@ class HStreamEngine:
             shutil.rmtree(self.streams[stmt.name].path, ignore_errors=True)
         del registry[stmt.name]
         return True
+
+    @staticmethod
+    def _query_status(q: QueryInfo) -> str:
+        """Catalog status, corrected by the live handle: a RUNNING query
+        whose StreamingQuery stopped on an exception is FAILED (the
+        catalog status only changes on PAUSE/RESUME/TERMINATE)."""
+        h = q.handle
+        if (q.status == "RUNNING" and h is not None and not h.isActive
+                and h.exception() is not None):
+            return "FAILED"
+        return q.status
 
     def _terminate(self, qname: str):
         if qname not in self.queries:

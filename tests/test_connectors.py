@@ -987,6 +987,65 @@ def test_cdc_tailer_all_null_watermark_fails_loudly(spark):
         t.poll()
 
 
+def _wait_failures(tailer, n, timeout=30.0):
+    deadline = time.time() + timeout
+    while tailer.poll_failures < n and time.time() < deadline:
+        time.sleep(0.05)
+    return tailer.poll_failures
+
+
+def test_jdbc_cdc_tailer_counts_poll_failures(spark):
+    """A poll that raises is counted with its error, by a direct call
+    and by the background loop, which keeps polling."""
+    from hstream_spark.sources.connectors import JdbcCdcTailer
+
+    t = JdbcCdcTailer(
+        spark,
+        {"url": "jdbc:derby:memory:no_such_db", "dbtable": "t",
+         "driver": DERBY_DRIVER},
+        emit=lambda df: None,
+        watermark_col="k",
+        poll_interval=0.05,
+    )
+    assert (t.poll_failures, t.last_error) == (0, None)
+    with pytest.raises(ConnectorError):
+        t.poll()
+    assert t.poll_failures == 1
+    assert t.last_error.startswith("ConnectorError: jdbc source failed")
+    t.start()
+    try:
+        assert _wait_failures(t, 3) >= 3
+    finally:
+        t.stop()
+
+
+def test_mongo_cdc_tailer_counts_poll_failures(spark):
+    """Same for the mongodb tailer, against a port nothing listens on."""
+    import socket
+
+    from hstream_spark.sources.connectors import MongoCdcTailer
+
+    with socket.create_server(("127.0.0.1", 0)) as srv:
+        port = srv.getsockname()[1]
+    t = MongoCdcTailer(
+        spark,
+        {"uri": f"mongodb://127.0.0.1:{port}", "database": "d",
+         "collection": "c", "timeout": 2},
+        emit=lambda df: None,
+        watermark_col="k",
+        poll_interval=0.05,
+    )
+    with pytest.raises(ConnectorError):
+        t.poll()
+    assert t.poll_failures == 1
+    assert t.last_error.startswith("ConnectorError: ")
+    t.start()
+    try:
+        assert _wait_failures(t, 3) >= 3
+    finally:
+        t.stop()
+
+
 def test_cdc_tailer_survives_engine_restart(spark, tmp_path):
     """DDL-log replay re-attaches a watermark connector WITHOUT
     re-snapshotting, resuming from the high-water mark recorded in the

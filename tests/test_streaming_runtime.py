@@ -1498,3 +1498,186 @@ class TestResumeParity:
         # both carry the SOURCE event time (same pinned second)
         secs = {v.timestamp() // 1 for v in ts_vals}
         assert all(abs(s - ts) < 2 for s in secs), (secs, ts)
+
+
+def _log_batches(checkpoint: str, log: str) -> list:
+    """Batch ids a query's ``offsets``/``commits`` log holds."""
+    import os
+
+    d = os.path.join(checkpoint, log)
+    return sorted(int(f) for f in os.listdir(d) if f.isdigit())
+
+
+def test_show_queries_reports_dead_query_failed(engine):
+    """A view refresh that dies on an exception reads FAILED in SHOW
+    QUERIES, not the RUNNING its catalog entry still holds."""
+    import hstream_spark.streaming.runtime as R
+
+    engine.execute("CREATE STREAM dq_ev (k INTEGER);")
+    engine.execute("CREATE VIEW dq AS SELECT k, COUNT(*) AS n FROM dq_ev "
+                   "GROUP BY k;")
+    engine.execute("INSERT INTO dq_ev (k) VALUES (1);")
+    handle = engine.views["dq"].handle
+    handle.processAllAvailable()  # first batch writes the base, no delta
+
+    def status():
+        rows = engine.execute("SHOW QUERIES;").collect()
+        return {r["name"]: r["status"] for r in rows}["view_dq"]
+
+    assert status() == "RUNNING"
+
+    def hook(point):
+        if point == "delta-written":
+            raise RuntimeError("injected upsert failure")
+
+    R._FAULT_HOOK = hook
+    try:
+        engine.execute("INSERT INTO dq_ev (k) VALUES (2);")
+        with pytest.raises(Exception, match="injected upsert failure"):
+            handle.processAllAvailable()
+    finally:
+        R._FAULT_HOOK = None
+    assert wait_until(lambda: not handle.isActive, timeout=30, step=0.2)
+    assert engine.queries["view_dq"].status == "RUNNING"  # catalog entry
+    assert status() == "FAILED"
+
+
+class TestNoDataBatches:
+    """Every stream read carries a ``_ts`` watermark, so Spark follows a
+    data batch with a no-data batch that only advances it. Aggregates
+    over a plain stream start without those batches; a windowed view
+    keeps them (they are what closes its windows)."""
+
+    KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+    T0 = 1_700_000_000.0
+
+    @staticmethod
+    def _executed(handle) -> list:
+        # idle progress events (no batch ran) carry no addBatch phase
+        return [p for p in handle.recentProgress
+                if "addBatch" in p["durationMs"]]
+
+    @pytest.mark.parametrize("sql, mode, idle", [
+        ("SELECT k, COUNT(*) AS n FROM s GROUP BY k;", "update", True),
+        ("SELECT COUNT(*) AS n FROM s WHERE v > 0;", "update", True),
+        ("SELECT k, COUNT(*) AS n FROM s GROUP BY k;", "complete", False),
+        ("SELECT k, v FROM s WHERE v > 0;", "append", False),
+        ("SELECT _ts, COUNT(*) AS n FROM s GROUP BY _ts;", "update", False),
+        ("SELECT k, COUNT(*) AS n FROM TUMBLE(s, INTERVAL 5 SECOND) "
+         "GROUP BY k;", "update", False),
+        ("SELECT k, COUNT(*) AS n FROM HOP(s, INTERVAL 10 SECOND, "
+         "INTERVAL 5 SECOND) GROUP BY k;", "update", False),
+        ("SELECT k, COUNT(*) AS n FROM SESSION(s, INTERVAL 30 SECOND) "
+         "GROUP BY k;", "update", False),
+        ("SELECT k, COUNT(*) AS n FROM SLIDING(s, INTERVAL 30 SECOND) "
+         "GROUP BY k;", "update", False),
+        ("SELECT s.k, COUNT(*) AS n FROM s JOIN t ON s.k = t.k "
+         "WITHIN (INTERVAL 5 SECOND) GROUP BY s.k;", "update", False),
+        ("SELECT k, COUNT(*) AS n FROM (SELECT k FROM s) AS q GROUP BY k;",
+         "update", False),
+    ])
+    def test_which_starts_skip_no_data_batches(self, sql, mode, idle):
+        from hstream_spark.plans.parser import parse
+
+        assert HStreamEngine._no_data_batches_idle(parse(sql), mode) is idle
+
+    def test_unwindowed_aggregates_skip_no_data_batches(self, engine, spark):
+        before = spark.conf.get(self.KEY, None)
+        engine.execute("CREATE STREAM nd (k INTEGER, v INTEGER);")
+        for sql in (
+            "CREATE VIEW nd_v AS SELECT k, COUNT(*) AS n, SUM(v) AS s "
+            "FROM nd GROUP BY k;",
+            "CREATE STREAM nd_agg AS SELECT k, COUNT(*) AS n, SUM(v) AS s "
+            "FROM nd GROUP BY k;",
+            "CREATE VIEW nd_t AS SELECT k, COUNT(*) AS n, SUM(v) AS s "
+            "FROM TUMBLE(nd, INTERVAL 1 HOUR) GROUP BY k;",
+        ):
+            engine.execute(sql)
+            assert spark.conf.get(self.KEY, None) == before
+        plain = [engine.queries["view_nd_v"], engine.queries["csas_nd_agg"]]
+        tumble = engine.queries["view_nd_t"]
+        for i, (k, v) in enumerate([(1, 10), (2, 5), (1, 3)]):
+            # one file per trigger; each later _ts advances the watermark
+            engine.execute(f"INSERT INTO nd (k, v, _ts) VALUES "
+                           f"({k}, {v}, {self.T0 + i});")
+            for q in plain + [tumble]:
+                q.handle.processAllAvailable()
+            for q in plain:
+                assert _log_batches(q.checkpoint, "offsets") == \
+                    list(range(i + 1)), q.name
+        for q in plain:
+            assert [p["numInputRows"] for p in self._executed(q.handle)] \
+                == [1, 1, 1], q.name
+        assert any(p["numInputRows"] == 0
+                   for p in self._executed(tumble.handle))
+        assert len(_log_batches(tumble.checkpoint, "offsets")) > 3
+
+        def rows(sql, *cols):
+            df = engine.execute(sql)
+            return sorted(tuple(r) for r in df.select(*cols or df.columns)
+                          .collect())
+
+        expected = rows("SELECT k, COUNT(*) AS n, SUM(v) AS s FROM nd "
+                        "GROUP BY k;")
+        assert expected == [(1, 2, 13), (2, 1, 5)]
+        assert rows("SELECT k, n, s FROM nd_v;") == expected
+        # counts and sums only grow, so each key's last update is its max
+        assert rows("SELECT k, MAX(n) AS n, MAX(s) AS s FROM nd_agg "
+                    "GROUP BY k;") == expected
+        cols = ("window_start", "k", "n", "s")
+        assert rows("SELECT * FROM nd_t;", *cols) == rows(
+            "SELECT k, COUNT(*) AS n, SUM(v) AS s "
+            "FROM TUMBLE(nd, INTERVAL 1 HOUR) GROUP BY k;", *cols)
+
+    def test_checkpoints_written_by_file_context_manager_resume(
+        self, spark, tmp_path
+    ):
+        """Checkpoints written under Spark's FileContext manager resume
+        exactly-once under the engine's FileSystem default, and no temp
+        file is left in the logs or state."""
+        import os
+
+        key = "spark.sql.streaming.checkpointFileManagerClass"
+        default = spark.conf.get(key)
+        assert default.endswith(".FileSystemBasedCheckpointFileManager")
+        root = str(tmp_path / "ckm")
+
+        def ingest(eng, rows):
+            for k, v in rows:
+                eng.execute(f"INSERT INTO ck (k, v) VALUES ({k}, {v});")
+            for q in eng.queries.values():
+                q.handle.processAllAvailable()
+
+        spark.conf.set(key, default.replace(
+            "FileSystemBasedCheckpointFileManager",
+            "FileContextBasedCheckpointFileManager"))
+        try:
+            a = HStreamEngine(spark, root)
+            a.execute("CREATE STREAM ck (k INTEGER, v INTEGER);")
+            a.execute("CREATE VIEW ck_v AS SELECT k, COUNT(*) AS n, "
+                      "SUM(v) AS s FROM ck GROUP BY k;")
+            a.execute("CREATE STREAM ck_f AS SELECT k, v FROM ck "
+                      "WHERE v > 0;")
+            ingest(a, [(1, 1), (2, 2), (1, -3)])
+            a.shutdown()
+        finally:
+            spark.conf.set(key, default)
+        b = HStreamEngine(spark, root)
+        try:
+            ingest(b, [(2, 4), (3, 5), (1, 6)])
+            got = sorted(tuple(r) for r in
+                         b.execute("SELECT k, n, s FROM ck_v;").collect())
+            assert got == [(1, 3, 4), (2, 2, 6), (3, 1, 5)]
+            got = sorted(tuple(r) for r in
+                         b.execute("SELECT k, v FROM ck_f;").collect())
+            assert got == [(1, 1), (1, 6), (2, 2), (2, 4), (3, 5)]
+            for q in b.queries.values():
+                assert _log_batches(q.checkpoint, "commits") == \
+                    _log_batches(q.checkpoint, "offsets")
+                for log in ("offsets", "commits", "state"):
+                    for d, _dirs, files in os.walk(
+                        os.path.join(q.checkpoint, log)
+                    ):
+                        assert not [f for f in files if ".tmp" in f], d
+        finally:
+            b.shutdown()
