@@ -1,13 +1,18 @@
-"""Benchmark harness — driver contract.
+"""Full-catalog timing sweep — driver contract.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+Times every ``REGISTRY`` entry, in registration order, at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables) on
+local[$SPARK_GRAFT_CPUS], then runs the map/reduce/join streaming
+harness (``bench_streaming``). Each entry executes its full physical
+plan via a noop sink (no driver collect) — measuring scan + shuffle +
+agg/join work, not result transfer — and records the host's steal,
+iowait and busy share over its own window in ``query_env``.
 
-Each query executes its full physical plan via a noop sink (no driver
-collect) — measuring scan + shuffle + agg/join work, not result
-transfer.
+Output: the full record as one JSON line, mirrored to the
+``BENCH_DETAIL.json`` sidecar, then a compact last line {"metric",
+"value", "unit", "sf", "n_queries", "n_errors", "streaming",
+"detail"}. A/B and regression checks go through ``perfbench/run.py``,
+which gates on CPU work rather than wall time.
 """
 
 from __future__ import annotations
@@ -19,220 +24,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5ish",
-    "tpch_q6",
-    "agg_basic",
-    "tumble_agg",
-    "hop_agg",
-    "session_agg",
-    "interval_join_inner",
-    "stream_table_join",
-    "asof_join_events",
-    "salted_join",
-    "top_orders_per_customer",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_capped",
-    "dedup_simhash",
-    "ngram_jaccard_pairs",
-    "dedup_embedding_lsh",
-    "dedup_embedding_lsh_capped",
-    "ann_cosine_topk",
-    "ann_bruteforce_np",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "lang_id",
-    "quality_score",
-    "doc_fingerprint",
-    "token_stats",
-    "tpch_q10ish",
-    "tpch_q14ish",
-    "tpch_q18ish",
-    "tpch_q19ish",
-    "sliding_agg",
-    "repetition_signals",
-    "decontaminate",
-    "tpch_q4ish",
-    "tpch_q7ish",
-    "tpch_q13ish",
-    "tpch_q16ish",
-    "tpch_q17ish",
-    "tpch_q21ish",
-    "tpch_q22ish",
-    "rollup_agg",
-    "cube_agg",
-    "agg_stats",
-    "percentile_exact",
-    "sketch_distinct_users",
-    "event_sessionize",
-    "deterministic_sample",
-    "stratified_sample",
-    "embedding_kmeans",
-    "kmeans_fit_fixed",
-    "linear_probe_fit_fixed",
-    "linear_probe_score",
-    "logistic_probe_fit",
-    "extended_json_scan",
-    "kmeans_assign",
-    "dedup_prune",
-    "dedup_prune_priority",
-    "tpch_q12ish",
-    "tpch_q15ish",
-    "tpch_q9ish",
-    "tpch_q2ish",
-    "tpch_q8ish",
-    "tpch_q11ish",
-    "tpch_q20ish",
-    "boilerplate_signals",
-    "embedding_quantize",
-    "cap_per_group",
-    "hypertable_rollup",
-    "range_join_bands",
-    "curation_pipeline",
-    "vocab_top",
-    "lm_cross_entropy",
-    "lm_bigram_cross_entropy",
-    "lm_trigram_cross_entropy",
-    "bm25_search",
-    "dedup_exact_substring",
-    "source_quality_stats",
-    "temperature_sample",
-    "pq_encode",
-    "ann_pq_topk",
-    "ann_sq_topk",
-    "ann_sq_topk_warm",
-    "chunk_documents",
-    "pack_sequences",
-    "bpe_train",
-    "bpe_subword_tokenize",
-    "quality_classifier",
-    "gopher_quality_filters",
-    "gopher_repetition_filters",
-    "fineweb_quality_filters",
-    "c4_quality_filters",
-    "line_dedup",
-    "line_dedup_against_index",
-    "dedup_passage_removal",
-    "containment_pairs",
-    "normalize_text",
-    "pii_redact",
-    "url_dedup",
-    "profile_table",
-    "event_funnel",
-    "cohort_retention",
-    "semantic_dedup",
-    "dedup_against_index",
-    "dedup_against_index_warm",
-    "corpus_shuffle",
-    "perplexity_bands",
-    "token_budget_sample",
-    "similar_docs_topk",
-    "similar_docs_topk_warm",
-    "multimodal_curation",
-    # round 6: the formerly un-benched catalog tail — mostly cheap
-    # scalar/relational/SQL-frontend oracle entries — so the 2x
-    # envelope binds catalog-wide (n_queries == catalog size)
-    "select_where_project",
-    "affiliate_computed",
-    "scalar_math",
-    "scalar_string",
-    "scalar_array",
-    "scalar_trig",
-    "null_semantics",
-    "cast_ops",
-    "between_ops",
-    "json_ops",
-    "datetime_ops",
-    "type_predicates",
-    "topk_agg",
-    "topkdistinct_agg",
-    "agg_count_distinct",
-    "having_filter",
-    "distinct_op",
-    "union_op",
-    "window_bounds",
-    "interval_join_left",
-    "interval_join_using",
-    "cross_join_within",
-    "join_outer_full",
-    "simhash_signature",
-    "dedup_embedding_cosine",
-    "dedup_components",
-    "url_normalize",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "cdc_apply_latest",
-    "sql_frontend_agg",
-    "sql_frontend_scalar",
-    "sql_frontend_tumble",
-    "sql_frontend_interval_join",
-    "sql_frontend_sliding",
-    "sql_frontend_having",
-    "sql_frontend_hop",
-    "sql_frontend_session",
-    "sql_frontend_join_using",
-    "sql_frontend_natural_join",
-    "sql_frontend_json_cast",
-    "sql_frontend_subquery",
-    "sql_frontend_from_list",
-    "lsh_bucket_stats",
-    "lsh_recall_eval",
-    "pii_detect",
-    "time_type_ops",
-    "sketch_quantiles",
-    "train_test_split",
-    "group_train_test_split",
-    # round 11
-    "dedup_simhash_capped",
-    "dsir_select",
-]
-
-# Drift yardsticks: three stable-plan queries timed at the START and END
-# of every bench run. The box this repo benches on drifts 1.3-5x between
-# sessions (BASELINE.md round 2-4 notes); the emitted `drift` factor —
-# measured yardstick wall / the calibration below — lets cross-round
-# ratios normalize mechanically instead of by hand.
-# Calibration history: round-5 pinned {tpch_q1: 1.136, tpch_q6: 0.336,
-# agg_basic: 0.292} (min of 4 quiet runs, 2026-08-14 morning); the
-# round-5 bench session then ran ~21% fast (drift 0.794). Round-6
-# re-derivation on the same date's quiet box read drift 1.061 against
-# those constants — i.e. they were accurate again — and re-pinned to
-# the round-6 in-bench start/end averages below so drift reads 1.0 on
-# this box; divide by 1.061 to convert round-5-era drift values.
-YARDSTICKS = ("tpch_q1", "tpch_q6", "agg_basic")
-YARDSTICK_CAL = {"tpch_q1": 1.206, "tpch_q6": 0.299, "agg_basic": 0.327}
-
-# Auto-calibration (round 7): hand-re-pinning the constants above every
-# round chased the box instead of measuring it — round 5 read drift
-# 0.794 and round 6 read 1.115 against pins that were each "fresh".
-# Every bench run now appends its start/end yardstick times to
-# yardstick_history.jsonl, and calibration is derived as the per-query
-# MEDIAN over the last HISTORY_WINDOW runs (start and end samples both
-# count, so loaded-run outliers are damped from both directions).  The
-# pinned constants remain the cold-start fallback until the history
-# holds MIN_HISTORY runs.
-HISTORY_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "yardstick_history.jsonl"
-)
-HISTORY_WINDOW = 9
-MIN_HISTORY = 3
-# A run whose own drift read past this is a contended sweep; its
-# yardstick samples describe the contention, not the box, and must not
-# drag the calibration medians (the round-10 driver run, drift 1.378
-# with burst steal, polluted the window it was appended to).
-HISTORY_MAX_DRIFT = 2.0
-
-
 def _proc_stat() -> tuple[int, int, int, int] | None:
     """(total, idle, iowait, steal) jiffies from the aggregate cpu line,
     or None off-Linux. One 4 KB read — cheap enough to bracket every
-    bench entry. Steal is the signal the start/end yardsticks provably
-    cannot see (round-10: 6%+ burst steal mid-sweep while the idle-box
-    probes read 0.02%)."""
+    bench entry, so a mid-sweep steal burst lands on the entries it
+    slowed."""
     try:
         with open("/proc/stat") as fh:
             parts = fh.readline().split()
@@ -259,158 +55,6 @@ def _env_delta(before, after) -> dict:
         "steal_pct": round(100.0 * steal / dt, 2),
         "iowait_pct": round(100.0 * iowait / dt, 2),
         "busy_pct": round(100.0 * (dt - idle - iowait) / dt, 1),
-    }
-
-
-def load_calibration(
-    sf: str = "0.1", path: str | None = None
-) -> tuple[dict[str, float], str]:
-    """Median-of-history calibration; (values, source) where source is
-    ``history(n=..)`` or ``pinned``. Records are keyed by scale factor
-    — a quick sanity bench at sf0.01 must not drag the sf0.1 medians
-    down ~10×. Legacy records without an ``sf`` field were all recorded
-    at the default sf0.1. Records that carry their run's measured drift
-    are EXCLUDED above HISTORY_MAX_DRIFT: one contended sweep must not
-    drag the next round's medians (legacy records without the field
-    stay in — damped by the median as before)."""
-    import statistics
-
-    try:
-        with open(path or HISTORY_PATH) as fh:
-            runs = [json.loads(line) for line in fh if line.strip()]
-    except (OSError, ValueError):
-        runs = []
-    runs = [r for r in runs if str(r.get("sf", "0.1")) == str(sf)]
-    runs = [
-        r for r in runs
-        if not (
-            isinstance(r.get("drift"), (int, float))
-            and r["drift"] > HISTORY_MAX_DRIFT
-        )
-    ]
-    runs = runs[-HISTORY_WINDOW:]
-
-    def _samples(rs, n):
-        out = []
-        for r in rs:
-            for side in ("start", "end"):
-                v = r.get(side, {}).get(n)
-                if isinstance(v, (int, float)) and v > 0:
-                    out.append(float(v))
-        return out
-
-    # Two-pass robust estimate: records that PREDATE the drift field
-    # (pre-round-11) can still be contended sweeps; a record whose own
-    # median sample sits > HISTORY_MAX_DRIFT x the window median on any
-    # yardstick describes contention, not the box — drop it and
-    # recompute. (Post-round-11 records self-describe via `drift`.)
-    first = {}
-    for n in YARDSTICKS:
-        s = _samples(runs, n)
-        if s:
-            first[n] = statistics.median(s)
-
-    def _outlier(r) -> bool:
-        for n in YARDSTICKS:
-            vals = [r.get(side, {}).get(n) for side in ("start", "end")]
-            vals = [v for v in vals if isinstance(v, (int, float)) and v > 0]
-            if vals and n in first and first[n] > 0:
-                if statistics.median(vals) > HISTORY_MAX_DRIFT * first[n]:
-                    return True
-        return False
-
-    cleaned = [r for r in runs if not _outlier(r)]
-    if len(cleaned) >= MIN_HISTORY:
-        runs = cleaned
-    if len(runs) < MIN_HISTORY:
-        return dict(YARDSTICK_CAL), "pinned"
-    cal = {}
-    for n in YARDSTICKS:
-        samples = _samples(runs, n)
-        if len(samples) < MIN_HISTORY:
-            return dict(YARDSTICK_CAL), "pinned"
-        cal[n] = round(statistics.median(samples), 3)
-    return cal, f"history(n={len(runs)})"
-
-
-def append_history(
-    yard_start: dict, yard_end: dict, sf: str = "0.1",
-    drift: float | None = None,
-) -> None:
-    try:
-        rec = {"t": round(time.time()), "sf": str(sf),
-               "start": yard_start, "end": yard_end}
-        if drift is not None:
-            # self-describing: lets load_calibration drop contended runs
-            rec["drift"] = drift
-        with open(HISTORY_PATH, "a") as fh:
-            fh.write(json.dumps(rec) + "\n")
-    except OSError:
-        pass
-
-
-def _load_pins_doc(repo_dir: str | None = None) -> dict:
-    repo_dir = repo_dir or os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(repo_dir, "BASELINE_PINS.json")) as fh:
-            doc = json.load(fh)
-        return doc if isinstance(doc, dict) else {}
-    except (OSError, ValueError):
-        return {}
-
-
-def load_pins(repo_dir: str | None = None) -> dict:
-    """Per-entry sf0.1 pins from BASELINE_PINS.json (tools/gen_pins.py);
-    {} when the file is absent or malformed so bench never hard-fails
-    on it."""
-    pins = _load_pins_doc(repo_dir).get("pins", {})
-    return pins if isinstance(pins, dict) else {}
-
-
-def load_yardstick_round1_pins(repo_dir: str | None = None) -> dict:
-    """ROUND-1 yardstick pins — the calibration-creep denominators.
-    These must never move with later re-pin rows (gen_pins records the
-    FIRST occurrence); falls back to the current pins for older
-    BASELINE_PINS.json files without the section."""
-    doc = _load_pins_doc(repo_dir)
-    r1 = doc.get("yardstick_round1_pins")
-    if isinstance(r1, dict) and r1:
-        return r1
-    return load_pins(repo_dir)
-
-
-def compute_over_envelope(
-    timings: dict[str, float],
-    pins: dict[str, dict],
-    query_env: dict[str, dict],
-    factor: float = 2.0,
-) -> dict[str, dict]:
-    """Entries slower than ``factor`` x their pin, with their own
-    contention evidence attached so the record adjudicates itself."""
-    out: dict[str, dict] = {}
-    for name, sec in timings.items():
-        pin = pins.get(name, {}).get("sec")
-        if pin and sec / pin > factor:
-            out[name] = {
-                "sec": sec,
-                "pin": pin,
-                "ratio": round(sec / pin, 2),
-                **query_env.get(name, {}),
-            }
-    return out
-
-
-def compute_cal_creep(
-    cal: dict[str, float], pins: dict[str, dict], yardsticks=None
-) -> dict[str, float]:
-    """Rolling-median calibration vs each yardstick's round-1 pin: the
-    median tracker absorbs slow catalog-wide drift (drift factor stays
-    ~1.0 while everything ratchets), so this ratio is the creep alarm
-    (threshold ~1.5x)."""
-    return {
-        y: round(cal[y] / pins[y]["sec"], 3)
-        for y in (yardsticks or YARDSTICKS)
-        if y in cal and pins.get(y, {}).get("sec")
     }
 
 
@@ -542,150 +186,43 @@ def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-
-    def run_yardsticks() -> dict[str, float]:
-        out = {}
-        for yname in YARDSTICKS:
-            yq = REGISTRY[yname]
-            best = float("inf")
-            for _ in range(2):
-                start = time.perf_counter()
-                yq.builder(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                best = min(best, time.perf_counter() - start)
-            out[yname] = round(best, 3)
-        return out
-
-    # Per-query contention visibility (round-10 verdict item 1): the
-    # start/end yardsticks bound a ~4-minute sweep, so a mid-run steal
-    # burst is invisible and un-attributable. Two complementary probes:
-    #  (a) every bench entry is bracketed by /proc/stat reads — its own
-    #      steal/iowait/busy percentages land in query_env[name];
-    #  (b) every PROBE_EVERY entries one micro-yardstick (agg_basic,
-    #      the cheapest stable plan, warm after run_yardsticks) samples
-    #      box speed into drift_timeline — each entry's local_drift is
-    #      the max of its bracketing probes.
-    # An entry is flagged `contended` when steal ≥ 1% of its window or
-    # local_drift ≥ 1.5 — so a slow number carries its own adjudication.
-    run_sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
-    cal, cal_source = load_calibration(run_sf)
-    PROBE_EVERY = 8
-    probe_q = REGISTRY["agg_basic"]
-    drift_timeline: list[dict] = []
     query_env: dict[str, dict] = {}
-    probe_idx_before: dict[str, int] = {}
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
 
-    def run_probe(after_n: int) -> None:
-        start = time.perf_counter()
-        probe_q.builder(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        sec = time.perf_counter() - start
-        drift_timeline.append(
-            {
-                "after_n_queries": after_n,
-                "agg_basic": round(sec, 3),
-                "ratio": round(sec / cal["agg_basic"], 3),
-            }
-        )
+    def best_of(q, reset=None) -> float:
+        best = float("inf")
+        for _ in range(max(1, runs)):
+            if reset is not None:
+                reset(sf_dir)
+            start = time.perf_counter()
+            q.builder(spark, sf_dir).write.mode("overwrite").format(
+                "noop"
+            ).save()
+            best = min(best, time.perf_counter() - start)
+        return round(best, 3)
 
-    yard_start = run_yardsticks()
-    run_probe(0)
-    for qi, name in enumerate(HEADLINE):
-        q = REGISTRY[name]
-        probe_idx_before[name] = len(drift_timeline) - 1
+    for name, q in REGISTRY.items():
         env_before = _proc_stat()
-        if name == "hypertable_rollup":
-            # deterministic cold/warm split: cold pays the chunked
-            # layout write + first full rollup (layout reset per run),
-            # warm is a maintenance run with no new chunks
-            cold = float("inf")
-            for _ in range(max(1, runs)):
-                reset_hypertable_layout(sf_dir)
-                start = time.perf_counter()
-                q.builder(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                cold = min(cold, time.perf_counter() - start)
-            warm = float("inf")
-            for _ in range(max(1, runs)):
-                start = time.perf_counter()
-                q.builder(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                warm = min(warm, time.perf_counter() - start)
-            timings["hypertable_rollup_cold"] = round(cold, 3)
-            timings["hypertable_rollup_warm"] = round(warm, 3)
-        else:
-            best = float("inf")
-            try:
-                for _ in range(max(1, runs)):
-                    start = time.perf_counter()
-                    q.builder(spark, sf_dir).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
-                    best = min(best, time.perf_counter() - start)
-                timings[name] = round(best, 3)
-            except Exception as exc:  # noqa: BLE001 — one bad query must
-                # not void the whole bench record; surface it in the JSON
-                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+        try:
+            if name == "hypertable_rollup":
+                # deterministic cold/warm split: cold pays the chunked
+                # layout write + first full rollup (layout reset before
+                # each run), warm is a maintenance run with no new chunks
+                timings["hypertable_rollup_cold"] = best_of(
+                    q, reset_hypertable_layout
+                )
+                timings["hypertable_rollup_warm"] = best_of(q)
+            else:
+                timings[name] = best_of(q)
+        except Exception as exc:  # noqa: BLE001 — one bad query must
+            # not void the whole bench record; surface it in the JSON
+            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
         env = _env_delta(env_before, _proc_stat())
         if env:
             query_env[name] = env
         # drop any operator-internal persists so queries don't inherit
         # block-manager pressure from earlier ones
         spark.catalog.clearCache()
-        if (qi + 1) % PROBE_EVERY == 0:
-            run_probe(qi + 1)
-    run_probe(len(HEADLINE))
-
-    # per-entry local drift = worst bracketing probe; contended = hard
-    # evidence (steal) or local slowdown during the entry's window
-    contended: dict[str, dict] = {}
-    for name in HEADLINE:
-        i = probe_idx_before.get(name)
-        if i is None:
-            continue
-        after = min(i + 1, len(drift_timeline) - 1)
-        local = max(drift_timeline[i]["ratio"], drift_timeline[after]["ratio"])
-        env = query_env.get(name, {})
-        steal = env.get("steal_pct", 0.0)
-        if name in query_env:
-            query_env[name]["local_drift"] = round(local, 3)
-        if steal >= 1.0 or local >= 1.5:
-            contended[name] = {
-                "steal_pct": steal,
-                "local_drift": round(local, 3),
-            }
-
-    yard_end = run_yardsticks()
-    ratios = sorted(
-        ((yard_start[n] + yard_end[n]) / 2) / cal[n]
-        for n in YARDSTICKS
-    )
-    drift_factor = round(ratios[len(ratios) // 2], 3)  # median
-    append_history(yard_start, yard_end, run_sf, drift=drift_factor)
-    drift = {
-        "factor": drift_factor,
-        "start": yard_start,
-        "end": yard_end,
-        "calibration": cal,
-        "calibration_source": cal_source,
-        "timeline": drift_timeline,
-    }
-
-    # Envelope enforcement (round-11 verdict task 4): every timed entry
-    # is compared against its BASELINE_PINS.json pin (generated from
-    # BASELINE.md by tools/gen_pins.py); ratio > 2x lands in
-    # `over_envelope` with the entry's own contention evidence attached,
-    # so a slow record adjudicates itself the way `contended` does.
-    # Calibration creep (task 5): the rolling-median yardstick
-    # calibration is also compared against each yardstick's ROUND-1 pin
-    # — a slow catalog-wide regression would ratchet the medians and
-    # read as drift ~1.0, so the creep ratio makes it visible (alert
-    # threshold 1.5x).
-    over_envelope: dict[str, dict] = {}
-    cal_creep: dict[str, float] = {}
-    if float(run_sf) == 0.1:  # pins are sf0.1 records
-        over_envelope = compute_over_envelope(timings, load_pins(), query_env)
-        cal_creep = compute_cal_creep(cal, load_yardstick_round1_pins())
 
     stream_env_before = _proc_stat()
     try:
@@ -697,8 +234,6 @@ def main() -> None:
         streaming["env"] = stream_env
 
     total = round(sum(timings.values()), 3)
-    sf = run_sf  # single derivation — keeps the calibration key and
-    # the recorded sf from ever desynchronizing
     detail = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -706,11 +241,7 @@ def main() -> None:
         "queries": timings,
         "errors": errors,
         "streaming": streaming,
-        "drift": drift,
         "query_env": query_env,
-        "contended": contended,
-        "over_envelope": over_envelope,
-        "calibration_vs_round1_pin": cal_creep,
         "sf": float(sf),
     }
     # Full per-query record: printed FIRST and mirrored to a sidecar
@@ -748,10 +279,6 @@ def main() -> None:
         "sf": float(sf),
         "n_queries": len(timings),
         "n_errors": len(errors),
-        "drift": drift["factor"],
-        "n_contended": len(contended),
-        "n_over_envelope": len(over_envelope),
-        "calibration_vs_round1_pin": cal_creep,
         "streaming": {
             f"{k}_records_per_sec": v.get("records_per_sec")
             for k, v in streaming.items()

@@ -115,7 +115,7 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
     transform at every one of its n references — and a pushed-down
     size() filter doubles that again. Measured on the sf0.1 documents
     corpus that plan shape evaluates md5 12x per document (round-12
-    A/B, tools/ab_bisect.py).
+    A/B; see OPTIMIZATION_r12.md).
     """
     return shingles_from_hashes(token_hash_array(text), n)
 
@@ -356,8 +356,6 @@ def connected_components(
     left_col: str = "doc_a",
     right_col: str = "doc_b",
     max_iter: int = 50,
-    seed_labels: Optional[bool] = None,
-    ckpt_pairs: Optional[bool] = None,
 ) -> DataFrame:
     """Near-duplicate clusters from a pair list: iterative min-label
     propagation (each node adopts the smallest id reachable so far)
@@ -393,56 +391,32 @@ def connected_components(
     set came from a distinct over the same frame). Every later round is
     byte-identical by induction from the identical post-round-1 state.
 
-    ``seed_labels`` / ``ckpt_pairs`` select the seeded init and the
-    pair-list checkpoint explicitly (the fixpoint reached is the same
-    either way); ``None`` (the default) falls back to the
-    ``HSTREAM_COMPONENTS_SEED`` / ``HSTREAM_COMPONENTS_CKPT_PAIRS``
-    env flags — a harness-level override for A/B tooling, kept out of
-    the normal API path (ADVICE r12: ambient environment should not
-    silently steer library plans; callers that care pass the kwarg).
+    Raises ``RuntimeError`` if labels are still changing after
+    ``max_iter`` rounds, rather than returning unconverged components.
     """
-    import os as _os
-
-    if seed_labels is None:
-        seed_labels = _os.environ.get("HSTREAM_COMPONENTS_SEED", "1") == "1"
-    if ckpt_pairs is None:
-        ckpt_pairs = (
-            _os.environ.get("HSTREAM_COMPONENTS_CKPT_PAIRS", "1") == "1"
-        )
+    # The symmetric edge set references the pair frame TWICE (once per
+    # union branch) and Spark plans no reuse across the branches — so an
+    # expensive candidate pipeline (banded self-join + distinct +
+    # verification) would evaluate twice while `edges` materializes. One
+    # localCheckpoint pins the pair list (always candidate-stage-bounded,
+    # far smaller than the corpus) so the union reads blocks instead of
+    # re-running the pipeline.
     e = pairs.select(
         F.col(left_col).cast("long").alias("a"),
         F.col(right_col).cast("long").alias("b"),
-    )
-    if ckpt_pairs:
-        # The symmetric edge set references the pair frame TWICE (once
-        # per union branch) and Spark plans no reuse across the
-        # branches — so an expensive candidate pipeline (banded
-        # self-join + distinct + verification) would evaluate twice
-        # while `edges` materializes. One localCheckpoint pins the pair
-        # list (always candidate-stage-bounded, far smaller than the
-        # corpus) so the union reads blocks instead of re-running the
-        # pipeline.
-        e = e.localCheckpoint()
+    ).localCheckpoint()
     edges = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().persist()
-    if seed_labels:
-        labels = (
-            edges.groupBy("a")
-            .agg(F.min("b").alias("__mb"))
-            .select(
-                F.col("a").alias("node"),
-                F.least(F.col("a"), F.col("__mb")).alias("label"),
-            )
-            .localCheckpoint()
+    labels = (
+        edges.groupBy("a")
+        .agg(F.min("b").alias("__mb"))
+        .select(
+            F.col("a").alias("node"),
+            F.least(F.col("a"), F.col("__mb")).alias("label"),
         )
-    else:
-        labels = (
-            edges.select(F.col("a").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-            .localCheckpoint()
-        )
+        .localCheckpoint()
+    )
     for _ in range(max_iter):
         nb_min = (
             edges.join(labels, edges["b"] == labels["node"])
@@ -474,6 +448,11 @@ def connected_components(
         if changed == 0:
             break
     edges.unpersist()
+    if changed:
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"max_iter={max_iter} rounds: {changed} labels still changing"
+        )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("component")
     )
@@ -1522,8 +1501,7 @@ def lsh_bucket_stats(docs: DataFrame, text_col: str = "text",
 
 def lsh_recall_eval(docs: DataFrame, thresholds=(0.3, 0.5, 0.7),
                     max_id: Optional[int] = None, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    ckpt_cand: Optional[bool] = None) -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """Recall of MinHash-LSH candidate generation against exact
     shingle-Jaccard ground truth — the measurement behind the
     (bands × rows-per-band) parameter choice: fewer rows per band
@@ -1539,8 +1517,6 @@ def lsh_recall_eval(docs: DataFrame, thresholds=(0.3, 0.5, 0.7),
     index surfaced, and recall; plus the total candidate count (the
     precision denominator / join cost).
     """
-    import os as _os
-
     sample = docs.where(F.col(id_col) < max_id) if max_id is not None else docs
     # exclude unshingleable docs (see lsh_bucket_stats) — they can be
     # neither ground truth nor candidates. NOTE: the returned frame is
@@ -1585,17 +1561,12 @@ def lsh_recall_eval(docs: DataFrame, thresholds=(0.3, 0.5, 0.7),
         .select("doc_a", "doc_b")
         .distinct()
     )
-    if ckpt_cand is None:
-        # kwarg preferred; env flag is the A/B-harness override only
-        # (ADVICE r12)
-        ckpt_cand = _os.environ.get("HSTREAM_RECALL_CKPT_CAND", "1") == "1"
-    if ckpt_cand:
-        # `cand` feeds both the recall scoring join and the
-        # total_candidates count in the same plan, and Spark reuses
-        # nothing across the two references — without pinning, the
-        # band self-join + distinct runs twice. The distinct pair list
-        # is tiny, so the checkpoint is near-free.
-        cand = cand.localCheckpoint()
+    # `cand` feeds both the recall scoring join and the
+    # total_candidates count in the same plan, and Spark reuses nothing
+    # across the two references — without pinning, the band self-join +
+    # distinct runs twice. The distinct pair list is tiny, so the
+    # checkpoint is near-free.
+    cand = cand.localCheckpoint()
     if thresholds:
         # pairs below every threshold contribute 0 to each __true_i
         # (otherwise-0 arm) and 0 to each __hit_i (null hit coalesced),

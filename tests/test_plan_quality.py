@@ -252,3 +252,21 @@ def test_text_tokenize_pass_runs_once(spark, sf_dir):
             f"({plan.count('split(')} occurrences) — a multi-reference "
             "consumer re-inlined the tokenize pass"
         )
+
+
+def test_operators_read_no_environment():
+    """Operator plans are chosen by arguments alone: an environment
+    read inside an operator lets an ambient variable silently change
+    what a caller's query executes. Deployment settings belong in
+    ``session.py`` and the connectors."""
+    import pathlib
+    import re
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "hstream_spark" / "operators"
+    hits = [
+        f"{path.name}:{i}: {line.strip()}"
+        for path in sorted(ops.glob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\benviron\b|\bgetenv\b", line)
+    ]
+    assert hits == []

@@ -218,16 +218,30 @@ def test_connected_components_empty(spark):
     assert connected_components(pairs).count() == 0
 
 
-def test_connected_components_seeded_init_matches_identity_init(spark):
-    """Round-12 session-3 seeding: the label table starts at
-    min(node, min direct neighbor) — exactly the incumbent's
-    post-round-1 state — so the final labels must be IDENTICAL to the
-    identity-init loop on any graph. Pinned on a mixed graph (reversed
-    chain + star + islands) where a wrong seed would surface as a
-    different component minimum or a missing node. Selected via the
-    ``seed_labels`` kwarg (round 13): mutating process-global
-    os.environ from a test could race concurrent callers (ADVICE
-    r12)."""
+def _union_find_components(pairs):
+    """Reference labelling: plain union-find, component = min member."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_matches_union_find(spark):
+    """The seeded label table (min(node, min direct neighbor)) must
+    reach the same fixpoint as a pure-Python union-find on any graph.
+    Pinned on a mixed graph (reversed chain + star + islands) where a
+    wrong seed would surface as a different component minimum or a
+    missing node."""
     from hstream_spark.operators.dedup import connected_components
 
     # reversed chain 9-8-...-1, star around 50, island pair, singleton
@@ -237,17 +251,27 @@ def test_connected_components_seeded_init_matches_identity_init(spark):
     pairs += [(30, 31), (100, 99)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
 
-    identity = {
-        r.doc_id: r.component
-        for r in connected_components(df, seed_labels=False).collect()
-    }
-    seeded = {
-        r.doc_id: r.component
-        for r in connected_components(df, seed_labels=True).collect()
-    }
+    comp = {r.doc_id: r.component for r in connected_components(df).collect()}
 
-    assert seeded == identity
-    assert set(seeded.values()) == {1, 41, 30, 99}
+    assert comp == _union_find_components(pairs)
+    assert set(comp.values()) == {1, 41, 30, 99}
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """Hitting max_iter with labels still changing must fail loudly,
+    never return partial components; the same reversed 40-node chain
+    converges under the default max_iter."""
+    from hstream_spark.operators.dedup import connected_components
+
+    n = 40
+    df = spark.createDataFrame(
+        [(n - i, n - i - 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match=r"max_iter=1\b.*still changing"):
+        connected_components(df, max_iter=1)
+    comp = {r.doc_id: r.component for r in connected_components(df).collect()}
+    assert len(comp) == n
+    assert set(comp.values()) == {1}
 
 
 def test_connected_components_long_chain_contracts(spark):

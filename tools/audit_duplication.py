@@ -21,9 +21,10 @@ WHAT A COUNT MEANS (round-12 calibration, measured):
   boundaries CSE doesn't span (Filter/Generate splits after
   pushdown): the MinHash family's md5 token-hash pass genuinely ran
   up to 12x per document until hoisted (round 12). If a hot entry
-  regresses, A/B with tools/ab_family.py before and after binding
-  the subtree once (operators/text.py `_bind_once`, or a separate
-  projection) — keep only measured wins.
+  regresses, A/B it with paired, alternating perfbench/run.py runs
+  of the trees before and after binding the subtree once
+  (operators/text.py `_bind_once`, or a separate projection) — keep
+  only measured wins.
 - Scan multiplicity is a SCALE concern, not a local one. The trigram
   LM plan executes 15 parquet scans (AQE reused zero stages); on
   page-cached local parquet that re-scan is cheaper than caching, but

@@ -5,13 +5,11 @@ Usage:
     python tools/bench_diff.py 9 10       # explicit rounds
     python tools/bench_diff.py FILE FILE  # arbitrary detail files
 
-Prints a per-query ratio table (new/old wall seconds), both raw and
-drift-adjusted (each record carries its own yardstick drift factor, so
-the adjusted ratio divides out machine speed differences between the
-two sessions), sorted worst-first, plus totals. Entries present in only
-one record are listed separately. Round-9 verdict item 4: per-query
-regression attribution must not depend on an untracked overwrite-in-
-place file.
+Prints a per-query ratio table (new/old wall seconds), sorted
+worst-first, plus totals. Entries present in only one record are listed
+separately. The ratios are raw: wall time from two sessions also
+differs by host speed and steal, so a regression verdict comes from
+perfbench's paired CPU-time runs, not from this table.
 """
 from __future__ import annotations
 
@@ -55,28 +53,24 @@ def main() -> None:
         old = json.load(f)
     with open(new_p) as f:
         new = json.load(f)
-    od, nd = old.get("drift", {}).get("factor", 1.0), \
-        new.get("drift", {}).get("factor", 1.0)
     oq, nq = old["queries"], new["queries"]
     common = sorted(set(oq) & set(nq))
-    rows = []
-    for q in common:
-        raw = nq[q] / oq[q] if oq[q] else float("inf")
-        adj = raw * (od / nd) if nd else raw
-        rows.append((adj, raw, q, oq[q], nq[q]))
-    rows.sort(reverse=True)
-    print(f"old: {os.path.basename(old_p)} total={old['value']}s "
-          f"drift={od}  |  new: {os.path.basename(new_p)} "
-          f"total={new['value']}s drift={nd}")
-    print(f"{'query':38s} {'old_s':>8s} {'new_s':>8s} {'raw':>6s} {'adj':>6s}")
-    for adj, raw, q, o, n in rows:
-        flag = "  <-- regressed" if adj > 1.3 and n > 0.3 else ""
-        print(f"{q:38s} {o:8.3f} {n:8.3f} {raw:6.2f} {adj:6.2f}{flag}")
+    rows = sorted(
+        ((nq[q] / oq[q] if oq[q] else float("inf"), q, oq[q], nq[q])
+         for q in common),
+        reverse=True,
+    )
+    print(f"old: {os.path.basename(old_p)} total={old['value']}s  |  "
+          f"new: {os.path.basename(new_p)} total={new['value']}s")
+    print(f"{'query':38s} {'old_s':>8s} {'new_s':>8s} {'ratio':>6s}")
+    for ratio, q, o, n in rows:
+        flag = "  <-- regressed" if ratio > 1.3 and n > 0.3 else ""
+        print(f"{q:38s} {o:8.3f} {n:8.3f} {ratio:6.2f}{flag}")
     tot_o = sum(oq[q] for q in common)
     tot_n = sum(nq[q] for q in common)
-    adj_t = (tot_n / tot_o) * (od / nd) if tot_o and nd else float("nan")
+    ratio_t = tot_n / tot_o if tot_o else float("nan")
     print(f"\ncommon {len(common)} entries: {tot_o:.1f}s -> {tot_n:.1f}s "
-          f"(raw {tot_n / tot_o:.3f}x, drift-adj {adj_t:.3f}x)")
+          f"({ratio_t:.3f}x)")
     only_old = sorted(set(oq) - set(nq))
     only_new = sorted(set(nq) - set(oq))
     if only_old:
