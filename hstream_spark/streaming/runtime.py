@@ -29,6 +29,9 @@ pause, and checkpoint-restart gives the same exactly-once semantics.
 
 from __future__ import annotations
 
+import dataclasses
+import datetime
+import functools
 import json
 import logging
 import math
@@ -39,8 +42,10 @@ import uuid
 import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import Callable, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,11 +55,20 @@ from hstream_spark.plans.compiler import (
     EVENT_TIME_COL,
     CompileError,
     compile_select,
+    compile_select_session_update,
+    compile_select_sliding_update,
     find_aggs,
 )
 from hstream_spark.plans.parser import parse
 
 _LOG = logging.getLogger("hstream_spark.runtime")
+
+
+def _aggregated(select: A.Select) -> bool:
+    """Does ``select`` aggregate (a GROUP BY or an aggregate call)?"""
+    return bool(select.group_by) or any(
+        find_aggs(it.expr) for it in select.items
+    )
 
 
 def _warn_complete_fallback(name: str, why: str) -> None:
@@ -428,8 +442,7 @@ class HStreamEngine:
         return (
             mode == "update"
             and isinstance(select.from_, A.StreamRef)
-            and (bool(select.group_by)
-                 or any(find_aggs(it.expr) for it in select.items))
+            and _aggregated(select)
             and all(g.name != EVENT_TIME_COL for g in select.group_by)
         )
 
@@ -502,22 +515,16 @@ class HStreamEngine:
                         )
         finally:
             self._replaying = False
-        # deferred query starts: only queries still RUNNING after the
-        # FULL log replayed may start — starting at CREATE-replay time
-        # would let a later-TERMINATED query's stale file-path
-        # checkpoint ingest compacted segments as new data (silent
-        # double-count in durable view state) before its TERMINATE line
-        # caught up
-        for qi in list(self.queries.values()):
-            starter, qi.starter = qi.starter, None
-            if qi.status == "RUNNING" and qi.handle is None and starter:
-                starter()
-        # same deferral for streaming-query connectors (sink/generator):
-        # a connector DROPped or PAUSEd later in the log never starts
-        for ci in list(self.connectors.values()):
-            starter, ci.starter = ci.starter, None
-            if ci.status == "RUNNING" and ci.handle is None and starter:
-                starter()
+        # deferred starts (_start_query): only queries and connectors
+        # still registered and RUNNING after the FULL log replayed
+        # start — starting at CREATE-replay time would let a later-
+        # TERMINATED query's stale file-path checkpoint ingest compacted
+        # segments as new data (silent double-count in durable view
+        # state) before its TERMINATE line caught up; a connector
+        # DROPped or PAUSEd later in the log never starts
+        for owner in [*self.queries.values(), *self.connectors.values()]:
+            if owner.starter is not None:
+                owner.starter()
 
     # -- helpers ------------------------------------------------------------
 
@@ -655,11 +662,10 @@ class HStreamEngine:
     # accumulating (deferring the O(base) rewrite) up to
     # _VIEW_COMPACT_MAX_DELTAS, which hard-caps the reader's union
     # fan-out regardless of row counts. Counts come from parquet
-    # footers via the per-ViewInfo cache (zero extra jobs); unknown
-    # footers degrade to the fixed every-N cadence. Net: dense
+    # footers via the per-ViewInfo cache (zero extra jobs). Net: dense
     # workloads keep exactly the round-8 cadence; sparse ones stop
     # rewriting a 1M-row base to absorb a handful of 100-row deltas.
-    _VIEW_COMPACT_EVERY = 8  # cadence floor (and unknown-footer fallback)
+    _VIEW_COMPACT_EVERY = 8  # cadence floor
     _VIEW_COMPACT_MAX_DELTAS = 64  # hard cap on read-side delta fan-out
     _VIEW_COMPACT_FRACTION = 0.5  # defer floor folds until Σ ≥ ½ base
 
@@ -803,6 +809,18 @@ class HStreamEngine:
         return base_df.join(keys, cond, "left_anti").unionByName(latest)
 
     def _view_state_read(self, vi: ViewInfo) -> DataFrame:
+        """The view's rows, latest state. A view whose refresh query
+        died on an exception raises instead: its state stopped at the
+        last committed trigger, and serving it as current would hide
+        the failure. PAUSED and TERMINATED views serve their last
+        state."""
+        q = self.queries.get(f"view_{vi.name}")
+        err = self._query_error(q) if q is not None else None
+        if err is not None:
+            raise RuntimeError(
+                f"view {vi.name!r} is stale: its refresh query {q.name} "
+                f"failed: {err}"
+            )
         df = self._view_state_frame(self.spark, vi)
         if vi.having_col:
             # HAVING applies to the CURRENT aggregate — evaluated here,
@@ -816,88 +834,68 @@ class HStreamEngine:
     def _stored_state_columns(state_dir: str) -> Optional[set]:
         """Column names actually present in the on-disk view state (one
         parquet footer from the newest layout dir — base and deltas
-        share a schema). None when no committed state exists or the
-        footers aren't locally readable (remote storage): callers then
-        skip the probe rather than guess."""
-        try:
-            base, ks = HStreamEngine._view_layout(state_dir)
-            if base is None:
-                return None
-            d = f"v{base}_d{ks[-1]}" if ks else f"v{base}"
-            import pyarrow.parquet as pq
-
-            p = os.path.join(state_dir, d)
-            for name in os.listdir(p):
-                if name.endswith(".parquet"):
-                    return set(
-                        pq.ParquetFile(os.path.join(p, name)).schema_arrow.names
-                    )
+        share a schema). None when no committed state exists."""
+        base, ks = HStreamEngine._view_layout(state_dir)
+        if base is None:
             return None
-        except Exception:  # noqa: BLE001
-            return None
+        d = f"v{base}_d{ks[-1]}" if ks else f"v{base}"
+        p = os.path.join(state_dir, d)
+        for name in os.listdir(p):
+            if name.endswith(".parquet"):
+                return set(
+                    pq.ParquetFile(os.path.join(p, name)).schema_arrow.names
+                )
+        return None
 
     @staticmethod
     def _parquet_dir_col_max(path: str, col: str):
         """Max value of ``col`` across a local parquet dir, from
         row-group STATISTICS only — driver-side metadata, no Spark job
         (the retention high-water mark must not re-execute anything).
-        None when unreadable (no pyarrow, remote storage, no stats)."""
-        try:
-            import pyarrow.parquet as pq
-
-            best = None
-            for name in os.listdir(path):
-                if not name.endswith(".parquet"):
+        None when the dir lacks the column or its statistics."""
+        best = None
+        for name in os.listdir(path):
+            if not name.endswith(".parquet"):
+                continue
+            pf = pq.ParquetFile(os.path.join(path, name))
+            try:
+                idx = pf.schema_arrow.names.index(col)
+            except ValueError:
+                return None
+            for g in range(pf.metadata.num_row_groups):
+                st = pf.metadata.row_group(g).column(idx).statistics
+                if st is None or not st.has_min_max:
                     continue
-                pf = pq.ParquetFile(os.path.join(path, name))
-                try:
-                    idx = pf.schema_arrow.names.index(col)
-                except ValueError:
-                    return None
-                for g in range(pf.metadata.num_row_groups):
-                    st = pf.metadata.row_group(g).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    if best is None or st.max > best:
-                        best = st.max
-            return best
-        except Exception:  # noqa: BLE001
-            return None
+                if best is None or st.max > best:
+                    best = st.max
+        return best
 
     @staticmethod
     def _parquet_dir_rows(path: str) -> int:
         """Total row count of a just-written local parquet dir, from
-        the file footers — driver-side metadata only, no Spark job.
-        Falls back to -1 (unknown) if the footers aren't readable
-        (e.g. remote storage without a local path)."""
-        try:
-            import pyarrow.parquet as pq
-
-            total = 0
-            for name in os.listdir(path):
-                if name.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(path, name)
-                    ).metadata.num_rows
-            return total
-        except Exception:  # noqa: BLE001
-            return -1
+        the file footers — driver-side metadata only, no Spark job."""
+        total = 0
+        for name in os.listdir(path):
+            if name.endswith(".parquet"):
+                total += pq.ParquetFile(
+                    os.path.join(path, name)
+                ).metadata.num_rows
+        return total
 
     @staticmethod
     def _view_upsert(vi: ViewInfo, batch_df: DataFrame) -> None:
-        # replace_all (complete fallback, full result each trigger) and
-        # the delta path — which since round 9 includes session
-        # (merge_on_overlap) views: supersession resolves at READ time,
-        # so a session trigger appends O(touched sessions) like any
-        # other view — both evaluate the batch exactly ONCE (the
-        # write); the delta path's emptiness check reads the written
-        # footers instead of running a second probe job
-        HStreamEngine._view_upsert_inner(vi, batch_df, list(vi.key_cols))
+        """Apply one trigger's batch to the view's state; the batch is
+        evaluated exactly ONCE (its write) — emptiness and row counts
+        come from the written parquet footers, never a second job.
 
-    @staticmethod
-    def _view_upsert_inner(vi: ViewInfo, batch_df: DataFrame,
-                           key_cols: list) -> None:
-        spark = batch_df.sparkSession
+        - replace_all (complete fallback, full result each trigger):
+          the batch becomes the next base generation.
+        - every other view — session (merge_on_overlap) views too,
+          whose supersession resolves at READ time — appends the
+          trigger's touched groups as ONE delta, O(batch) work, never
+          O(total state), and folds base+deltas into the next base
+          when ``_should_compact`` says so."""
+        key_cols = list(vi.key_cols)
         if vi.order_col is not None and key_cols:
             from pyspark.sql import Window
 
@@ -914,86 +912,76 @@ class HStreamEngine:
             # touched group per trigger — re-deduplicating would add a
             # whole shuffle to every trigger for nothing
             batch = batch_df
-        if vi.retention_secs is not None and vi.we_high_water is not None:
-            # write-time retention filter: rows whose window closed
-            # beyond the horizon never ENTER state. Without this, an
-            # epoch replay after a crash between the compaction's
-            # pointer swap and its cleanup re-appends the batch as a
-            # delta on the NEW generation and resurrects windows the
-            # fold just expired — replay would no longer converge to
-            # the crash-free result (found by the randomized
-            # retention state machine in test_view_state_properties).
-            # State rows still expire only at the fold; this filter
-            # only bounds what a trigger can add, at driver-variable
-            # cost (no extra job — one predicate on the batch).
-            import datetime as _dt
-
-            cutoff = vi.we_high_water - _dt.timedelta(
-                seconds=vi.retention_secs
-            )
-            batch = batch.filter(
-                F.col("window_end").isNull()
-                | (F.col("window_end") >= F.lit(cutoff))
-            )
-        ptr = os.path.join(vi.state_dir, "CURRENT")
+        # write-time retention filter: rows whose window closed beyond
+        # the horizon never ENTER state. Without this, an epoch replay
+        # after a crash between the compaction's pointer swap and its
+        # cleanup re-appends the batch as a delta on the NEW generation
+        # and resurrects windows the fold just expired — replay would
+        # no longer converge to the crash-free result (found by the
+        # randomized retention state machine in
+        # test_view_state_properties). State rows still expire only at
+        # the fold; this filter only bounds what a trigger can add, at
+        # no extra job (one predicate on the batch). Complete mode (full
+        # re-emit per trigger) shares it: a one-trigger lag is within
+        # the retention granularity contract.
+        batch = HStreamEngine._retained(vi, batch)
+        base, ks = HStreamEngine._view_layout(vi.state_dir)
 
         def swap_current(v: int) -> None:
-            tmp = ptr + ".tmp"
-            with open(tmp, "w") as f:
+            ptr = os.path.join(vi.state_dir, "CURRENT")
+            with open(ptr + ".tmp", "w") as f:
                 f.write(str(v))
-            os.replace(tmp, ptr)
+            os.replace(ptr + ".tmp", ptr)
 
-        def written_rows(path: str) -> int:
-            rows = HStreamEngine._parquet_dir_rows(path)
-            if rows >= 0:
-                return rows
-            # footers unreadable (no pyarrow / non-local state_dir):
-            # count the just-WRITTEN files with Spark instead of
-            # guessing — treating unknown as non-empty would accrete
-            # empty deltas (blanking keyless views after an idle
-            # trigger), and unknown-skips-the-bound would silently
-            # disable complete_max_rows on exactly the deployments
-            # most likely to be large
-            return spark.read.schema(vi.schema).parquet(path).count()
+        def commit(df: DataFrame, name: str, written: Optional[str]) -> int:
+            """The one state write: ``df`` into the dot-tmp dir
+            ``.tmp_<name>`` (invisible to the listing readers use), its
+            row count from the footers, then an atomic rename to
+            ``name``. A write that ADDS state (the first base, a delta)
+            names the fault window ``written`` between write and rename
+            and is discarded when empty — an idle trigger must not
+            accrete empty deltas and re-compact O(state) forever. A
+            generation that REPLACES state (complete refresh, fold) is
+            kept even when empty: empty is then the state."""
+            tmp = os.path.join(vi.state_dir, f".tmp_{name}")
+            dst = os.path.join(vi.state_dir, name)
+            df.write.mode("overwrite").parquet(tmp)
+            rows = HStreamEngine._parquet_dir_rows(tmp)
+            if written is not None and rows == 0:
+                shutil.rmtree(tmp, ignore_errors=True)
+                return 0
+            if (vi.replace_all and vi.complete_max_rows is not None
+                    and rows > vi.complete_max_rows):
+                # refuse BEFORE the swap: the previous generation stays
+                # current, the query fails loudly, and the operator sees
+                # the real cost instead of a view that silently rewrites
+                # O(result) per trigger. The refused write goes first —
+                # keeping it would park an extra O(result) of disk per
+                # failing retry.
+                shutil.rmtree(tmp, ignore_errors=True)
+                msg = (
+                    f"view {vi.name!r}: complete-mode fallback result has "
+                    f"{rows} rows > complete_fallback_max_rows="
+                    f"{vi.complete_max_rows}; every trigger rewrites the "
+                    "full result — restructure the view for update mode "
+                    "or raise/disable the bound"
+                )
+                _LOG.error(msg)
+                raise RuntimeError(msg)
+            if written is not None:
+                _fault(written)
+            if os.path.isdir(dst):
+                # crash window: a previous write renamed this dir but died
+                # before the CURRENT swap that would have made it visible;
+                # the replayed epoch carries the same batch — drop the
+                # orphan instead of failing ENOTEMPTY forever
+                shutil.rmtree(dst)
+            os.rename(tmp, dst)
+            return rows
 
-        cur_v = -1
         if vi.replace_all:
-            if os.path.exists(ptr):
-                with open(ptr) as f:
-                    cur_v = int(f.read().strip())
-            nxt = cur_v + 1
-            # retention for complete mode (full re-emit per trigger) is
-            # the shared write-time filter above — one-trigger lag is
-            # within the retention granularity contract
-            batch.write.mode("overwrite").parquet(
-                os.path.join(vi.state_dir, f"v{nxt}")
-            )
-            if vi.complete_max_rows is not None:
-                rows = written_rows(os.path.join(vi.state_dir, f"v{nxt}"))
-                if rows > vi.complete_max_rows:
-                    # refuse BEFORE the swap: the previous generation
-                    # stays current, the query fails loudly, and the
-                    # operator sees the real cost instead of a view
-                    # that silently rewrites O(result) per trigger
-                    msg = (
-                        f"view {vi.name!r}: complete-mode fallback "
-                        f"result has {rows} rows > "
-                        f"complete_fallback_max_rows="
-                        f"{vi.complete_max_rows}; every trigger "
-                        "rewrites the full result — restructure the "
-                        "view for update mode or raise/disable the "
-                        "bound"
-                    )
-                    _LOG.error(msg)
-                    # drop the just-written oversized generation before
-                    # raising: CURRENT still points at the old one, so
-                    # v{nxt} is invisible to readers — leaving it would
-                    # park an extra O(result) of disk per failing retry
-                    shutil.rmtree(
-                        os.path.join(vi.state_dir, f"v{nxt}"),
-                        ignore_errors=True,
-                    )
-                    raise RuntimeError(msg)
+            nxt = (-1 if base is None else base) + 1
+            commit(batch, f"v{nxt}", None)
             swap_current(nxt)
             # high-water advances only AFTER the swap: a crash between
             # write and swap must not leave a phantom mark from a
@@ -1004,40 +992,17 @@ class HStreamEngine:
             )
             HStreamEngine._rm_generation(vi.state_dir, nxt - 2)
             return
-        # keyed latest-wins (and keyless ≤1-row) views: append the
-        # trigger's touched groups as ONE delta — O(batch) work, never
-        # O(total state). Parquet-write to a dot-tmp dir then an atomic
-        # rename keeps half-written deltas invisible to the listing
-        # readers use. A replayed epoch appends a duplicate delta with
-        # identical content under a higher version — latest-wins
-        # converges to the same values, so the path stays idempotent.
-        # A trigger that emits nothing writes ZERO rows: its tmp dir is
-        # discarded instead of renamed — an idle stream must not accrete
-        # empty deltas and re-compact O(state) forever — decided from
-        # the written parquet FOOTERS (driver-side metadata, no second
-        # execution of the batch subtree). Plain GROUP BY views start
-        # without no-data micro-batches (_no_data_batches_idle), so
-        # these come from windowed/SESSION views' watermark batches
-        # that closed nothing, and from data batches whose rows all
-        # fell to WHERE or late-data drops.
-        base, ks = HStreamEngine._view_layout(vi.state_dir)
+        # A replayed epoch appends a duplicate delta with identical
+        # content under a higher version — latest-wins converges to the
+        # same values, so the path stays idempotent. Empty writes come
+        # from windowed/SESSION views' watermark batches that closed
+        # nothing and from data batches whose rows all fell to WHERE or
+        # late-data drops (plain GROUP BY views start without no-data
+        # micro-batches, _no_data_batches_idle).
         if base is None:
-            tmp_dir = os.path.join(vi.state_dir, ".tmp_v0")
-            batch.write.mode("overwrite").parquet(tmp_dir)
-            rows = written_rows(tmp_dir)
+            rows = commit(batch, "v0", "first-base-written")
             if rows == 0:
-                shutil.rmtree(tmp_dir, ignore_errors=True)
                 return
-            dst = os.path.join(vi.state_dir, "v0")
-            if os.path.isdir(dst):
-                # crash window: a previous first write renamed v0 but
-                # died before swap_current(0). CURRENT is still absent,
-                # so that v0 was never visible to any reader, and the
-                # replayed epoch carries the same batch — drop the
-                # orphan instead of failing ENOTEMPTY forever.
-                shutil.rmtree(dst)
-            _fault("first-base-written")  # tmp written, not yet visible
-            os.rename(tmp_dir, dst)
             vi.delta_rows_cache.clear()
             vi.delta_rows_cache["v0"] = rows
             _fault("first-base-renamed")  # v0 on disk, CURRENT absent
@@ -1047,47 +1012,49 @@ class HStreamEngine:
             # write-time retention filter would silently drop the
             # same batch's oldest windows against a horizon no reader
             # ever observed — found by the retention state machine)
-            HStreamEngine._advance_high_water(vi, dst)
+            HStreamEngine._advance_high_water(
+                vi, os.path.join(vi.state_dir, "v0")
+            )
             return
         k = (ks[-1] if ks else 0) + 1
-        tmp_dir = os.path.join(vi.state_dir, f".tmp_v{base}_d{k}")
-        batch.write.mode("overwrite").parquet(tmp_dir)
-        rows = written_rows(tmp_dir)
+        ks = ks + [k]
+        rows = commit(batch, f"v{base}_d{k}", "delta-written")
         if rows == 0:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
             return
-        _fault("delta-written")  # tmp delta on disk, not yet listed
-        os.rename(tmp_dir, os.path.join(vi.state_dir, f"v{base}_d{k}"))
         vi.delta_rows_cache[f"v{base}_d{k}"] = rows
         HStreamEngine._advance_high_water(
             vi, os.path.join(vi.state_dir, f"v{base}_d{k}")
         )
         _fault("delta-renamed")  # delta visible, compaction not yet run
-        if HStreamEngine._should_compact(vi, base, ks + [k]):
-            # fold base+deltas into the next generation's base; the old
-            # generation stays on disk for in-flight readers and is
-            # removed when the one after supersedes it
-            merged = HStreamEngine._view_state_frame(spark, vi)
-            merged = HStreamEngine._apply_retention(vi, merged, base,
-                                                    ks + [k])
-            merged.write.mode("overwrite").parquet(
-                os.path.join(vi.state_dir, f"v{base + 1}")
-            )
-            # new generation: reset the footer cache and seed the new
-            # base's count (in no-pyarrow deployments its footers are
-            # unreadable, and without this seed _should_compact would
-            # degrade to the fixed cadence forever after one fold)
-            new_rows = written_rows(os.path.join(vi.state_dir, f"v{base + 1}"))
-            vi.delta_rows_cache.clear()
-            vi.delta_rows_cache[f"v{base + 1}"] = new_rows
-            _fault("compact-written")  # new base on disk, CURRENT old
-            swap_current(base + 1)
-            _fault("compact-swapped")  # CURRENT new, old gen not swept
-            HStreamEngine._rm_generation(vi.state_dir, base - 1)
-            for name in os.listdir(vi.state_dir):
-                if name.startswith(".tmp_"):  # stray crash leftovers
-                    shutil.rmtree(os.path.join(vi.state_dir, name),
-                                  ignore_errors=True)
+        if not HStreamEngine._should_compact(vi, base, ks):
+            return
+        # fold base+deltas into the next generation's base; the old
+        # generation stays on disk for in-flight readers and is removed
+        # when the one after supersedes it. Retention (WITH DURATION)
+        # drops expired windows here and only here — the expiry
+        # granularity is the compaction cadence, like stream DURATION's
+        # vacuum — so per-trigger cost stays zero. After a restart the
+        # high-water mark is rebuilt from every live dir's statistics.
+        if vi.we_high_water is None:
+            for d in [f"v{base}"] + [f"v{base}_d{j}" for j in ks]:
+                HStreamEngine._advance_high_water(
+                    vi, os.path.join(vi.state_dir, d)
+                )
+        merged = HStreamEngine._retained(
+            vi, HStreamEngine._view_state_frame(batch_df.sparkSession, vi)
+        )
+        rows = commit(merged, f"v{base + 1}", None)
+        # new generation: reset the footer cache, seed the new base
+        vi.delta_rows_cache.clear()
+        vi.delta_rows_cache[f"v{base + 1}"] = rows
+        _fault("compact-written")  # new base on disk, CURRENT old
+        swap_current(base + 1)
+        _fault("compact-swapped")  # CURRENT new, old gen not swept
+        HStreamEngine._rm_generation(vi.state_dir, base - 1)
+        for name in os.listdir(vi.state_dir):
+            if name.startswith(".tmp_"):  # stray crash leftovers
+                shutil.rmtree(os.path.join(vi.state_dir, name),
+                              ignore_errors=True)
 
     @staticmethod
     def _advance_high_water(vi: ViewInfo, new_dir: str) -> None:
@@ -1102,35 +1069,15 @@ class HStreamEngine:
             vi.we_high_water = m
 
     @staticmethod
-    def _apply_retention(vi: ViewInfo, merged: DataFrame, base: int,
-                         ks: list) -> DataFrame:
-        """Retention fold (WITH DURATION): drop state rows whose window
-        closed more than ``retention_secs`` before the view's event-time
-        high-water mark. Runs ONLY inside the compaction fold — the
-        expiry granularity is the compaction cadence, exactly like
-        stream DURATION's vacuum granularity — so per-trigger cost is
-        zero and the fold itself just gains one predicate. After a
-        restart the high-water mark is rebuilt lazily from the stats of
-        every live state dir (driver-side); if stats are unreadable the
-        fold keeps everything (retention degrades to reference-parity
-        keep-forever, never to wrong results)."""
-        if vi.retention_secs is None:
-            return merged
-        if vi.we_high_water is None:  # restart: rebuild from live dirs
-            dirs = [f"v{base}"] + [f"v{base}_d{k}" for k in ks]
-            for d in dirs:
-                m = HStreamEngine._parquet_dir_col_max(
-                    os.path.join(vi.state_dir, d), "window_end"
-                )
-                if m is not None and (vi.we_high_water is None
-                                      or m > vi.we_high_water):
-                    vi.we_high_water = m
-        if vi.we_high_water is None:
-            return merged
-        import datetime as _dt
-
-        cutoff = vi.we_high_water - _dt.timedelta(seconds=vi.retention_secs)
-        return merged.filter(
+    def _retained(vi: ViewInfo, df: DataFrame) -> DataFrame:
+        """Retention (WITH DURATION): ``df`` without the rows whose
+        window closed more than ``retention_secs`` before the view's
+        event-time high-water mark; unchanged while the view has no
+        retention or no mark yet."""
+        if vi.retention_secs is None or vi.we_high_water is None:
+            return df
+        cutoff = vi.we_high_water - datetime.timedelta(seconds=vi.retention_secs)
+        return df.filter(
             F.col("window_end").isNull()
             | (F.col("window_end") >= F.lit(cutoff))
         )
@@ -1147,8 +1094,7 @@ class HStreamEngine:
         reader union fan-out. Row counts come from
         ``vi.delta_rows_cache`` (populated as each dir is written —
         dirs are immutable once renamed); footers are parsed only for
-        dirs a restart made cache-cold. Unknown footers (no pyarrow /
-        non-local storage) fall back to the fixed every-N cadence."""
+        dirs a restart made cache-cold."""
         n = len(ks)
         if n >= HStreamEngine._VIEW_COMPACT_MAX_DELTAS:
             return True
@@ -1156,26 +1102,15 @@ class HStreamEngine:
             return False
 
         def rows_of(name: str) -> int:
-            cached = vi.delta_rows_cache.get(name)
-            if cached is not None:
-                return cached
-            r = HStreamEngine._parquet_dir_rows(
-                os.path.join(vi.state_dir, name)
-            )
-            if r >= 0:
-                vi.delta_rows_cache[name] = r
-            return r
+            if name not in vi.delta_rows_cache:
+                vi.delta_rows_cache[name] = HStreamEngine._parquet_dir_rows(
+                    os.path.join(vi.state_dir, name)
+                )
+            return vi.delta_rows_cache[name]
 
-        base_rows = rows_of(f"v{base}")
-        if base_rows < 0:
-            return True  # footers unknown: fixed every-N cadence
-        delta_rows = 0
-        for k in ks:
-            r = rows_of(f"v{base}_d{k}")
-            if r < 0:
-                return True
-            delta_rows += r
-        return delta_rows >= base_rows * HStreamEngine._VIEW_COMPACT_FRACTION
+        delta_rows = sum(rows_of(f"v{base}_d{k}") for k in ks)
+        return (delta_rows
+                >= rows_of(f"v{base}") * HStreamEngine._VIEW_COMPACT_FRACTION)
 
     def _resolve_stream(self, name: str) -> DataFrame:
         if name in self.views:
@@ -1480,8 +1415,8 @@ class HStreamEngine:
             kopts = C.resolve_secret_refs(kopts)
         except C.ConnectorError as exc:
             raise CompileError(str(exc)) from exc
-        if kopts.get("kafka_topic"):
-            self._validate_kafka_opts(kopts)
+        kafka = (self._validate_kafka_opts(kopts)
+                 if kopts.get("kafka_topic") else None)
         path = self._stream_path(stmt.name)
         os.makedirs(path, exist_ok=True)
         schema = None
@@ -1493,51 +1428,65 @@ class HStreamEngine:
             stmt.name, path, schema, dict(stmt.options), dynamic=not stmt.columns
         )
         self.streams[stmt.name] = info
-        if kopts.get("kafka_topic"):
-            self._attach_kafka_backing(info, kopts)
+        if kafka is not None:
+            self._attach_kafka_backing(info, kafka)
         return info
 
     @staticmethod
-    def _validate_kafka_opts(kopts: dict) -> tuple[str, str, int, str]:
-        bootstrap = str(
-            kopts.get("kafka_bootstrap_servers") or kopts.get("kafka_bootstrap") or ""
-        )
-        if not bootstrap:
+    def _validate_kafka_opts(kopts: dict) -> tuple:
+        """Parse a Kafka source's options — a stream's ``WITH
+        (KAFKA_TOPIC=..)`` and a ``CREATE SOURCE CONNECTOR ..
+        ("type"='kafka')`` alike, each key bare or ``kafka_``-prefixed
+        (keys lowercased). Returns the ``_build_kafka_tailer`` arguments
+        after the target stream. Every bad value is a CompileError,
+        raised before anything registers."""
+        from hstream_spark.sources import connectors as C
+        from hstream_spark.sources.kafka_wire import parse_starting_position
+
+        def opt(name: str, default=None):
+            for key in (name, f"kafka_{name}"):
+                if kopts.get(key) is not None:
+                    return kopts[key]
+            return default
+
+        topic = str(opt("topic") or "")
+        bootstrap = str(opt("bootstrap_servers") or opt("bootstrap") or "")
+        if not topic or not bootstrap:
             raise CompileError(
-                "KAFKA_TOPIC streams require KAFKA_BOOTSTRAP_SERVERS"
+                "Kafka sources require KAFKA_TOPIC and KAFKA_BOOTSTRAP_SERVERS"
             )
-        raw_ms = kopts.get("kafka_poll_interval_ms")
+        raw_ms = opt("poll_interval_ms")
         try:
             poll_ms = 2000 if raw_ms is None else int(raw_ms)
         except (TypeError, ValueError) as exc:
             raise CompileError(
                 f"KAFKA_POLL_INTERVAL_MS must be an integer, got {raw_ms!r}"
             ) from exc
-        starting = str(kopts.get("kafka_starting_offsets", "earliest")).lower()
-        from hstream_spark.sources.kafka_wire import parse_starting_position
-
+        starting = str(opt("starting_offsets", "earliest")).lower()
         try:
             parse_starting_position(starting)  # shared validation
         except ValueError as exc:
             raise CompileError(f"KAFKA_STARTING_OFFSETS: {exc}") from exc
+        group = opt("group_id")
+        coordinated = str(opt("group_coordinated", "")).lower() in (
+            "true", "1", "yes",
+        )
         # SASL/TLS options (KAFKA_SASL_MECHANISM/USERNAME/PASSWORD,
         # KAFKA_TLS, KAFKA_TLS_CAFILE, KAFKA_TLS_VERIFY) validate at
         # CREATE time — a missing credential must fail the DDL, not the
         # first poll
-        from hstream_spark.sources import connectors as C
-
         try:
-            C.kafka_client_options(kopts)
+            client_options = C.kafka_client_options(kopts)
         except C.ConnectorError as exc:
             raise CompileError(str(exc)) from exc
-        return str(kopts["kafka_topic"]), bootstrap, poll_ms, starting
+        return (topic, bootstrap, poll_ms, starting,
+                None if group is None else str(group), coordinated,
+                client_options)
 
     def _build_kafka_tailer(self, target: StreamInfo, topic: str,
-                            bootstrap: str, poll_ms: int,
-                            starting: str = "earliest",
-                            group_id: Optional[str] = None,
-                            coordinated: bool = False,
-                            client_options: Optional[dict] = None):
+                            bootstrap: str, poll_ms: int, starting: str,
+                            group_id: Optional[str], coordinated: bool,
+                            client_options: dict):
         from hstream_spark.sources import connectors as C
 
         def _emit(records: list) -> int:
@@ -1581,7 +1530,7 @@ class HStreamEngine:
             tailer.start()
         return tailer
 
-    def _attach_kafka_backing(self, info: StreamInfo, kopts: dict) -> None:
+    def _attach_kafka_backing(self, info: StreamInfo, kafka: tuple) -> None:
         """A stream declared ``WITH (KAFKA_TOPIC=..,
         KAFKA_BOOTSTRAP_SERVERS=..)`` tails that topic into its parquet
         directory — the engine half of the reference's Kafka surface
@@ -1591,16 +1540,9 @@ class HStreamEngine:
         Committed offsets live in a sidecar in the stream directory, so
         DDL-log replay on restart resumes instead of re-reading.  On a
         cluster with the spark-sql-kafka jar, map the stream straight to
-        ``kafka_wire.kafka_readstream`` instead."""
-        topic, bootstrap, poll_ms, starting = self._validate_kafka_opts(kopts)
-        group = kopts.get("kafka_group_id")
-        group = None if group is None else str(group)
-        coord = str(kopts.get("kafka_group_coordinated", "")).lower() in (
-            "true", "1", "yes",
-        )
-        from hstream_spark.sources import connectors as C
-
-        client_options = C.kafka_client_options(kopts)
+        ``kafka_wire.kafka_readstream`` instead. ``kafka`` is the parsed
+        ``_validate_kafka_opts`` tuple."""
+        topic, bootstrap, poll_ms, starting, group, coord, client_options = kafka
         cname = f"__kafka_{info.name}"
         conn = ConnectorInfo(
             cname, "SOURCE", info.name,
@@ -1613,9 +1555,7 @@ class HStreamEngine:
                  "sasl_username": client_options["sasl_username"]}
                 if "sasl_mechanism" in client_options else {}),
              **({"tls": True} if client_options.get("tls") else {})},
-            handle=self._build_kafka_tailer(info, topic, bootstrap, poll_ms,
-                                            starting, group, coord,
-                                            client_options),
+            handle=self._build_kafka_tailer(info, *kafka),
             secrets=client_options,
         )
         self.connectors[cname] = conn
@@ -1623,22 +1563,17 @@ class HStreamEngine:
     def _append_records(self, info: StreamInfo, records: list) -> int:
         """Batched record append — the INSERT VALUES semantics applied
         to a list of ``(record_dict, event_time_seconds)`` (kafka
-        ingestion): payload streams evolve their value-typed schema per
-        record; typed streams coerce via ``from_json`` (missing fields
-        → NULL, same as the reference's FlowObject ingestion).
+        ingestion, and every INSERT VALUES into a payload stream):
+        payload streams evolve their value-typed schema per record;
+        typed streams coerce via ``from_json`` (missing fields → NULL,
+        same as the reference's FlowObject ingestion).
 
         A page ``_arrow_page`` can build is written in-process (one
         pyarrow file, no Spark job); every other page runs the Spark
         ``from_json`` append below."""
         if not records:
             return 0
-        if info.dynamic:
-            try:
-                self._schema_of(info)
-            except CompileError:
-                pass
-            if info.schema is None:
-                info.payload = True
+        self._settle_layout(info)
         if info.payload:
             for rec, _ts in records:
                 self._evolve_payload_schema(info, rec)
@@ -1704,15 +1639,11 @@ class HStreamEngine:
     def _arrow_page(self, info: StreamInfo, records: list):
         """The page as a pyarrow Table in the stream's physical layout,
         holding exactly the rows the Spark append above would write —
-        or None when only that append reproduces them: pyarrow missing,
-        an event time ``timestamp_seconds`` would null or reject, a
-        typed column outside ``_ARROW_PAGE_TYPES``, or a value
-        ``from_json`` would coerce or null (1.5 or "7" into INTEGER,
-        2**64, NaN, 7 or {..} into STRING, a lone surrogate)."""
-        try:
-            import pyarrow as pa
-        except ImportError:
-            return None
+        or None when only that append reproduces them: an event time
+        ``timestamp_seconds`` would null or reject, a typed column
+        outside ``_ARROW_PAGE_TYPES``, or a value ``from_json`` would
+        coerce or null (1.5 or "7" into INTEGER, 2**64, NaN, 7 or {..}
+        into STRING, a lone surrogate)."""
         ts = []
         for _rec, t in records:
             us = float(t) * 1_000_000  # timestamp_seconds truncates
@@ -1752,8 +1683,6 @@ class HStreamEngine:
         scan here) and renamed into place: the stream's file source
         sees the whole page or none of it, and the caller commits its
         offsets only after the rename."""
-        import pyarrow.parquet as pq
-
         name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
         tmp = os.path.join(info.path, f".{name}.tmp")
         try:
@@ -1765,33 +1694,93 @@ class HStreamEngine:
                 os.remove(tmp)
             raise
 
+    def _compile_streaming(
+        self, select: A.Select, hidden_keys: Optional[list] = None,
+        having_col: Optional[str] = None, keep_ts: bool = False,
+        keep_event_time: bool = False,
+    ) -> tuple[DataFrame, str, bool]:
+        """The streaming plan of ``select``, its output mode, and
+        whether a custom stateful operator plans it. SESSION and
+        SLIDING need those operators (Spark rejects session aggregation
+        in update mode and window functions in streaming entirely);
+        every other shape — and a stateful shape the operators return
+        None for — compiles with ``compile_select``. Each compiler
+        takes its own extra arguments. The SLIDING operator emits per
+        record (append), the SESSION operator and aggregates emit their
+        updated groups (update), the rest appends."""
+        kind = (select.from_.window_kind
+                if isinstance(select.from_, A.WindowedRef) else None)
+        out = None
+        if kind == "SESSION":
+            out = compile_select_session_update(
+                select, self._resolve_stream, hidden_keys=hidden_keys,
+                having_col=having_col,
+            )
+        elif kind == "SLIDING":
+            out = compile_select_sliding_update(
+                select, self._resolve_stream, keep_ts=keep_ts,
+                hidden_keys=hidden_keys, having_col=having_col,
+            )
+        if out is not None:
+            return out, "append" if kind == "SLIDING" else "update", True
+        out = compile_select(select, self._resolve_stream,
+                             keep_event_time=keep_event_time)
+        return out, "update" if _aggregated(select) else "append", False
+
+    def _start_query(self, owners: tuple, plan: Callable[[], DataFrame],
+                     mode: str, write: Optional[Callable] = None,
+                     checkpoint: str = "", skip_no_data: bool = False,
+                     fallback: Optional[Callable[[], None]] = None) -> None:
+        """The one way a streaming query starts: ``plan()`` in ``mode``
+        into the foreachBatch ``write`` checkpointed at ``checkpoint``
+        — or, with no ``write``, into a memory sink named after
+        ``owners[0]`` (push queries) — scoped by ``_stream_start_conf``
+        (``skip_no_data`` from ``_no_data_batches_idle``). The handle
+        lands on every owner. When the plan rejects ``mode`` and the
+        caller passed a ``fallback``, that records the fallback and the
+        query starts in complete mode instead.
+
+        During DDL replay nothing starts: the call parks itself on
+        ``owners[0].starter``, and ``_recover`` runs it once the whole
+        log has replayed. It starts then only if the owner is still
+        RUNNING — starting a query whose TERMINATE/DROP comes later in
+        the log would feed it segments compact() rewrote as new data."""
+        owner = owners[0]
+        owner.starter = (
+            functools.partial(self._start_query, owners, plan, mode, write,
+                              checkpoint, skip_no_data, fallback)
+            if self._replaying else None
+        )
+        if (self._replaying or owner.status != "RUNNING"
+                or owner.handle is not None):
+            return
+        df = plan()
+
+        def begin(m: str, conf):
+            with conf:
+                w = df.writeStream.outputMode(m)
+                if write is None:
+                    w = w.format("memory").queryName(owner.name)
+                else:
+                    w = w.option("checkpointLocation", checkpoint)
+                    w = w.foreachBatch(write)
+                return w.start()
+
+        try:
+            handle = begin(mode, self._stream_start_conf(skip_no_data))
+        except Exception:
+            if fallback is None:
+                raise
+            fallback()
+            handle = begin("complete", self._stream_start_conf())
+        for o in owners:
+            o.handle = handle
+
     def _start_continuous(self, select: A.Select, sink_stream: str, sql: str,
                           qname: Optional[str] = None) -> QueryInfo:
         qname = qname or self._next_qname()
         sink = self.streams[sink_stream]
-        # SESSION/SLIDING aggregations need the custom stateful plans
-        # (Spark rejects session aggregation in update mode and window
-        # functions in streaming entirely)
-        out = None
-        stateful_mode = None
-        if isinstance(select.from_, A.WindowedRef):
-            wk = select.from_.window_kind
-            if wk == "SESSION":
-                from hstream_spark.plans.compiler import (
-                    compile_select_session_update,
-                )
-
-                out = compile_select_session_update(select, self._resolve_stream)
-                stateful_mode = "update" if out is not None else None
-            elif wk == "SLIDING":
-                from hstream_spark.plans.compiler import (
-                    compile_select_sliding_update,
-                )
-
-                out = compile_select_sliding_update(select, self._resolve_stream)
-                stateful_mode = "append" if out is not None else None
-        if out is None:
-            out = compile_select(select, self._resolve_stream, keep_event_time=True)
+        out, mode, _ = self._compile_streaming(select, keep_event_time=True)
         # unwindowed aggregates have no derivable event time: sink
         # records are stamped with append time (reference semantics)
         stamp_ts = EVENT_TIME_COL not in out.columns
@@ -1816,11 +1805,6 @@ class HStreamEngine:
             # sinking into a value-typed stream: rows JSON-encode and
             # the logical schema widens by field union
             self._merge_payload_schema(sink, out_schema)
-        aggregated = bool(select.group_by) or any(
-            find_aggs(it.expr) for it in select.items
-        )
-        mode = stateful_mode or ("update" if aggregated else "append")
-
         sink_batch = self._idempotent_sink(
             self._checkpoint(qname), sink.path, stamp_ts=stamp_ts,
             payload=sink.payload,
@@ -1829,23 +1813,12 @@ class HStreamEngine:
             # right default on a real cluster with big triggers)
             coalesce_to=self.streaming_shuffle_partitions,
         )
-        qi = QueryInfo(qname, sql, sink_stream, self._checkpoint(qname), None,
+        qi = QueryInfo(qname, sql, sink_stream, self._checkpoint(qname),
                        mode=mode)
-        skip_no_data = self._no_data_batches_idle(select, mode)
-
-        def _go():
-            with self._stream_start_conf(skip_no_data):
-                qi.handle = (
-                    out.writeStream.outputMode(mode)
-                    .option("checkpointLocation", self._checkpoint(qname))
-                    .foreachBatch(sink_batch)
-                    .start()
-                )
-
-        if self._replaying:
-            qi.starter = _go  # started after the whole log replays
-        else:
-            _go()
+        self._start_query(
+            (qi,), lambda: out, mode, sink_batch, qi.checkpoint,
+            skip_no_data=self._no_data_batches_idle(select, mode),
+        )
         self.queries[qname] = qi
         return qi
 
@@ -1882,15 +1855,7 @@ class HStreamEngine:
             else:
                 out_df = batch_df
             if payload:
-                from hstream_spark.sources.connectors import _json_safe
-
-                # Spark 4.1 to_json cannot serialize TimeType
-                out_df = _json_safe(out_df)
-                cols = [c for c in out_df.columns if c != EVENT_TIME_COL]
-                out_df = out_df.select(
-                    F.to_json(F.struct(*cols)).alias(HStreamEngine._PAYLOAD_COL),
-                    F.col(EVENT_TIME_COL),
-                )
+                out_df = HStreamEngine._payload_encode(out_df)
             if coalesce_to:
                 # stateless (append) queries keep the source's split
                 # count — a 64-file trigger otherwise fans out into 64
@@ -1921,10 +1886,7 @@ class HStreamEngine:
     def _exec_create_view(self, stmt: A.CreateView, sql: str) -> ViewInfo:
         if stmt.name in self.views:
             raise CompileError(f"view {stmt.name!r} already exists")
-        aggregated = bool(stmt.select.group_by) or any(
-            find_aggs(it.expr) for it in stmt.select.items
-        )
-        if not aggregated:
+        if not _aggregated(stmt.select):
             raise CompileError("CREATE VIEW requires an aggregation (GROUP BY)")
         table = f"__view_{stmt.name}"
         # WITH (DURATION = INTERVAL …): windowed-view state retention —
@@ -1985,73 +1947,41 @@ class HStreamEngine:
                        if g.name not in projected]
         hidden_pairs = [(g, f"__gk_{g.name}") for g in missing]
 
-        out = None
-        merge_on_overlap = False
-        order_col = None
-        if window_kind == "SESSION":
-            from hstream_spark.plans.compiler import compile_select_session_update
-
-            out = compile_select_session_update(
-                stmt.select, self._resolve_stream,
-                hidden_keys=[(g.name, h) for g, h in hidden_pairs],
-                having_col="__hv",
-            )
-            merge_on_overlap = out is not None
-        elif window_kind == "SLIDING":
-            # batch SLIDING compiles to window functions, which streaming
-            # rejects in every output mode — the stateful operator is the
-            # only viable plan; view state keeps each key's latest
-            # trailing aggregate (latest-wins upsert on __slide_ts)
-            from hstream_spark.plans.compiler import compile_select_sliding_update
-
-            out = compile_select_sliding_update(
-                stmt.select, self._resolve_stream, keep_ts=True,
-                hidden_keys=[(g.name, h) for g, h in hidden_pairs],
-                having_col="__hv",
-            )
-            if out is None:
-                raise CompileError(
-                    "SLIDING view SELECT shape unsupported (plain aggregate "
-                    "calls over group keys only)"
-                )
-            order_col = "__slide_ts"
-        session_fellback = window_kind == "SESSION" and out is None
-        hidden_keys: list[str] = []
-        having_col = None
-        if out is not None:
-            hidden_keys = [h for _, h in hidden_pairs]
-            if stmt.select.having is not None:
-                having_col = "__hv"
-        else:
+        sel = stmt.select
+        if window_kind not in ("SESSION", "SLIDING"):
             # HAVING on an update-mode view compiles as a hidden boolean
             # column filtered at READ time, like the stateful paths: a
             # filter INSIDE the streaming plan would suppress the
             # retraction when a group falls back below the predicate,
-            # leaving a stale passing row in state forever. The complete
-            # fallback (session_fellback) keeps HAVING inline — its
-            # state is replaced wholesale each trigger, so inline
-            # filtering is already correct there.
-            compiled_select = stmt.select
-            if not session_fellback:
-                import dataclasses as _dc
-
-                hidden_keys = [h for _, h in hidden_pairs]
-                extra = [A.SelectItem(g, alias=h, text=h)
-                         for g, h in hidden_pairs]
-                repl = {}
-                if stmt.select.having is not None:
-                    having_col = "__hv"
-                    extra.append(
-                        A.SelectItem(stmt.select.having, alias="__hv",
-                                     text="__hv")
-                    )
-                    repl["having"] = None
-                if extra or repl:
-                    compiled_select = _dc.replace(
-                        stmt.select,
-                        items=list(stmt.select.items) + extra, **repl,
-                    )
-            out = compile_select(compiled_select, self._resolve_stream)
+            # leaving a stale passing row in state forever.
+            extra = [A.SelectItem(g, alias=h, text=h) for g, h in hidden_pairs]
+            if sel.having is not None:
+                extra.append(A.SelectItem(sel.having, alias="__hv", text="__hv"))
+            if extra:
+                sel = dataclasses.replace(
+                    sel, items=list(sel.items) + extra, having=None
+                )
+        out, mode, stateful = self._compile_streaming(
+            sel, hidden_keys=[(g.name, h) for g, h in hidden_pairs],
+            having_col="__hv", keep_ts=True,
+        )
+        if window_kind == "SLIDING" and not stateful:
+            # batch SLIDING compiles to window functions, which streaming
+            # rejects in every output mode — the stateful operator is the
+            # only viable plan; view state keeps each key's latest
+            # trailing aggregate (latest-wins upsert on __slide_ts)
+            raise CompileError(
+                "SLIDING view SELECT shape unsupported (plain aggregate "
+                "calls over group keys only)"
+            )
+        # a SESSION shape the stateful operator rejects refreshes in
+        # complete mode: its state is replaced wholesale each trigger,
+        # so HAVING stays inline and no hidden column is stored
+        session_fellback = window_kind == "SESSION" and not stateful
+        hidden_keys = [] if session_fellback else [h for _, h in hidden_pairs]
+        having_col = ("__hv" if stmt.select.having is not None
+                      and not session_fellback else None)
+        order_col = "__slide_ts" if window_kind == "SLIDING" else None
 
         key_cols: list[str] = []
         if window_kind in ("TUMBLE", "HOP", "SESSION"):
@@ -2095,7 +2025,8 @@ class HStreamEngine:
         os.makedirs(state_dir, exist_ok=True)
         vi = ViewInfo(
             stmt.name, sql, table, None, state_dir, out.schema, tuple(key_cols),
-            merge_on_overlap, order_col=order_col,
+            merge_on_overlap=window_kind == "SESSION" and stateful,
+            replace_all=session_fellback, order_col=order_col,
             # plain/TUMBLE/HOP views (Spark's update-mode aggregate and
             # the complete-fallback's full result) and SESSION views
             # (the stateful operator emits each merged session once)
@@ -2113,73 +2044,44 @@ class HStreamEngine:
             retention_secs=retention_secs,
         )
 
-        def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-            self._view_upsert(vi, batch_df)
-
-        vi.replace_all = session_fellback
-        mode_label = "update"
         if session_fellback:
             mode = "complete"
-            mode_label = "complete(fallback)"
             _warn_complete_fallback(stmt.name, "SESSION SELECT shape exceeds "
                                     "the stateful update operator")
-        elif window_kind == "SLIDING":
-            mode = mode_label = "append"  # the stateful operator emits per-record
-        else:
-            mode = "update"
         # deterministic name (matches the checkpoint key) so logged
         # TERMINATE/PAUSE statements replay onto the same query after
         # restart instead of silently resurrecting the view refresh
         qi = QueryInfo(f"view_{stmt.name}", sql, None,
-                       self._checkpoint(f"view_{stmt.name}"), None,
-                       mode=mode_label)
+                       self._checkpoint(f"view_{stmt.name}"),
+                       mode="complete(fallback)" if session_fellback else mode)
 
-        skip_no_data = self._no_data_batches_idle(stmt.select, mode)
+        def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+            self._view_upsert(vi, batch_df)
 
-        def _go():
-            try:
-                with self._stream_start_conf(skip_no_data):
-                    q = (
-                        out.writeStream.outputMode(mode)
-                        .option("checkpointLocation",
-                                self._checkpoint(f"view_{stmt.name}"))
-                        .foreachBatch(upsert)
-                        .start()
-                    )
-            except Exception:
-                # last-resort fallback for plans that reject update mode
-                # (full-result refresh — reference-equivalent, not
-                # incremental)
-                vi.replace_all = True
-                qi.mode = "complete(fallback)"
-                _warn_complete_fallback(stmt.name,
-                                        "plan rejects update output mode")
-                with self._stream_start_conf():
-                    q = (
-                        out.writeStream.outputMode("complete")
-                        .option("checkpointLocation",
-                                self._checkpoint(f"view_{stmt.name}"))
-                        .foreachBatch(upsert)
-                        .start()
-                    )
-            vi.handle = qi.handle = q
+        def fallback() -> None:
+            # last-resort fallback for plans that reject update mode
+            # (full-result refresh — reference-equivalent, not
+            # incremental)
+            vi.replace_all = True
+            qi.mode = "complete(fallback)"
+            _warn_complete_fallback(stmt.name, "plan rejects update output mode")
 
-        if self._replaying:
-            qi.starter = _go  # started after the whole log replays
-        else:
-            # start FIRST: a plan both output modes reject must leave
-            # no phantom view/query behind (the DDL log is only written
-            # after execute() returns, so registration must match) —
-            # and no orphan state/checkpoint dirs a later same-name
-            # CREATE would silently adopt
-            try:
-                _go()
-            except Exception:
-                if not state_existed:
-                    shutil.rmtree(state_dir, ignore_errors=True)
-                    shutil.rmtree(self._checkpoint(f"view_{stmt.name}"),
-                                  ignore_errors=True)
-                raise
+        # start FIRST: a plan both output modes reject must leave no
+        # phantom view/query behind (the DDL log is only written after
+        # execute() returns, so registration must match) — and no
+        # orphan state/checkpoint dirs a later same-name CREATE would
+        # silently adopt
+        try:
+            self._start_query(
+                (qi, vi), lambda: out, mode, upsert, qi.checkpoint,
+                skip_no_data=self._no_data_batches_idle(stmt.select, mode),
+                fallback=fallback,
+            )
+        except Exception:
+            if not state_existed:
+                shutil.rmtree(state_dir, ignore_errors=True)
+                shutil.rmtree(qi.checkpoint, ignore_errors=True)
+            raise
         self.views[stmt.name] = vi
         self.queries[qi.name] = qi
         return vi
@@ -2203,23 +2105,10 @@ class HStreamEngine:
         ctype = str(ropts.get("TYPE", ropts.get("type", ""))).lower()
 
         if stmt.kind == "SINK" and ctype in C.SINK_BUILDERS:
-            sink_fn = C.build_sink(ctype, ropts)
-
-            def _start_sink(info=info, sink_fn=sink_fn):
-                src = self._resolve_stream(info.target)
-                with self._stream_start_conf():
-                    info.handle = (
-                        src.writeStream.outputMode("append")
-                        .option("checkpointLocation",
-                                self._checkpoint(f"conn_{info.name}"))
-                        .foreachBatch(sink_fn)
-                        .start()
-                    )
-
-            if self._replaying:
-                info.starter = _start_sink
-            else:
-                _start_sink()
+            self._start_query(
+                (info,), lambda: self._resolve_stream(info.target), "append",
+                C.build_sink(ctype, ropts), self._checkpoint(f"conn_{info.name}"),
+            )
         elif stmt.kind == "SOURCE" and ctype in (
             "jdbc", "mysql", "postgresql", "sqlserver", "mongodb",
         ):
@@ -2299,41 +2188,13 @@ class HStreamEngine:
             # topic into the target stream; committed offsets in the
             # stream's sidecar make re-creation resume, not re-read
             target = self._require_stream(info.target)
-            kopts = {str(k).lower(): v for k, v in ropts.items()}
-            topic = str(kopts.get("topic") or kopts.get("kafka_topic") or "")
-            bootstrap = str(
-                kopts.get("bootstrap_servers")
-                or kopts.get("kafka_bootstrap_servers") or ""
-            )
-            if not topic or not bootstrap:
-                raise CompileError(
-                    "kafka source connector requires topic and "
-                    "bootstrap_servers options"
-                )
-            raw_ms = kopts.get("poll_interval_ms", kopts.get("kafka_poll_interval_ms"))
-            poll_ms = 2000 if raw_ms is None else int(raw_ms)
-            starting = str(
-                kopts.get("starting_offsets")
-                or kopts.get("kafka_starting_offsets") or "earliest"
-            ).lower()
-            kgroup = kopts.get("group_id", kopts.get("kafka_group_id"))
-            kgroup = None if kgroup is None else str(kgroup)
-            kcoord = str(
-                kopts.get("group_coordinated",
-                          kopts.get("kafka_group_coordinated", ""))
-            ).lower() in ("true", "1", "yes")
             # RESUME rebuilds pass the full client options via secrets
-            # (the stored options are sanitized — no password/CA file);
-            # a directly-declared connector derives them from its own
-            # options as usual
-            client_opts = (
-                dict(info.secrets) if info.secrets
-                else C.kafka_client_options(kopts)
+            # (the stored options are sanitized — no password/CA file)
+            kafka = self._validate_kafka_opts(
+                {**{str(k).lower(): v for k, v in ropts.items()},
+                 **info.secrets}
             )
-            info.handle = self._build_kafka_tailer(
-                target, topic, bootstrap, poll_ms, starting, kgroup, kcoord,
-                client_opts
-            )
+            info.handle = self._build_kafka_tailer(target, *kafka)
         elif stmt.kind == "SOURCE" and ctype == "generator":
             target = self._require_stream(info.target)
             rate = C.rate_source(
@@ -2353,20 +2214,10 @@ class HStreamEngine:
                     "append"
                 ).parquet(target.path)
 
-            def _start_gen(info=info, rate=rate):
-                with self._stream_start_conf():
-                    info.handle = (
-                        rate.writeStream.outputMode("append")
-                        .option("checkpointLocation",
-                                self._checkpoint(f"conn_{info.name}"))
-                        .foreachBatch(_gen_write)
-                        .start()
-                    )
-
-            if self._replaying:
-                info.starter = _start_gen
-            else:
-                _start_gen()
+            self._start_query(
+                (info,), lambda: rate, "append", _gen_write,
+                self._checkpoint(f"conn_{info.name}"),
+            )
         self.connectors.setdefault(stmt.name, info)
         return info
 
@@ -2438,24 +2289,9 @@ class HStreamEngine:
             # paused connector: the record waits in the topic and
             # arrives on RESUME through the committed-offset path
             return 1
-        if info.dynamic:
-            # resolve any persisted layout/schema before deciding
-            try:
-                self._schema_of(info)
-            except CompileError:
-                pass  # brand-new stream: no schema, no data
-            if info.schema is None:
-                info.payload = True  # first write is a record: value-typed
+        self._settle_layout(info)
         if info.payload:
-            self._evolve_payload_schema(info, record)
-            row_df = self.spark.createDataFrame(
-                [(json.dumps(record, default=_payload_default),)],
-                T.StructType([T.StructField(self._PAYLOAD_COL, T.StringType())]),
-            ).withColumn(EVENT_TIME_COL, F.timestamp_seconds(F.lit(now)))
-            # coalesce: a 1-row driver frame otherwise spreads over
-            # defaultParallelism partitions and writes an empty part
-            # alongside the 1-row part, doubling small-file growth
-            row_df.coalesce(1).write.mode("append").parquet(info.path)
+            self._append_records(info, [(record, now)])
             self.vacuum(stmt.stream)
             return 1
         # column-typed path: nested documents persist as JSONB text
@@ -2485,18 +2321,16 @@ class HStreamEngine:
         # string literals coerce into TIME/DATE/TIMESTAMP columns the
         # way the reference's FlowObject ingestion parses them — Spark's
         # createDataFrame verifier accepts only the Python-native types
-        import datetime as _dt
-
         def _coerce(f: "T.StructField", v):
             if v is None or not isinstance(v, str):
                 return v
             try:
                 if isinstance(f.dataType, T.TimeType):
-                    return _dt.time.fromisoformat(v)
+                    return datetime.time.fromisoformat(v)
                 if isinstance(f.dataType, T.DateType):
-                    return _dt.date.fromisoformat(v)
+                    return datetime.date.fromisoformat(v)
                 if isinstance(f.dataType, T.TimestampType):
-                    return _dt.datetime.fromisoformat(v)
+                    return datetime.datetime.fromisoformat(v)
             except ValueError as exc:
                 raise CompileError(
                     f"INSERT value {v!r} does not parse as "
@@ -2521,6 +2355,19 @@ class HStreamEngine:
         row_df.coalesce(1).write.mode("append").parquet(info.path)
         self.vacuum(stmt.stream)
         return 1
+
+    def _settle_layout(self, info: StreamInfo) -> None:
+        """Resolve a schemaless stream's persisted layout and schema
+        before a record write; a brand-new one (no schema, no data)
+        becomes value-typed — its first write is a record."""
+        if not info.dynamic:
+            return
+        try:
+            self._schema_of(info)
+        except CompileError:
+            pass  # brand-new stream: no schema, no data
+        if info.schema is None:
+            info.payload = True
 
     def _evolve_payload_schema(self, info: StreamInfo, record: dict) -> None:
         """Value-typed evolution for payload streams: unseen fields
@@ -2574,12 +2421,18 @@ class HStreamEngine:
         if not target.payload:
             return df
         self._merge_payload_schema(target, df.schema)
+        return self._payload_encode(df)
+
+    @staticmethod
+    def _payload_encode(df: DataFrame) -> DataFrame:
+        """Rows in the payload layout: one JSON text column (to_json,
+        map-only) plus the event time."""
         from hstream_spark.sources.connectors import _json_safe
 
         df = _json_safe(df)  # Spark 4.1 to_json cannot serialize TimeType
         cols = [c for c in df.columns if c != EVENT_TIME_COL]
         return df.select(
-            F.to_json(F.struct(*cols)).alias(self._PAYLOAD_COL),
+            F.to_json(F.struct(*cols)).alias(HStreamEngine._PAYLOAD_COL),
             F.col(EVENT_TIME_COL),
         )
 
@@ -2631,65 +2484,29 @@ class HStreamEngine:
             # one-shot SELECT: views and streams as batch tables
             return compile_select(stmt, self._resolve_batch)
         table = self._next_qname("push")
-        out = None
-        sliding_append = False
-        if isinstance(stmt.from_, A.WindowedRef):
-            if stmt.from_.window_kind == "SESSION":
-                from hstream_spark.plans.compiler import (
-                    compile_select_session_update,
-                )
-
-                out = compile_select_session_update(stmt, self._resolve_stream)
-            elif stmt.from_.window_kind == "SLIDING":
-                # batch SLIDING compiles to window functions, which
-                # streaming rejects outright — the stateful operator is
-                # the only streaming path
-                from hstream_spark.plans.compiler import (
-                    compile_select_sliding_update,
-                )
-
-                out = compile_select_sliding_update(stmt, self._resolve_stream)
-                sliding_append = out is not None
-        if out is None:
-            out = compile_select(stmt, self._resolve_stream)
-        aggregated = (
-            bool(stmt.group_by) or any(find_aggs(it.expr) for it in stmt.items)
-        ) and not sliding_append  # sliding emits append-per-record
         # Aggregated push queries emit the UPDATE stream — every input
         # record surfaces its group's new accumulator, exactly the
         # reference's per-record emission (GroupedStream.hs:98-102) —
         # and, unlike complete mode, each trigger ships only touched
         # groups (bounded output at scale). Complete fallback covers
         # plans that reject update mode (e.g. session windows).
-        mode = "update" if aggregated else "append"
-        mode_label = "append" if sliding_append else mode
-        skip_no_data = self._no_data_batches_idle(stmt, mode)
-        try:
-            with self._stream_start_conf(skip_no_data):
-                q = (
-                    out.writeStream.outputMode(mode)
-                    .format("memory")
-                    .queryName(table)
-                    .start()
-                )
-        except Exception:
-            if not aggregated:
-                raise
-            mode_label = "complete(fallback)"
+        out, mode, _ = self._compile_streaming(stmt)
+        qi = QueryInfo(table, sql, None, "", mode=mode)
+
+        def fallback() -> None:
+            qi.mode = "complete(fallback)"
             _warn_complete_fallback(table, "push-query plan rejects update "
                                     "output mode")
-            with self._stream_start_conf():
-                q = (
-                    out.writeStream.outputMode("complete")
-                    .format("memory")
-                    .queryName(table)
-                    .start()
-                )
-        qi = QueryInfo(table, sql, None, "", q, mode=mode_label)
+
+        self._start_query(
+            (qi,), lambda: out, mode,
+            skip_no_data=self._no_data_batches_idle(stmt, mode),
+            fallback=fallback if mode == "update" else None,
+        )
         self.queries[table] = qi
         return PushQueryHandle(
-            self, q, table,
-            incremental=mode_label != "complete(fallback)",
+            self, qi.handle, table,
+            incremental=qi.mode != "complete(fallback)",
         )
 
     def _exec_explain(self, stmt: A.Explain):
@@ -2729,12 +2546,12 @@ class HStreamEngine:
 
             rows = [
                 (q.name, self._query_status(q), q.mode, *(_progress(q)),
-                 q.sql)
+                 q.sql, self._query_error(q))
                 for q in self.queries.values()
             ]
             schema = (
                 "name string, status string, mode string, last_batch long, "
-                "last_rows long, sql string"
+                "last_rows long, sql string, error string"
             )
         elif stmt.what == "REPLAY_ERRORS":
             # recovery failures the DDL-replay quarantine swallowed —
@@ -2769,11 +2586,11 @@ class HStreamEngine:
             # and take the checkpoint with it — a stale conn_ checkpoint
             # would make a same-name successor (or a replayed CREATE
             # after compaction) re-deliver rewritten segments to the
-            # external sink as duplicate new data
+            # external sink as duplicate new data. Leaving the registry
+            # is what keeps a deferred replay start from running.
             c = self.connectors[stmt.name]
             if c.handle is not None:
                 c.handle.stop()
-            c.starter = None
             shutil.rmtree(
                 self._checkpoint(f"conn_{stmt.name}"), ignore_errors=True
             )
@@ -2808,7 +2625,6 @@ class HStreamEngine:
                     self.connectors.pop(cn, None)
                     if ci.handle is not None:
                         ci.handle.stop()
-                    ci.starter = None
                     shutil.rmtree(
                         self._checkpoint(f"conn_{cn}"), ignore_errors=True
                     )
@@ -2826,6 +2642,14 @@ class HStreamEngine:
                 and h.exception() is not None):
             return "FAILED"
         return q.status
+
+    @staticmethod
+    def _query_error(q: QueryInfo) -> Optional[str]:
+        """The exception a FAILED query died on, as text; None for a
+        query in any other status."""
+        if HStreamEngine._query_status(q) != "FAILED":
+            return None
+        return str(q.handle.exception())
 
     def _terminate(self, qname: str):
         if qname not in self.queries:
@@ -2900,15 +2724,14 @@ class HStreamEngine:
         stmt_ast = parse(q.sql)
         select = stmt_ast.select if hasattr(stmt_ast, "select") else stmt_ast
         # rebuild through the SAME machinery CREATE used (same qname →
-        # same checkpoint, so offsets resume exactly-once). A hand-rolled
-        # writeStream here silently diverged from _start_continuous on
-        # every flag it didn't copy: payload sinks resumed writing RAW
-        # columns into the JSON payload stream, keep_event_time was
+        # same checkpoint, so offsets resume exactly-once). A start
+        # hand-rolled here once silently diverged from _start_continuous
+        # on every flag it didn't copy: payload sinks resumed writing
+        # RAW columns into the JSON payload stream, keep_event_time was
         # dropped (resumed records lost source timestamps), stateful
         # SESSION/SLIDING plans fell back to a plain compile, and the
-        # sink file-count cap was lost. _start_continuous also defers
-        # via self._replaying, preserving the RESUME-then-TERMINATE
-        # replay ordering this branch handled itself.
+        # sink file-count cap was lost. _start_query also defers during
+        # replay, preserving the RESUME-then-TERMINATE replay ordering.
         old = self.queries.pop(stmt.name)
         try:
             qi = self._start_continuous(

@@ -65,6 +65,35 @@ def test_jdbc_sink_requires_options():
 from pyspark.sql import functions as F
 
 
+@pytest.mark.parametrize("bad", [
+    ("poll_interval_ms", "abc"),
+    ("starting_offsets", "bogus"),
+])
+def test_kafka_source_routes_parse_options_alike(engine, bad):
+    """A stream's WITH (KAFKA_TOPIC=..) and a kafka SOURCE CONNECTOR
+    parse their options with the same rules: each bad value is a
+    CompileError on both routes, and neither registers a connector."""
+    from hstream_spark.plans.compiler import CompileError
+
+    key, value = bad
+    with pytest.raises(CompileError, match=key.upper()):
+        engine.execute(
+            "CREATE STREAM kopt_s WITH (\"kafka_topic\" = 't', "
+            "\"kafka_bootstrap_servers\" = 'localhost:1', "
+            f"\"kafka_{key}\" = '{value}');"
+        )
+    assert "kopt_s" not in engine.streams
+    engine.execute("CREATE STREAM kopt_t (v INTEGER);")
+    with pytest.raises(CompileError, match=key.upper()):
+        engine.execute(
+            "CREATE SOURCE CONNECTOR kopt_c FROM kopt_t WITH "
+            "(\"type\" = 'kafka', \"topic\" = 't', "
+            "\"bootstrap_servers\" = 'localhost:1', "
+            f"\"{key}\" = '{value}');"
+        )
+    assert engine.connectors == {}
+
+
 class TestCDC:
     ENV = [
         ('{"op": "c", "ts_ms": 100, "after": {"k": 1, "v": 10.0}}',),

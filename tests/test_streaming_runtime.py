@@ -1107,12 +1107,11 @@ class TestViewDeltaLog:
         assert rows[0].asDict().keys() == {"s"}
 
 
-def test_should_compact_decision(tmp_path, monkeypatch):
+def test_should_compact_decision(tmp_path):
     """The size-adaptive fold-down decision in isolation: every-N
     cadence FLOOR (never fold more often than round 8 did — fold jobs
     have fixed cost), row-fraction deferral for tiny deltas at the
-    floor, unknown-footer fixed-cadence fallback, and the hard
-    fan-out cap."""
+    floor, and the hard fan-out cap."""
     from hstream_spark.streaming.runtime import HStreamEngine, ViewInfo
 
     # dense deltas: folds exactly at the every-8 floor, like round 8
@@ -1131,12 +1130,6 @@ def test_should_compact_decision(tmp_path, monkeypatch):
     assert not HStreamEngine._should_compact(vi2, 0, list(range(1, 40)))
     # …until the fan-out hard cap forces it regardless of row counts
     assert HStreamEngine._should_compact(vi2, 0, list(range(1, 65)))
-    # unknown footers (no pyarrow / remote state) → fixed cadence
-    vi3 = ViewInfo("d3", "", "", None, str(tmp_path / "y"))
-    monkeypatch.setattr(HStreamEngine, "_parquet_dir_rows",
-                        staticmethod(lambda p: -1))
-    assert not HStreamEngine._should_compact(vi3, 0, list(range(1, 8)))
-    assert HStreamEngine._should_compact(vi3, 0, list(range(1, 9)))
 
 
 class TestViewRetention:
@@ -1510,7 +1503,9 @@ def _log_batches(checkpoint: str, log: str) -> list:
 
 def test_show_queries_reports_dead_query_failed(engine):
     """A view refresh that dies on an exception reads FAILED in SHOW
-    QUERIES, not the RUNNING its catalog entry still holds."""
+    QUERIES, not the RUNNING its catalog entry still holds; SHOW
+    QUERIES carries the exception, and a read of the view raises
+    instead of serving the state the dead query left behind."""
     import hstream_spark.streaming.runtime as R
 
     engine.execute("CREATE STREAM dq_ev (k INTEGER);")
@@ -1520,11 +1515,16 @@ def test_show_queries_reports_dead_query_failed(engine):
     handle = engine.views["dq"].handle
     handle.processAllAvailable()  # first batch writes the base, no delta
 
-    def status():
+    def row():
         rows = engine.execute("SHOW QUERIES;").collect()
-        return {r["name"]: r["status"] for r in rows}["view_dq"]
+        return {r["name"]: r for r in rows}["view_dq"]
+
+    def status():
+        return row()["status"]
 
     assert status() == "RUNNING"
+    assert row()["error"] is None
+    assert engine.execute("SELECT k, n FROM dq;").count() == 1
 
     def hook(point):
         if point == "delta-written":
@@ -1540,6 +1540,13 @@ def test_show_queries_reports_dead_query_failed(engine):
     assert wait_until(lambda: not handle.isActive, timeout=30, step=0.2)
     assert engine.queries["view_dq"].status == "RUNNING"  # catalog entry
     assert status() == "FAILED"
+    assert "injected upsert failure" in row()["error"]
+    with pytest.raises(RuntimeError,
+                       match="(?s)view 'dq' is stale.*injected upsert failure"):
+        engine.execute("SELECT k, n FROM dq;")
+    # a paused view serves its last committed state again
+    engine.execute("PAUSE QUERY view_dq;")
+    assert engine.execute("SELECT k, n FROM dq;").count() == 1
 
 
 class TestNoDataBatches:
@@ -1681,3 +1688,18 @@ class TestNoDataBatches:
                         assert not [f for f in files if ".tmp" in f], d
         finally:
             b.shutdown()
+
+
+def test_runtime_has_one_start_path():
+    """Every streaming query starts through ``_start_query``: it alone
+    calls ``writeStream`` and alone parks a start on ``.starter``
+    during DDL replay. A second, hand-rolled start drifts from it (a
+    RESUME that did so once dropped the payload encoding, the source
+    event time and the stateful plans)."""
+    import pathlib
+    import re
+
+    src = (pathlib.Path(__file__).resolve().parents[1] / "hstream_spark"
+           / "streaming" / "runtime.py").read_text()
+    assert len(re.findall(r"writeStream", src)) == 1
+    assert len(re.findall(r"\.starter\s*=(?!=)", src)) == 1
