@@ -15,7 +15,7 @@ Conventions that make the Spark/DuckDB comparison exact:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,14 +37,14 @@ Builder = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     builder: Builder
-    oracle: Optional[str]
+    oracle: str
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: Optional[str], tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str, tags: tuple[str, ...] = ()):
     def deco(fn: Builder) -> Builder:
         REGISTRY[name] = Query(name, fn, oracle, tags)
         return fn

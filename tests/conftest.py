@@ -6,9 +6,10 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
-# The driver's verify gate runs `python -m pytest tests/ -x -q` under a
-# fixed time budget; round 12's full suite grew past it (the gate
-# timed out at ~70% with zero failures — VERIFY_r12 `tests_ok: false`).
+# Tier-1 runs `python -m pytest tests/ -q --continue-on-collection-errors
+# -p no:cacheprovider` (ROADMAP.md) under a fixed time budget; round 12's
+# full suite grew past it (the gate timed out at ~70% with zero failures
+# — VERIFY_r12 `tests_ok: false`).
 # Tests marked `slow` (the long soaks, deep property machines and scale
 # sweeps) are therefore skipped by default and opt in via
 # HSTREAM_SLOW_TESTS=1 — mirroring the existing HSTREAM_PROP_EXAMPLES

@@ -5,8 +5,9 @@ broadcast fails loudly.
 
 These are the properties that decide 100 TB behavior: filters reaching
 the parquet scan, narrow read schemas, map-side partial aggregation
-before every exchange, dimension broadcasts, and the absence of
-nested-loop/cartesian physical nodes in every hot path.
+before every exchange, and dimension broadcasts. The absence of
+nested-loop/cartesian physical nodes is checked for every catalog entry
+by ``tests/test_catalog_oracle.py``.
 """
 
 from __future__ import annotations
@@ -60,22 +61,6 @@ def test_lm_scoring_join_broadcasts_the_model(plans):
     assert "BroadcastHashJoin" in p
     # the doc-token scoring join must not shuffle both sides on tok
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
-
-
-def test_no_cartesian_or_nested_loop_in_hot_paths(plans):
-    for q in (
-        "cross_join_within",
-        "dedup_minhash_lsh",
-        "dedup_embedding_lsh",
-        "ann_lsh_topk",
-        "ann_ivf_topk",
-        "range_join_bands",
-        "tpch_q21ish",
-        "interval_join_inner",
-    ):
-        p = plans(q)
-        assert "CartesianProduct" not in p, q
-        assert "BroadcastNestedLoop" not in p, q
 
 
 def test_aggregations_partial_before_exchange(plans):

@@ -1,11 +1,10 @@
 """Plan audit across the whole catalog: flag scale anti-patterns in
 every registered query's executed plan.
 
-Checks per entry:
+Checks per entry (``hard_flags``, which Tier-1's
+``tests/test_catalog_oracle.py`` also runs on every entry):
 - CartesianProduct / BroadcastNestedLoopJoin (quadratic blowups)
 - row-at-a-time Python UDFs (BatchEvalPython; Arrow stages are fine)
-- aggregations missing map-side partial combine
-- scans reading all columns when the query projects few
 
 Usage: python tools/audit_plans.py [entry ...]   (no args = all)
 Exit code 1 if any hard anti-pattern (cartesian/nested-loop/row-UDF)
@@ -49,6 +48,18 @@ ALLOW_NESTED = {
 }
 
 
+def hard_flags(name: str, plan: str) -> list[str]:
+    """The hard anti-patterns in entry ``name``'s executed ``plan``."""
+    flags = []
+    if "CartesianProduct" in plan:
+        flags.append("CARTESIAN")
+    if "BroadcastNestedLoopJoin" in plan and name not in ALLOW_NESTED:
+        flags.append("NESTED-LOOP")
+    if "BatchEvalPython" in plan:
+        flags.append("ROW-PYTHON-UDF")
+    return flags
+
+
 def main() -> int:
     from hstream_spark import get_spark
     from hstream_spark.queries import REGISTRY
@@ -64,13 +75,7 @@ def main() -> int:
             print(f"!! {name}: plan build failed: {exc}")
             bad += 1
             continue
-        flags = []
-        if "CartesianProduct" in plan:
-            flags.append("CARTESIAN")
-        if "BroadcastNestedLoopJoin" in plan and name not in ALLOW_NESTED:
-            flags.append("NESTED-LOOP")
-        if "BatchEvalPython" in plan:
-            flags.append("ROW-PYTHON-UDF")
+        flags = hard_flags(name, plan)
         if flags:
             print(f"✗ {name}: {', '.join(flags)}")
             bad += 1

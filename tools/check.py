@@ -22,9 +22,9 @@ tolerant local compare: floats must match to the last bit, any
 list/array-typed output cell is an error (the driver's canonicalizer
 crashes on unhashable cells), and the canonicalized dtypes of the two
 frames must agree (int64-vs-float64 representation differences change
-the driver's hash even when values are numerically equal). Run this
-catalog-wide before every round so representation artifacts can never
-cost a driver row.
+the driver's hash even when values are numerically equal). Tier-1
+(``tests/test_catalog_oracle.py``) runs this strict compare over the
+whole catalog at sf0.01 on every run; this script covers other scales.
 """
 
 from __future__ import annotations
@@ -45,7 +45,14 @@ TABLES = (
 ).split()
 
 
-STRICT = False
+def oracle_db(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per test table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -77,11 +84,11 @@ def strict_hazards(side: str, pdf: pd.DataFrame) -> list[str]:
     return out
 
 
-def values_equal(a, b) -> bool:
+def values_equal(a, b, strict: bool = False) -> bool:
     if isinstance(a, float) and isinstance(b, float):
         if math.isnan(a) and math.isnan(b):
             return True
-        if STRICT:
+        if strict:
             return a == b
         # last-ulp tolerance: Spark and DuckDB convert the SAME exact
         # decimal to double with different roundings on some values
@@ -92,26 +99,28 @@ def values_equal(a, b) -> bool:
         # surface the artifact (verified <=1 ulp on every case found).
         return a == b or abs(a - b) <= 1e-12 * max(abs(a), abs(b))
     if isinstance(a, tuple) and isinstance(b, tuple):
-        return len(a) == len(b) and all(values_equal(x, y) for x, y in zip(a, b))
+        return len(a) == len(b) and all(values_equal(x, y, strict) for x, y in zip(a, b))
     if (a is None or a != a) and (b is None or b != b):  # NaN/None cross
         return True
     return a == b
 
 
-def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
+def compare(
+    name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, strict: bool = False
+) -> list[str]:
     issues = []
     if sorted(spark_pdf.columns) != sorted(duck_pdf.columns):
         issues.append(f"columns differ: spark={sorted(spark_pdf.columns)} duck={sorted(duck_pdf.columns)}")
         return issues
     if len(spark_pdf) != len(duck_pdf):
         issues.append(f"row count: spark={len(spark_pdf)} duck={len(duck_pdf)}")
-    if STRICT:
+    if strict:
         issues += strict_hazards("spark", spark_pdf)
         issues += strict_hazards("duck", duck_pdf)
         if issues:
             return issues
     s, d = normalize(spark_pdf), normalize(duck_pdf)
-    if STRICT:
+    if strict:
         for c in s.columns:
             if str(s[c].dtype) != str(d[c].dtype):
                 issues.append(
@@ -125,7 +134,7 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     mismatches = 0
     for i in range(n):
         for c in s.columns:
-            if not values_equal(s[c].iloc[i], d[c].iloc[i]):
+            if not values_equal(s[c].iloc[i], d[c].iloc[i], strict):
                 mismatches += 1
                 if mismatches <= 3:
                     issues.append(f"row {i} col {c}: spark={s[c].iloc[i]!r} duck={d[c].iloc[i]!r}")
@@ -138,11 +147,10 @@ def main() -> int:
     import __spark_entry__ as entry
     from hstream_spark import get_spark
 
-    global STRICT, SF_DIR
     argv = sys.argv[1:]
-    if "--strict" in argv:
-        STRICT = True
-        argv = [a for a in argv if a != "--strict"]
+    strict = "--strict" in argv
+    argv = [a for a in argv if a != "--strict"]
+    sf_dir = SF_DIR
     if "--sf" in argv:
         i = argv.index("--sf")
         if i + 1 >= len(argv):
@@ -153,50 +161,40 @@ def main() -> int:
         argv = argv[:i] + argv[i + 2:]
         if "SPARK_GRAFT_SF_DIR_CHECK" not in os.environ:
             if sf in ("0.001", "0.01", "0.1"):
-                SF_DIR = f"/root/testdata/sf{sf}"
+                sf_dir = os.path.join(os.path.dirname(SF_DIR), f"sf{sf}")
             else:
                 repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-                SF_DIR = os.path.join(repo, ".scale", f"sf{sf}")
-                if not os.path.isdir(SF_DIR):
+                sf_dir = os.path.join(repo, ".scale", f"sf{sf}")
+                if not os.path.isdir(sf_dir):
                     print(
-                        f"--sf {sf}: {SF_DIR} missing — generate it first:\n"
+                        f"--sf {sf}: {sf_dir} missing — generate it first:\n"
                         f"  python tools/gen_scale_data.py /root/testdata/sf0.1 "
-                        f"{SF_DIR} {int(float(sf) * 10)}"
+                        f"{sf_dir} {int(float(sf) * 10)}"
                     )
                     return 2
-    print(f"sf_dir={SF_DIR} strict={STRICT}")
+    print(f"sf_dir={sf_dir} strict={strict}")
     only = set(argv)
     spark = get_spark("check")
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    con = oracle_db(sf_dir)
 
-    queries = entry.queries()
     oracles = entry.oracle_sql()
-    failed, passed, weak = [], [], []
-    for name, fn in queries.items():
+    failed, passed = [], []
+    for name, fn in entry.queries().items():
         if only and name not in only:
             continue
         try:
-            spark_pdf = fn(spark, SF_DIR).toPandas()
+            spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             failed.append(name)
             print(f"✗ {name}: SPARK ERROR {type(e).__name__}: {str(e).splitlines()[0][:200]}")
             continue
-        sql = oracles.get(name)
-        if sql is None:
-            weak.append(name)
-            print(f"~ {name}: no oracle (rows-only) — {len(spark_pdf)} rows")
-            continue
         try:
-            duck_pdf = con.execute(sql).fetchdf()
+            duck_pdf = con.execute(oracles[name]).fetchdf()
         except Exception as e:  # noqa: BLE001
             failed.append(name)
             print(f"✗ {name}: DUCKDB ERROR {str(e).splitlines()[0][:200]}")
             continue
-        issues = compare(name, spark_pdf, duck_pdf)
+        issues = compare(name, spark_pdf, duck_pdf, strict)
         if issues:
             failed.append(name)
             print(f"✗ {name}: {len(spark_pdf)} rows")
@@ -205,7 +203,7 @@ def main() -> int:
         else:
             passed.append(name)
             print(f"✓ {name}: {len(spark_pdf)} rows")
-    print(f"\n{len(passed)} passed, {len(failed)} failed, {len(weak)} rows-only")
+    print(f"\n{len(passed)} passed, {len(failed)} failed")
     return 1 if failed else 0
 
 
