@@ -45,6 +45,7 @@ from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -269,6 +270,9 @@ class ViewInfo:
     # delta's footers on every trigger. Purely a cache: cleared at
     # compaction, rebuilt from footers after a restart.
     delta_rows_cache: dict = field(default_factory=dict)
+    # the same dirs' uncompressed footer bytes (dir name → bytes),
+    # filled alongside: they choose the fold's path (_arrow_foldable)
+    delta_bytes_cache: dict = field(default_factory=dict)
     # WITH (DURATION = …) state retention for WINDOWED views: closed
     # windows whose window_end trails the view's event-time high-water
     # mark by more than this are dropped during the compaction fold —
@@ -668,6 +672,12 @@ class HStreamEngine:
     _VIEW_COMPACT_EVERY = 8  # cadence floor
     _VIEW_COMPACT_MAX_DELTAS = 64  # hard cap on read-side delta fan-out
     _VIEW_COMPACT_FRACTION = 0.5  # defer floor folds until Σ ≥ ½ base
+    # Folds whose base+deltas hold at most this many uncompressed footer
+    # bytes merge in the driver with pyarrow (_arrow_fold), with no
+    # Spark job; larger state folds on the Spark plan. pyarrow won at
+    # every size measured, so the cap bounds driver memory, not speed:
+    # see README § Streaming runtime for the peak-RSS measurement.
+    _VIEW_ARROW_FOLD_MAX_BYTES = 64 << 20
 
     @staticmethod
     def _view_layout(state_dir: str) -> tuple[Optional[int], list[int]]:
@@ -871,16 +881,113 @@ class HStreamEngine:
         return best
 
     @staticmethod
-    def _parquet_dir_rows(path: str) -> int:
-        """Total row count of a just-written local parquet dir, from
-        the file footers — driver-side metadata only, no Spark job."""
-        total = 0
+    def _footer_bytes(md) -> int:
+        """Uncompressed data bytes one parquet footer records."""
+        return sum(md.row_group(g).total_byte_size
+                   for g in range(md.num_row_groups))
+
+    @staticmethod
+    def _parquet_dir_size(path: str) -> tuple[int, int]:
+        """(rows, uncompressed bytes) of a local parquet dir, from the
+        file footers — driver-side metadata only, no Spark job."""
+        rows = nbytes = 0
         for name in os.listdir(path):
             if name.endswith(".parquet"):
-                total += pq.ParquetFile(
-                    os.path.join(path, name)
-                ).metadata.num_rows
-        return total
+                md = pq.ParquetFile(os.path.join(path, name)).metadata
+                rows += md.num_rows
+                nbytes += HStreamEngine._footer_bytes(md)
+        return rows, nbytes
+
+    @staticmethod
+    def _state_size(vi: ViewInfo, name: str, cache: dict) -> int:
+        """One live state dir's entry in ``cache`` (the view's
+        ``delta_rows_cache`` or ``delta_bytes_cache``). Dirs are
+        immutable once renamed, so a miss — only after a restart —
+        reads the dir's footers once and fills both caches."""
+        if name not in cache:
+            rows, nbytes = HStreamEngine._parquet_dir_size(
+                os.path.join(vi.state_dir, name)
+            )
+            vi.delta_rows_cache[name] = rows
+            vi.delta_bytes_cache[name] = nbytes
+        return cache[name]
+
+    @staticmethod
+    def _swap_current(state_dir: str, v: int) -> None:
+        ptr = os.path.join(state_dir, "CURRENT")
+        with open(ptr + ".tmp", "w") as f:
+            f.write(str(v))
+        os.replace(ptr + ".tmp", ptr)
+
+    @staticmethod
+    def _commit_state(vi: ViewInfo, state, name: str,
+                      written: Optional[str]) -> tuple[int, int]:
+        """The one state write: ``state`` — a DataFrame, or a pyarrow
+        Table from the driver-side fold — into the dot-tmp dir
+        ``.tmp_<name>`` (invisible to the listing readers use), then an
+        atomic rename to ``name``; returns its (rows, footer bytes),
+        taken from the written footers. A write that ADDS state (the
+        first base, a delta) names the fault window ``written`` between
+        write and rename and is discarded when empty — an idle trigger
+        must not accrete empty deltas and re-compact O(state) forever.
+        A generation that REPLACES state (complete refresh, fold) is
+        kept even when empty: empty is then the state."""
+        tmp = os.path.join(vi.state_dir, f".tmp_{name}")
+        dst = os.path.join(vi.state_dir, name)
+        if isinstance(state, pa.Table):
+            # a crashed earlier write may have left the dir behind
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.makedirs(tmp)
+            footers: list = []
+            pq.write_table(
+                state,
+                os.path.join(tmp, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
+                compression="snappy", metadata_collector=footers,
+            )
+            rows = state.num_rows
+            nbytes = HStreamEngine._footer_bytes(footers[0])
+        else:
+            state.write.mode("overwrite").parquet(tmp)
+            rows, nbytes = HStreamEngine._parquet_dir_size(tmp)
+        if written is not None and rows == 0:
+            shutil.rmtree(tmp, ignore_errors=True)
+            return 0, 0
+        if (vi.replace_all and vi.complete_max_rows is not None
+                and rows > vi.complete_max_rows):
+            # refuse BEFORE the swap: the previous generation stays
+            # current, the query fails loudly, and the operator sees
+            # the real cost instead of a view that silently rewrites
+            # O(result) per trigger. The refused write goes first —
+            # keeping it would park an extra O(result) of disk per
+            # failing retry.
+            shutil.rmtree(tmp, ignore_errors=True)
+            msg = (
+                f"view {vi.name!r}: complete-mode fallback result has "
+                f"{rows} rows > complete_fallback_max_rows="
+                f"{vi.complete_max_rows}; every trigger rewrites the "
+                "full result — restructure the view for update mode "
+                "or raise/disable the bound"
+            )
+            _LOG.error(msg)
+            raise RuntimeError(msg)
+        if written is not None:
+            _fault(written)
+        if os.path.isdir(dst):
+            # crash window: a previous write renamed this dir but died
+            # before the CURRENT swap that would have made it visible;
+            # the replayed epoch carries the same batch — drop the
+            # orphan instead of failing ENOTEMPTY forever
+            shutil.rmtree(dst)
+        os.rename(tmp, dst)
+        return rows, nbytes
+
+    @staticmethod
+    def _cache_generation(vi: ViewInfo, name: str, size: tuple) -> None:
+        """A new base ``name`` replaced the generation: reset the
+        footer caches and seed them with its (rows, bytes)."""
+        vi.delta_rows_cache.clear()
+        vi.delta_bytes_cache.clear()
+        vi.delta_rows_cache[name], vi.delta_bytes_cache[name] = size
 
     @staticmethod
     def _view_upsert(vi: ViewInfo, batch_df: DataFrame) -> None:
@@ -927,62 +1034,10 @@ class HStreamEngine:
         batch = HStreamEngine._retained(vi, batch)
         base, ks = HStreamEngine._view_layout(vi.state_dir)
 
-        def swap_current(v: int) -> None:
-            ptr = os.path.join(vi.state_dir, "CURRENT")
-            with open(ptr + ".tmp", "w") as f:
-                f.write(str(v))
-            os.replace(ptr + ".tmp", ptr)
-
-        def commit(df: DataFrame, name: str, written: Optional[str]) -> int:
-            """The one state write: ``df`` into the dot-tmp dir
-            ``.tmp_<name>`` (invisible to the listing readers use), its
-            row count from the footers, then an atomic rename to
-            ``name``. A write that ADDS state (the first base, a delta)
-            names the fault window ``written`` between write and rename
-            and is discarded when empty — an idle trigger must not
-            accrete empty deltas and re-compact O(state) forever. A
-            generation that REPLACES state (complete refresh, fold) is
-            kept even when empty: empty is then the state."""
-            tmp = os.path.join(vi.state_dir, f".tmp_{name}")
-            dst = os.path.join(vi.state_dir, name)
-            df.write.mode("overwrite").parquet(tmp)
-            rows = HStreamEngine._parquet_dir_rows(tmp)
-            if written is not None and rows == 0:
-                shutil.rmtree(tmp, ignore_errors=True)
-                return 0
-            if (vi.replace_all and vi.complete_max_rows is not None
-                    and rows > vi.complete_max_rows):
-                # refuse BEFORE the swap: the previous generation stays
-                # current, the query fails loudly, and the operator sees
-                # the real cost instead of a view that silently rewrites
-                # O(result) per trigger. The refused write goes first —
-                # keeping it would park an extra O(result) of disk per
-                # failing retry.
-                shutil.rmtree(tmp, ignore_errors=True)
-                msg = (
-                    f"view {vi.name!r}: complete-mode fallback result has "
-                    f"{rows} rows > complete_fallback_max_rows="
-                    f"{vi.complete_max_rows}; every trigger rewrites the "
-                    "full result — restructure the view for update mode "
-                    "or raise/disable the bound"
-                )
-                _LOG.error(msg)
-                raise RuntimeError(msg)
-            if written is not None:
-                _fault(written)
-            if os.path.isdir(dst):
-                # crash window: a previous write renamed this dir but died
-                # before the CURRENT swap that would have made it visible;
-                # the replayed epoch carries the same batch — drop the
-                # orphan instead of failing ENOTEMPTY forever
-                shutil.rmtree(dst)
-            os.rename(tmp, dst)
-            return rows
-
         if vi.replace_all:
             nxt = (-1 if base is None else base) + 1
-            commit(batch, f"v{nxt}", None)
-            swap_current(nxt)
+            HStreamEngine._commit_state(vi, batch, f"v{nxt}", None)
+            HStreamEngine._swap_current(vi.state_dir, nxt)
             # high-water advances only AFTER the swap: a crash between
             # write and swap must not leave a phantom mark from a
             # generation no reader ever saw (the replay's write-time
@@ -1000,13 +1055,14 @@ class HStreamEngine:
         # late-data drops (plain GROUP BY views start without no-data
         # micro-batches, _no_data_batches_idle).
         if base is None:
-            rows = commit(batch, "v0", "first-base-written")
-            if rows == 0:
+            size = HStreamEngine._commit_state(
+                vi, batch, "v0", "first-base-written"
+            )
+            if size[0] == 0:
                 return
-            vi.delta_rows_cache.clear()
-            vi.delta_rows_cache["v0"] = rows
+            HStreamEngine._cache_generation(vi, "v0", size)
             _fault("first-base-renamed")  # v0 on disk, CURRENT absent
-            swap_current(0)
+            HStreamEngine._swap_current(vi.state_dir, 0)
             # AFTER the swap: a crash while v0 was renamed-but-
             # uncommitted must not advance the mark (the replay's
             # write-time retention filter would silently drop the
@@ -1018,43 +1074,117 @@ class HStreamEngine:
             return
         k = (ks[-1] if ks else 0) + 1
         ks = ks + [k]
-        rows = commit(batch, f"v{base}_d{k}", "delta-written")
+        name = f"v{base}_d{k}"
+        rows, nbytes = HStreamEngine._commit_state(
+            vi, batch, name, "delta-written"
+        )
         if rows == 0:
             return
-        vi.delta_rows_cache[f"v{base}_d{k}"] = rows
+        vi.delta_rows_cache[name] = rows
+        vi.delta_bytes_cache[name] = nbytes
         HStreamEngine._advance_high_water(
-            vi, os.path.join(vi.state_dir, f"v{base}_d{k}")
+            vi, os.path.join(vi.state_dir, name)
         )
         _fault("delta-renamed")  # delta visible, compaction not yet run
-        if not HStreamEngine._should_compact(vi, base, ks):
-            return
-        # fold base+deltas into the next generation's base; the old
-        # generation stays on disk for in-flight readers and is removed
-        # when the one after supersedes it. Retention (WITH DURATION)
-        # drops expired windows here and only here — the expiry
-        # granularity is the compaction cadence, like stream DURATION's
-        # vacuum — so per-trigger cost stays zero. After a restart the
-        # high-water mark is rebuilt from every live dir's statistics.
+        if HStreamEngine._should_compact(vi, base, ks):
+            HStreamEngine._view_fold(batch_df.sparkSession, vi, base, ks)
+
+    @staticmethod
+    def _view_fold(spark, vi: ViewInfo, base: int, ks: list) -> None:
+        """Fold base+deltas into the next generation's base. The old
+        generation stays on disk for in-flight readers and is removed
+        when the one after supersedes it. Retention (WITH DURATION)
+        drops expired windows here and only here — the expiry
+        granularity is the compaction cadence, like stream DURATION's
+        vacuum — so per-trigger cost stays zero. After a restart the
+        high-water mark is rebuilt from every live dir's statistics.
+        Small keyed or keyless state merges in the driver
+        (``_arrow_fold``); SESSION views and state past
+        ``_VIEW_ARROW_FOLD_MAX_BYTES`` run the Spark read plan and
+        write it."""
         if vi.we_high_water is None:
             for d in [f"v{base}"] + [f"v{base}_d{j}" for j in ks]:
                 HStreamEngine._advance_high_water(
                     vi, os.path.join(vi.state_dir, d)
                 )
-        merged = HStreamEngine._retained(
-            vi, HStreamEngine._view_state_frame(batch_df.sparkSession, vi)
-        )
-        rows = commit(merged, f"v{base + 1}", None)
-        # new generation: reset the footer cache, seed the new base
-        vi.delta_rows_cache.clear()
-        vi.delta_rows_cache[f"v{base + 1}"] = rows
+        if HStreamEngine._arrow_foldable(vi, base, ks):
+            merged = HStreamEngine._arrow_fold(vi, base, ks)
+        else:
+            merged = HStreamEngine._retained(
+                vi, HStreamEngine._view_state_frame(spark, vi)
+            )
+        name = f"v{base + 1}"
+        size = HStreamEngine._commit_state(vi, merged, name, None)
+        HStreamEngine._cache_generation(vi, name, size)
         _fault("compact-written")  # new base on disk, CURRENT old
-        swap_current(base + 1)
+        HStreamEngine._swap_current(vi.state_dir, base + 1)
         _fault("compact-swapped")  # CURRENT new, old gen not swept
         HStreamEngine._rm_generation(vi.state_dir, base - 1)
-        for name in os.listdir(vi.state_dir):
-            if name.startswith(".tmp_"):  # stray crash leftovers
-                shutil.rmtree(os.path.join(vi.state_dir, name),
+        for d in os.listdir(vi.state_dir):
+            if d.startswith(".tmp_"):  # stray crash leftovers
+                shutil.rmtree(os.path.join(vi.state_dir, d),
                               ignore_errors=True)
+
+    @staticmethod
+    def _arrow_foldable(vi: ViewInfo, base: int, ks: list) -> bool:
+        """Does this fold merge in the driver? Keyed latest-wins and
+        keyless views do, while base+deltas hold at most
+        ``_VIEW_ARROW_FOLD_MAX_BYTES`` footer bytes (cached, no job).
+        SESSION views resolve overlap, not key equality, and pyarrow
+        cannot group on list, map or struct keys: those stay on the
+        Spark plan."""
+        if vi.merge_on_overlap or any(
+            isinstance(vi.schema[k].dataType,
+                       (T.ArrayType, T.MapType, T.StructType))
+            for k in vi.key_cols
+        ):
+            return False
+        live = [f"v{base}"] + [f"v{base}_d{k}" for k in ks]
+        return (sum(HStreamEngine._state_size(vi, d, vi.delta_bytes_cache)
+                    for d in live)
+                <= HStreamEngine._VIEW_ARROW_FOLD_MAX_BYTES)
+
+    @staticmethod
+    def _arrow_fold(vi: ViewInfo, base: int, ks: list) -> pa.Table:
+        """The rows the Spark fold writes — ``_retained`` over
+        ``_view_state_frame`` — merged with pyarrow in the driver. Base
+        and deltas are read under the base footer's schema and
+        concatenated in version order; per key the row with the highest
+        index (the newest version) wins. A keyless view's newest delta
+        is its state. Float keys group with -0.0 turned into 0.0:
+        Spark's key equality takes them as one value, while Arrow's
+        hash grouping compares bits. NaN keys need no rewrite, because
+        Spark's row writer stores every NaN as the one canonical NaN."""
+        import numpy as np
+
+        dirs = [f"v{base}"] + [f"v{base}_d{k}" for k in ks]
+        if not vi.key_cols:
+            dirs = dirs[-1:]
+        first = pq.read_table(os.path.join(vi.state_dir, dirs[0]))
+        state = pa.concat_tables(
+            [first] + [pq.read_table(os.path.join(vi.state_dir, d),
+                                     schema=first.schema)
+                       for d in dirs[1:]]
+        )
+        if len(dirs) > 1:
+            cols = {}
+            for k in vi.key_cols:
+                c = state[k]
+                if pa.types.is_floating(c.type):
+                    c = pc.add(c, pa.scalar(0.0, c.type))  # -0.0 + 0.0 = 0.0
+                cols[k] = c
+            cols["__i"] = pa.array(np.arange(state.num_rows, dtype=np.int64))
+            latest = (pa.table(cols)
+                      .group_by(list(vi.key_cols), use_threads=False)
+                      .aggregate([("__i", "max")]))
+            state = state.take(latest["__i_max"])
+        cutoff = HStreamEngine._retention_cutoff(vi)
+        if cutoff is not None:
+            we = state["window_end"]
+            state = state.filter(pc.fill_null(
+                pc.greater_equal(we, pa.scalar(cutoff, we.type)), True
+            ))
+        return state
 
     @staticmethod
     def _advance_high_water(vi: ViewInfo, new_dir: str) -> None:
@@ -1069,14 +1199,21 @@ class HStreamEngine:
             vi.we_high_water = m
 
     @staticmethod
-    def _retained(vi: ViewInfo, df: DataFrame) -> DataFrame:
-        """Retention (WITH DURATION): ``df`` without the rows whose
-        window closed more than ``retention_secs`` before the view's
-        event-time high-water mark; unchanged while the view has no
-        retention or no mark yet."""
+    def _retention_cutoff(vi: ViewInfo):
+        """The oldest ``window_end`` retention (WITH DURATION) keeps:
+        ``retention_secs`` before the view's event-time high-water
+        mark; None while the view has no retention or no mark yet."""
         if vi.retention_secs is None or vi.we_high_water is None:
+            return None
+        return vi.we_high_water - datetime.timedelta(seconds=vi.retention_secs)
+
+    @staticmethod
+    def _retained(vi: ViewInfo, df: DataFrame) -> DataFrame:
+        """``df`` without the rows whose window closed before the
+        retention cutoff; unchanged without one."""
+        cutoff = HStreamEngine._retention_cutoff(vi)
+        if cutoff is None:
             return df
-        cutoff = vi.we_high_water - datetime.timedelta(seconds=vi.retention_secs)
         return df.filter(
             F.col("window_end").isNull()
             | (F.col("window_end") >= F.lit(cutoff))
@@ -1102,11 +1239,7 @@ class HStreamEngine:
             return False
 
         def rows_of(name: str) -> int:
-            if name not in vi.delta_rows_cache:
-                vi.delta_rows_cache[name] = HStreamEngine._parquet_dir_rows(
-                    os.path.join(vi.state_dir, name)
-                )
-            return vi.delta_rows_cache[name]
+            return HStreamEngine._state_size(vi, name, vi.delta_rows_cache)
 
         delta_rows = sum(rows_of(f"v{base}_d{k}") for k in ks)
         return (delta_rows
@@ -2532,8 +2665,21 @@ class HStreamEngine:
             rows = [(s.name, s.path, _bytes(s.path)) for s in self.streams.values()]
             schema = "name string, path string, bytes long"
         elif stmt.what == "VIEWS":
-            rows = [(v.name, v.sql) for v in self.views.values()]
-            schema = "name string, sql string"
+            # state layout from the CURRENT pointer, the listing and the
+            # footer cache: base generation, live deltas, and the rows
+            # stored across them (before latest-wins) — no Spark job
+            def _state(v: ViewInfo) -> tuple:
+                base, ks = self._view_layout(v.state_dir)
+                if base is None:
+                    return (None, 0, 0)
+                live = [f"v{base}"] + [f"v{base}_d{k}" for k in ks]
+                return (base, len(ks), sum(
+                    self._state_size(v, d, v.delta_rows_cache) for d in live
+                ))
+
+            rows = [(v.name, v.sql, *_state(v)) for v in self.views.values()]
+            schema = ("name string, sql string, generation long, "
+                      "deltas long, stored_rows long")
         elif stmt.what == "QUERIES":
             # progress from the StreamingQuery handle (the reference's
             # query-stats API surface, Core/Query.hs listQueries)

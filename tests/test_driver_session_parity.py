@@ -13,7 +13,6 @@ the ``_wrap`` TimeType fix.
 
 from __future__ import annotations
 
-import pytest
 import os
 import subprocess
 import sys
@@ -21,7 +20,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-@pytest.mark.slow
 def test_all_catalog_entries_analyze_on_bare_driver_session():
     proc = subprocess.run(
         [

@@ -462,6 +462,54 @@ def test_show_queries_reports_progress(engine):
     assert row["last_batch"] >= 0 and row["last_rows"] >= 0
 
 
+def test_show_views_reports_state_layout(spark, tmp_path, monkeypatch):
+    """SHOW VIEWS carries each view's base generation, live delta count
+    and stored rows (base plus deltas, before latest-wins), from the
+    layout and the footer cache with no Spark job — before and after a
+    fold, and from cold footers after a restart."""
+    monkeypatch.setattr(HStreamEngine, "_VIEW_COMPACT_EVERY", 3)
+    monkeypatch.setattr(HStreamEngine, "_VIEW_COMPACT_FRACTION", 0.0)
+    root = str(tmp_path / "sv")
+    eng = HStreamEngine(spark, root)
+    sc = spark.sparkContext
+
+    def state(e):
+        sc.setJobGroup("show-views", "SHOW VIEWS")
+        try:
+            df = e.execute("SHOW VIEWS;")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("show-views")) == []
+        (row,) = df.collect()
+        return row["generation"], row["deltas"], row["stored_rows"]
+
+    try:
+        eng.execute("CREATE STREAM sv_ev (k STRING, v INTEGER);")
+        eng.execute("CREATE VIEW svw AS SELECT k, COUNT(*) AS n "
+                    "FROM sv_ev GROUP BY k;")
+        assert state(eng) == (None, 0, 0)
+        vi = eng.views["svw"]
+        # one INSERT per trigger: v0, then deltas 1-2 re-touching 'a'
+        for i in range(3):
+            eng.execute(f"INSERT INTO sv_ev (k, v) VALUES ('a', {i});")
+            vi.handle.processAllAvailable()
+        assert state(eng) == (0, 2, 3)
+        # the third delta folds: one row per key in base v1
+        eng.execute("INSERT INTO sv_ev (k, v) VALUES ('b', 1);")
+        vi.handle.processAllAvailable()
+        assert state(eng) == (1, 0, 2)
+        eng.execute("INSERT INTO sv_ev (k, v) VALUES ('c', 1);")
+        vi.handle.processAllAvailable()
+        assert state(eng) == (1, 1, 3)
+    finally:
+        eng.shutdown()
+    b = HStreamEngine(spark, root)
+    try:
+        assert state(b) == (1, 1, 3)
+    finally:
+        b.shutdown()
+
+
 def test_session_view_survives_restart(spark, tmp_path):
     """DDL replay recreates a SESSION view on the stateful update path;
     checkpoint + view state reattach and post-restart events merge into

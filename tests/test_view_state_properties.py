@@ -5,7 +5,8 @@ point once; this file drives RANDOM interleavings of
 upsert / compaction-cadence / crash-at-fault-point / replay / read
 against a sequential in-memory oracle — randomized coverage for the
 interleaving nobody enumerated (round-9 verdict task 6). Three state
-machines, one per read strategy in ``_view_state_frame``:
+machines, one per read strategy in ``_view_state_frame``, plus one for
+retention, each on both fold paths (driver-side pyarrow and Spark):
 
 - keyed latest-wins (row_number over __sv),
 - keyless replace (newest non-empty delta IS the state),
@@ -106,15 +107,21 @@ def _apply_with_faults(spark, vi, rows_df, fault):
     return crashed
 
 
-@pytest.fixture(autouse=True)
-def _fold_often(monkeypatch):
+@pytest.fixture(autouse=True, params=[None, 0], ids=["cap-default", "cap-0"])
+def _fold_often(request, monkeypatch):
     """Low cadence floor + no size deferral: random sequences reach the
     compaction branches within a handful of batches (production floor
-    is 8 — unreachable in short examples)."""
+    is 8 — unreachable in short examples). Every machine runs at the
+    default ``_VIEW_ARROW_FOLD_MAX_BYTES`` (keyed and keyless folds
+    merge in the driver) and at 0 (every fold runs the Spark plan);
+    SESSION folds take the Spark plan at both."""
     import hstream_spark.streaming.runtime as R
 
     monkeypatch.setattr(R.HStreamEngine, "_VIEW_COMPACT_EVERY", 2)
     monkeypatch.setattr(R.HStreamEngine, "_VIEW_COMPACT_FRACTION", 0.0)
+    if request.param is not None:
+        monkeypatch.setattr(R.HStreamEngine, "_VIEW_ARROW_FOLD_MAX_BYTES",
+                            request.param)
 
 
 # batch: {key -> value}; op: (batch, fault_point_or_None)
