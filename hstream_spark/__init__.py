@@ -13,8 +13,9 @@ Design stance (scale-first):
   tree so Catalyst gets predicate pushdown / column pruning / join
   selection for free.
 - JVM-side expressions (`pyspark.sql.functions`) in every hot path;
-  Pandas UDFs (Arrow-batched) only where built-ins cannot express the
-  semantics (multimodal decode); no row-at-a-time Python UDFs.
+  Arrow-batched ``mapInPandas`` only where built-ins cannot express the
+  work (multimodal byte features, the ``*_np`` numpy similarity
+  kernels); no row-at-a-time Python UDFs.
 - Shuffle discipline: broadcast joins for dimension tables, map-side
   partial aggregation, explicit repartitioning knobs on the wide ops
   (LSH dedup, ANN search) so plans survive 100 TB / 1000 executors.

@@ -132,10 +132,9 @@ def dropend(n: int | Column, text: Column) -> Column:
     )
 
 
-def datetostring(epoch_ms_or_s: Column, fmt: str, *, millis: bool = False) -> Column:
-    """DATETOSTRING(int, fmt) — epoch → formatted GMT string (Codegen/Utils.hs dateToStrGMT)."""
-    secs = (epoch_ms_or_s / 1000).cast("long") if millis else epoch_ms_or_s.cast("long")
-    return F.from_unixtime(secs, fmt)
+def datetostring(epoch_s: Column, fmt: str) -> Column:
+    """DATETOSTRING(int, fmt) — epoch seconds → formatted GMT string (Codegen/Utils.hs dateToStrGMT)."""
+    return F.from_unixtime(epoch_s.cast("long"), fmt)
 
 
 def stringtodate(text: Column, fmt: str) -> Column:
@@ -160,10 +159,6 @@ def not_between(value: Column, low: Column, high: Column) -> Column:
 def between_symmetric(value: Column, a: Column, b: Column) -> Column:
     """BETWEEN SYMMETRIC AND — bounds swapped if needed (TerOp.hs:95-103)."""
     return value.between(F.least(a, b), F.greatest(a, b))
-
-
-def not_between_symmetric(value: Column, a: Column, b: Column) -> Column:
-    return ~between_symmetric(value, a, b)
 
 
 # ---------------------------------------------------------------------------

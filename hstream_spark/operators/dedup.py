@@ -26,7 +26,6 @@ operators/text.py. Everything is Catalyst expressions; no Python UDFs.
 
 from __future__ import annotations
 
-from functools import reduce as _reduce
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
@@ -101,23 +100,6 @@ def shingles_from_hashes(th: Column, n: int = 3) -> Column:
         acc = F.zip_with(acc, shifted, lambda x, y: (x * SHINGLE_B + y) % P31)
     # zip_with pads the shorter (shifted) side with nulls → drop them.
     return F.array_distinct(F.filter(acc, lambda x: x.isNotNull()))
-
-
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Distinct 31-bit word-n-gram hashes per document, as ONE
-    expression (token-hash transform inlined n times).
-
-    Prefer ``doc_shingle_sets`` — it materializes the token-hash array
-    in its own projection so the md5 pass runs once per document.
-    Catalyst will not re-inline it (CollapseProject only merges
-    multiply-referenced producer expressions when they are cheap), but
-    a single-expression form like this one re-evaluates the full md5
-    transform at every one of its n references — and a pushed-down
-    size() filter doubles that again. Measured on the sf0.1 documents
-    corpus that plan shape evaluates md5 12x per document (round-12
-    A/B; see OPTIMIZATION_r12.md).
-    """
-    return shingles_from_hashes(token_hash_array(text), n)
 
 
 def doc_shingle_sets(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -228,14 +210,14 @@ def jaccard_for_pairs(sets: DataFrame, pairs: DataFrame) -> DataFrame:
 
 def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.5,
                             text_col: str = "text", id_col: str = "doc_id",
-                            n: int = 3, cache_sets: bool = True,
+                            n: int = 3,
                             cap: Optional[int] = None) -> DataFrame:
     """Full MinHash-LSH pipeline: shingle sets → band buckets →
     candidate self-join → exact-Jaccard verify ≥ threshold.
 
     The shingle-set frame feeds three plan branches (bands ×2 sides,
-    Jaccard ×2 sides); ``cache_sets`` persists it so the tokenize+hash
-    scan runs once. At cluster scale replace the cache with a parquet
+    Jaccard ×2 sides); it is persisted so the tokenize+hash scan runs
+    once. At cluster scale replace the cache with a parquet
     checkpoint of (doc_id, hs).
 
     ``cap`` routes candidate generation through
@@ -243,9 +225,7 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.5,
     sub-buckets, bounding any one bucket's pairs at O(m·cap)); ``None``
     keeps the plain all-pairs-per-bucket join.
     """
-    sets = doc_shingle_sets(docs, text_col, id_col, n)
-    if cache_sets:
-        sets = sets.persist()
+    sets = doc_shingle_sets(docs, text_col, id_col, n).persist()
     bands = minhash_bands_from_sets(sets)
     if cap is not None:
         cands = capped_band_candidates(bands, cap)
@@ -339,7 +319,6 @@ def minhash_near_duplicates_capped(
     id_col: str = "doc_id",
     n: int = 3,
     cap: int = 32,
-    cache_sets: bool = True,
 ) -> DataFrame:
     """``minhash_near_duplicates`` with bounded hot buckets — one body,
     selected by its ``cap`` parameter, so the two operators can never
@@ -347,7 +326,7 @@ def minhash_near_duplicates_capped(
     bucket fits the cap; see ``capped_band_candidates`` for the hot-
     bucket semantics."""
     return minhash_near_duplicates(
-        docs, threshold, text_col, id_col, n, cache_sets, cap=cap
+        docs, threshold, text_col, id_col, n, cap=cap
     )
 
 
@@ -466,8 +445,9 @@ def simhash_column(text: Column, bits: int = 32) -> Column:
     Computed as a single per-row fold with an array-of-32 accumulator —
     map-only, no explode, no shuffle: the per-document signature never
     leaves the scan stage regardless of corpus size. All lambda
-    references are cheap bound variables (see shingle_hashes note on
-    interpreted higher-order functions).
+    references are cheap bound variables: interpreted higher-order
+    functions re-evaluate an inlined expression at every reference
+    (see ``doc_shingle_sets``).
     """
     powers = F.lit([1 << b for b in range(bits)])
     th = F.transform(tokens(text), token_hash)
@@ -500,7 +480,6 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
                             text_col: str = "text", id_col: str = "doc_id",
-                            cache_sigs: bool = True,
                             cap: Optional[int] = None) -> DataFrame:
     """Pairs with Hamming(simhash) ≤ max_hamming, blocked on 8-bit bands.
 
@@ -514,10 +493,9 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
     capped path the Window with its own exchange. Measured at sf0.1
     with byte-identical pairs: capped 3.0 → 1.95 s, uncapped
     1.60 → 1.44 s vs the old persist-signatures-and-re-explode shape.
-    ``cache_sigs=False`` opts out of any materialization (fully lazy
-    composition). Cluster caveat (same as every localCheckpoint site
-    in this module): the checkpoint truncates lineage to
-    non-replicated executor blocks, so an executor loss during the
+    Cluster caveat (same as every localCheckpoint site in this
+    module): the checkpoint truncates lineage to non-replicated
+    executor blocks, so an executor loss during the
     self-join forces a job re-run rather than a partition recompute.
     The resilient persist(MEMORY_AND_DISK)+count alternative measured
     ~8% slower at sf0.1 (1.72 vs 1.86 s median, round-13 alternating
@@ -545,7 +523,7 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
         "doc_id", "simhash", F.posexplode(band_keys).alias("band", "bkey")
     )
     keys = ["band", "bkey"]
-    if cap is None and cache_sigs:
+    if cap is None:
         # same no-ReusedExchange story as the capped branch below, just
         # a cheaper duplicated subtree (posexplode only): checkpointing
         # the band frame measured 1.60 -> 1.44 s at sf0.1 vs persisting
@@ -591,9 +569,7 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
         )
         b = b.select(
             "doc_id", "simhash", "band", "bkey", salt.alias("salt")
-        )
-        if cache_sigs:
-            b = b.localCheckpoint()
+        ).localCheckpoint()
         keys = ["band", "bkey", "salt"]
     left = b.select(*keys, F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"))
     right = b.select(*keys, F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"))
@@ -642,7 +618,7 @@ def _guard_block_size(docs: DataFrame, block_cols: list[str],
 
 def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str], threshold: float = 0.3,
                         text_col: str = "text", id_col: str = "doc_id",
-                        n: int = 2, cache_sets: bool = True,
+                        n: int = 2,
                         max_block: Optional[int] = 20_000) -> DataFrame:
     """Exact word-n-gram Jaccard over all pairs within a block.
 
@@ -660,9 +636,7 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str], threshold: float
     sets = tok.select(
         *block_cols, "doc_id",
         shingles_from_hashes(F.col("_th"), n).alias("hs"),
-    )
-    if cache_sets:
-        sets = sets.persist()
+    ).persist()
     _guard_block_size(docs, block_cols, max_block, "ngram_jaccard_pairs")
     a = sets.select(*block_cols, F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
     b = sets.select(*block_cols, F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
@@ -964,24 +938,6 @@ def build_line_index(
     _nonempty_lines(docs, text_col, id_col).select(
         F.md5(F.col("__line")).alias("lkey")
     ).distinct().write.mode("overwrite").parquet(_os.path.join(path, "lines"))
-
-
-def append_lines_to_index(
-    accepted: DataFrame,
-    path: str,
-    text_col: str = "clean_text",
-    id_col: str = "doc_id",
-) -> None:
-    """Fold an ACCEPTED batch's surviving lines into the standing
-    index (append-mode digest write — the per-batch index maintenance
-    step of continuous ingestion). Readers take the digest set as a
-    whole, so duplicate digests across appends only cost space until
-    the next compaction rewrite."""
-    import os as _os
-
-    _nonempty_lines(accepted, text_col, id_col).select(
-        F.md5(F.col("__line")).alias("lkey")
-    ).distinct().write.mode("append").parquet(_os.path.join(path, "lines"))
 
 
 def dedup_lines_against_index(

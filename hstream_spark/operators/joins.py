@@ -98,22 +98,6 @@ def interval_join_using(
     return joined
 
 
-def interval_join_natural(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: Column,
-    right_ts: Column,
-    interval_seconds: float,
-    how: str = "inner",
-    exclude: Sequence[str] = (),
-    ts_native: bool = False,
-) -> DataFrame:
-    """LoopJoinNatural — equality on all shared column names
-    (Codegen/V1.hs:342-366)."""
-    shared = [c for c in left.columns if c in set(right.columns) and c not in set(exclude)]
-    return interval_join_using(left, right, shared, left_ts, right_ts, interval_seconds, how, ts_native)
-
-
 def interval_cross_join(
     left: DataFrame,
     right: DataFrame,
@@ -245,16 +229,14 @@ def stream_table_join(
     table: DataFrame,
     on: Sequence[str] | Column,
     how: str = "inner",
-    broadcast_table: bool = True,
 ) -> DataFrame:
     """Stream enriched by table lookup (Stream.hs:314-356 `joinTable`).
 
-    Dimension tables broadcast by default — no shuffle on the (large)
-    stream side; at 100 TB this is the difference between a map-only
-    stage and a full shuffle of the fact stream.
+    The dimension table broadcasts — no shuffle on the (large) stream
+    side; at 100 TB this is the difference between a map-only stage
+    and a full shuffle of the fact stream.
     """
-    t = F.broadcast(table) if broadcast_table else table
-    return stream.join(t, on, how)
+    return stream.join(F.broadcast(table), on, how)
 
 
 def semi_join(left: DataFrame, right: DataFrame, cond: Column,

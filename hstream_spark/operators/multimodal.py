@@ -7,17 +7,13 @@ Design for 100 TB of images/audio/video:
 - per-batch processing through ``mapInPandas`` keeps transfers
   Arrow-columnar and lets a batch hold many payloads (bounded by
   ``spark.sql.execution.arrow.maxRecordsPerBatch``);
-- decode / resize / frame-sample are modality-specific functions
-  plugged into the same batch loop.
+- resize / frame-sample are modality-specific functions plugged into
+  the same batch loop.
 
-The heavy media decoders (PIL/ffmpeg/soundfile) are optional extras:
-``decode_image`` runs a REAL decode when PIL is importable (and raises
-``NotImplementedError`` otherwise); ``decode_audio`` decodes PCM WAV
-with the stdlib ``wave`` module everywhere and uses soundfile for
-other codecs when importable. The default feature extractor computes
-deterministic byte-level features (length, sha256, first-4-bytes int)
-— the Spark-side plumbing (schema, batching, UDF signature) is real
-and oracle-tested regardless of which decoders are present.
+No media decoder ships: the feature extractor computes deterministic
+byte-level features (length, sha256, first-4-bytes int), so the
+Spark-side plumbing (schema, batching, UDF signature) is real and
+oracle-tested without PIL/ffmpeg/soundfile.
 """
 
 from __future__ import annotations
@@ -30,56 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_SCHEMA = "doc_id long, n_bytes long, sha256 string, head_int long"
-
-
-def decode_image(payload: bytes):
-    """Decode an image payload to an HxWx3 uint8 numpy array (RGB).
-
-    Real decode via PIL when importable (optional extra — not in the
-    base environment); raises ``NotImplementedError`` otherwise so
-    callers can gate cleanly."""
-    try:
-        from PIL import Image
-    except ImportError as exc:  # pragma: no cover - env lacks PIL
-        raise NotImplementedError(
-            "image decode requires PIL (optional extra)"
-        ) from exc
-    import io
-
-    import numpy as np
-
-    with Image.open(io.BytesIO(bytes(payload))) as im:
-        return np.asarray(im.convert("RGB"))
-
-
-def decode_audio(payload: bytes):
-    """Decode an audio payload to (samples ndarray, sample_rate).
-
-    PCM WAV decodes everywhere via the stdlib ``wave`` module; other
-    codecs (flac/ogg/...) use soundfile when importable and raise
-    ``NotImplementedError`` otherwise."""
-    import io
-
-    import numpy as np
-
-    raw = bytes(payload)
-    if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-        import wave
-
-        with wave.open(io.BytesIO(raw)) as w:
-            width = w.getsampwidth()
-            dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(width)
-            if dtype is not None:
-                frames = np.frombuffer(w.readframes(w.getnframes()), dtype=dtype)
-                return frames.reshape(-1, w.getnchannels()), w.getframerate()
-    try:
-        import soundfile
-    except ImportError as exc:  # pragma: no cover - env lacks soundfile
-        raise NotImplementedError(
-            "non-WAV audio decode requires soundfile (optional extra)"
-        ) from exc
-    data, rate = soundfile.read(io.BytesIO(raw))
-    return data, rate
 
 
 def _byte_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -169,7 +115,7 @@ def resize_payload(
     (index i ← byte ⌊i·n/out_len⌋) — the 1-D analogue of image
     nearest-neighbor resampling, deterministic so it is oracle-testable.
     A real image resize would decode → interpolate → re-encode inside
-    the same batch loop (see decode_image stub). Map-only."""
+    the same batch loop. Map-only."""
     src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload"))
     return src.mapInPandas(_resizer(out_len), "doc_id long, resized binary")
 

@@ -23,12 +23,6 @@ def scan(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def stream_rename(df: DataFrame, name: str) -> DataFrame:
-    """Stream alias — retags the qualifier (Planner.hs:24); Spark alias
-    keeps it a metadata-only operation."""
-    return df.alias(name)
-
-
 def where(df: DataFrame, predicate: Column) -> DataFrame:
     """Filter (Planner.hs:38). Reference drops rows whose predicate
     *errors* (Codegen/V1.hs:235-240); Spark expressions yield NULL on

@@ -190,7 +190,6 @@ def temperature_sample(
     group_col: str,
     temperature: float = 0.7,
     buckets: int = BUCKETS,
-    rate_col: str | None = None,
 ) -> DataFrame:
     """Temperature-based source rebalancing — the multilingual /
     multi-source training-mix sampler (mT5/XLM-R style): group g with
@@ -238,10 +237,7 @@ def temperature_sample(
     keep = hash_bucket(F.col(key_col), buckets) < F.floor(
         F.col("__rate") * F.lit(float(buckets))
     ).cast("long")
-    out = out.where(keep)
-    if rate_col:
-        return out.withColumnRenamed("__rate", rate_col)
-    return out.drop("__rate")
+    return out.where(keep).drop("__rate")
 
 
 def group_train_test_split(
@@ -347,30 +343,6 @@ def dsir_ratio_table(
         ((target_counts.get(k, 0) + 1) * fp) // (raw_counts.get(k, 0) + 1)
         for k in range(buckets)
     ]
-
-
-def dsir_scores(
-    docs: DataFrame,
-    ratios: list[int],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
-    """Per-doc importance score: Σ over the doc's bigrams of the
-    bucket's fixed-point ratio — one explode → groupBy(doc) int64 sum;
-    the ratio table is an array literal (no join, no shuffle for model
-    access). Docs with < 2 tokens score 0."""
-    lut = F.lit(ratios).cast("array<long>")
-    per_gram = docs.select(
-        F.col(id_col),
-        F.explode_outer(_bigram_buckets(F.col(text_col), buckets)).alias("__b"),
-    ).select(
-        id_col,
-        F.when(
-            F.col("__b").isNull(), F.lit(0).cast("long")
-        ).otherwise(F.element_at(lut, (F.col("__b") + 1).cast("int"))).alias("__r"),
-    )
-    return per_gram.groupBy(id_col).agg(F.sum("__r").alias("dsir_score"))
 
 
 def dsir_select(

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine`` / ``dot``: explicit fold expressions (zip_with +
+- ``dot`` / ``norm``: explicit fold expressions (zip_with +
   aggregate) in double precision — deterministic left-to-right
   summation, reproducible across engines.
 - ``brute_force_topk``: exact top-k neighbors for a set of query
@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hstream_spark.operators.dedup import ceil_div
-from hstream_spark.operators.text import P31
 
 
 def _to_double(arr: Column) -> Column:
@@ -43,10 +42,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(_to_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def normalized(vec: Column) -> Column:
@@ -1282,8 +1277,7 @@ def build_sq_index(
 ) -> None:
     """Materialize an SQ8 index on disk: the uint8 code table as
     parquet plus the per-dimension quantizer (fixed-point min/max) as
-    a tiny JSON sidecar — the same build-once/query-many shape as
-    ``build_ivf_index``/``build_ivf_pq_index``. Queries then read
+    a tiny JSON sidecar, built once and queried many times. Queries then read
     dim bytes per row instead of dim floats (4× scan cut) and skip
     the train + encode passes entirely; at 100 TB the one-time encode
     amortizes across every future query batch."""
@@ -1414,113 +1408,14 @@ def sq_adc_topk_np(
 
 
 # ---------------------------------------------------------------------------
-# Persistent IVF index (build once, query many)
-# ---------------------------------------------------------------------------
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_clusters: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize an IVF index on disk: the corpus written
-    cluster-PARTITIONED (one directory per inverted list) plus the
-    quantizer as a tiny JSON sidecar.
-
-    This converts every subsequent query from a full-corpus scan into
-    a PARTITION-PRUNED read of nprobe/n_clusters of the data — at
-    100 TB the probe cost is bounded by list size, not corpus size,
-    and the pruning happens in the parquet scan (no shuffle, no
-    filter evaluation over skipped lists). Amortizes the one-time
-    assignment shuffle across every future query.
-    """
-    import json as _json
-    import os as _os
-
-    cents = train_ivf_quantizer(corpus, n_clusters, id_col, vec_col)
-    assigned = kmeans_assign(corpus, cents, id_col, vec_col).select(
-        id_col, "cluster"
-    )
-    vecs = corpus.join(assigned, id_col)
-    vecs.write.mode("overwrite").partitionBy("cluster").parquet(
-        _os.path.join(path, "vectors")
-    )
-    with open(_os.path.join(path, "quantizer.json"), "w") as f:
-        _json.dump([[cl, cv] for cl, cv in cents], f)
-
-
-def ivf_index_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a persisted IVF index: pick each query's ``nprobe``
-    nearest centroids (map-only against the JSON quantizer), then scan
-    ONLY those cluster partitions (`cluster IN (...)` reaches the scan
-    as a partition filter) and rank candidates."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import Window
-
-    with open(_os.path.join(path, "quantizer.json")) as f:
-        cents = [(int(cl), [float(x) for x in cv]) for cl, cv in _json.load(f)]
-
-    cent_lit = F.lit([cv for _, cv in cents])
-    ids_lit = F.lit([cl for cl, _ in cents])
-    qn = queries.select(
-        F.col(id_col).alias("q_id"), normalized(F.col(vec_col)).alias("q_vec")
-    )
-    scored_cents = F.zip_with(
-        F.transform(cent_lit, lambda c: dot(F.col("q_vec"), c)),
-        ids_lit,
-        lambda c, i: F.struct(c.alias("c"), i.alias("cl")),
-    )
-    probes = F.slice(F.reverse(F.array_sort(scored_cents)), 1, nprobe)
-    q = qn.withColumn(
-        "cluster", F.explode(F.transform(probes, lambda s: s["cl"]))
-    )
-    # distinct probe set, collected driver-side (tiny: <= queries×nprobe)
-    # so the IN-list lands in the scan as a partition filter
-    probe_ids = sorted(
-        {r["cluster"] for r in q.select("cluster").distinct().collect()}
-    )
-    vecs = (
-        spark.read.parquet(_os.path.join(path, "vectors"))
-        .filter(F.col("cluster").isin(probe_ids))
-        .select(
-            F.col("cluster"),
-            F.col(id_col).alias("c_id"),
-            normalized(F.col(vec_col)).alias("c_vec"),
-        )
-    )
-    cand = q.join(vecs, "cluster").filter(F.col("q_id") != F.col("c_id"))
-    scored = cand.select(
-        "q_id", "c_id", dot(F.col("q_vec"), F.col("c_vec")).alias("cos")
-    ).groupBy("q_id", "c_id").agg(F.max("cos").alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cos", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ's compression half: FAISS-style m×ks codes)
+# Product quantization (FAISS-style m×ks codes)
 # ---------------------------------------------------------------------------
 
 
 def pq_seed_codebooks(dim: int, m: int = 8, ks: int = 16) -> list[list[list[float]]]:
     """Deterministic md5-derived PQ codebooks (``m`` subspaces ×
-    ``ks`` centroids × dim/m) — the reproducible seed for ``pq_train``
-    and the fixture the SQL oracle can embed verbatim."""
+    ``ks`` centroids × dim/m) — the fixture the SQL oracle can embed
+    verbatim."""
     import hashlib
 
     if dim % m:
@@ -1585,92 +1480,6 @@ def pq_encode(
 
     codes = F.transform(F.sequence(F.lit(0), F.lit(m - 1)), code_for)
     return corpus.select(F.col(id_col), codes.alias("codes"))
-
-
-def pq_train(
-    corpus: DataFrame,
-    m: int = 8,
-    ks: int = 16,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[list[float]]]:
-    """Train PQ codebooks with Lloyd iterations over ALL subspaces in
-    one distributed pass per iteration: explode each vector into its m
-    subvectors once (same data volume — m arrays of dim/m), assign
-    each to its nearest centroid map-side (nested codebook literal),
-    and update with a (sub, code, pos) hash-agg whose shuffle volume is
-    O(partitions × m × ks × dim/m) partial sums, independent of corpus
-    size. Only the model (m×ks×dim/m floats) returns to the driver per
-    iteration — the same driver-holds-model shape as ``kmeans_fit``.
-
-    Deterministic: data-seeded start (ks lowest-id vectors; md5 seed
-    when the corpus is smaller), decimal per-dimension sums, ties
-    toward the lowest code; empty cells keep their previous centroid.
-    """
-    dim_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = int(dim_row["d"])
-    dsub = dim // m
-    # data-seeded start (deterministic: the ks lowest-id vectors seed
-    # every subspace) -- random-cube seeds waste centroids on empty
-    # regions when the data lives on a manifold (e.g. unit sphere)
-    seed_rows = (
-        corpus.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
-        .orderBy(id_col)
-        .limit(ks)
-        .collect()
-    )
-    if len(seed_rows) >= ks:
-        books = [
-            [list(r["v"][s * dsub : (s + 1) * dsub]) for r in seed_rows]
-            for s in range(m)
-        ]
-    else:
-        books = pq_seed_codebooks(dim, m, ks)
-    vec = _to_double(F.col(vec_col))
-    subs = corpus.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("sub"), F.slice(vec, s * dsub + 1, dsub).alias("sv")
-                ),
-            )
-        ).alias("x")
-    ).select(F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv"))
-    for _ in range(iters):
-        cb_lit = F.lit(books)
-        cands = F.transform(
-            F.element_at(cb_lit, F.col("sub") + 1),
-            lambda c, i: F.struct(_l2sq(F.col("sv"), c).alias("d"), i.alias("code")),
-        )
-        assigned = subs.withColumn("code", F.array_min(cands)["code"])
-        per_dim = (
-            assigned.select("sub", "code", F.posexplode("sv").alias("pos", "v"))
-            .groupBy("sub", "code", "pos")
-            .agg(
-                (
-                    F.sum(F.col("v").cast("decimal(27,12)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("cv")
-            )
-        )
-        rows = (
-            per_dim.groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("cvec")
-            )
-            .collect()
-        )
-        updated = {(r["sub"], r["code"]): list(r["cvec"]) for r in rows}
-        books = [
-            [updated.get((s, c), books[s][c]) for c in range(ks)]
-            for s in range(m)
-        ]
-    return books
 
 
 def pq_adc_topk(
@@ -1750,165 +1559,6 @@ def pq_adc_topk(
         .filter(F.col("rank") <= k)
         # rank on full precision; emit rounded (cross-engine list_sum
         # accumulation differs in the last ulp)
-        .select("q_id", "c_id", F.round("adist", 6).alias("adist"), "rank")
-    )
-
-
-
-def build_ivf_pq_index(
-    corpus: DataFrame,
-    path: str,
-    n_clusters: int = 8,
-    m: int = 8,
-    ks: int = 16,
-    train_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize a FAISS-style IVF-PQ index: the coarse quantizer
-    partitions the corpus into inverted lists on disk (directory
-    pruning at query time, as ``build_ivf_index``) and each list row
-    stores the PQ CODES — m small ints — instead of the float vector.
-    The index is both pruned (read nprobe/n_clusters of the rows) and
-    ~64× smaller per row (read codes, not vectors): the layout that
-    serves billion-vector ANN from object storage.
-
-    PQ codebooks train on the RESIDUAL-free vectors (plain per-vector
-    PQ — residual encoding would couple the codebooks to the coarse
-    quantizer; kept orthogonal here) and persist in the JSON sidecar
-    next to the coarse centroids.
-    """
-    import json as _json
-    import os as _os
-
-    cents = train_ivf_quantizer(corpus, n_clusters, id_col, vec_col)
-    books = pq_train(corpus, m=m, ks=ks, iters=train_iters,
-                     vec_col=vec_col, id_col=id_col)
-    assigned = kmeans_assign(corpus, cents, id_col, vec_col).select(
-        id_col, "cluster"
-    )
-    coded = pq_encode(corpus, books, id_col, vec_col)
-    rows = coded.join(assigned, id_col)
-    rows.write.mode("overwrite").partitionBy("cluster").parquet(
-        _os.path.join(path, "codes")
-    )
-    with open(_os.path.join(path, "quantizer.json"), "w") as f:
-        _json.dump([[cl, cv] for cl, cv in cents], f)
-    with open(_os.path.join(path, "codebooks.json"), "w") as f:
-        _json.dump(books, f)
-
-
-def ivf_pq_index_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 100_000,
-) -> DataFrame:
-    """Query a persisted IVF-PQ index: pick each query's ``nprobe``
-    nearest coarse centroids (map-only against the JSON quantizer),
-    scan ONLY those list partitions — and only their CODE columns —
-    then ADC-rank the candidates with per-query distance tables.
-    Per-query cost: nprobe/n_clusters of the rows × m byte-lookups.
-
-    The query side is collected once to the driver (probe lists +
-    distance tables), capped at ``max_queries`` with a loud error —
-    same contract as pq_adc_topk."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "quantizer.json")) as f:
-        cents = [(int(cl), [float(x) for x in cv]) for cl, cv in _json.load(f)]
-    with open(_os.path.join(path, "codebooks.json")) as f:
-        books = [[[float(x) for x in c] for c in sub] for sub in _json.load(f)]
-
-    cent_lit = F.lit([cv for _, cv in cents])
-    ids_lit = F.lit([cl for cl, _ in cents])
-    qn = queries.select(
-        F.col(id_col), F.col(vec_col), normalized(F.col(vec_col)).alias("q_vec")
-    )
-    scored_cents = F.zip_with(
-        F.transform(cent_lit, lambda c: dot(F.col("q_vec"), c)),
-        ids_lit,
-        lambda c, i: F.struct(c.alias("c"), i.alias("cl")),
-    )
-    probes = F.slice(F.reverse(F.array_sort(scored_cents)), 1, nprobe)
-    qp = qn.withColumn("probe", F.transform(probes, lambda s: s["cl"]))
-    # ONE capped collect feeds both the probe list and the per-query
-    # distance tables (an unguarded double collect OOMs the driver on an
-    # oversized query side instead of failing cleanly)
-    qrows = (
-        qp.select(F.col(id_col), F.col(vec_col), "probe")
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_pq_index_topk: query side exceeds max_queries={max_queries} "
-            "rows; probe lists and ADC distance tables are driver-built by "
-            "contract. Pass a smaller query set (or raise max_queries "
-            "deliberately)."
-        )
-    probe_ids = sorted({cl for r in qrows for cl in r["probe"]})
-    codes = (
-        spark.read.parquet(_os.path.join(path, "codes"))
-        .filter(F.col("cluster").isin(probe_ids))
-        .select(F.col(id_col), "codes", "cluster")
-    )
-    # per-query candidate set = its probed clusters only; reuse the ADC
-    # kernel per probe-restricted pair via an explicit cluster join
-    q_clusters = qp.select(
-        F.col(id_col), F.col(vec_col), F.explode("probe").alias("cluster")
-    )
-    pairs = q_clusters.alias("q").join(
-        codes.alias("c"), "cluster"
-    ).filter(F.col(f"q.{id_col}") != F.col(f"c.{id_col}"))
-    m = len(books)
-    dsub = len(books[0][0])
-
-    def dtable(vec):
-        out = []
-        for s in range(m):
-            sub = vec[s * dsub : (s + 1) * dsub]
-            row = []
-            for c in books[s]:
-                acc = 0.0
-                for x, y in zip(sub, c):
-                    d = float(x) - y
-                    acc += d * d
-                row.append(acc)
-            out.append(row)
-        return out
-
-    dt = F.broadcast(
-        spark.createDataFrame(
-            [(int(r[0]), dtable(list(r[1]))) for r in qrows],
-            f"{id_col} long, dtab array<array<double>>",
-        ).withColumnRenamed(id_col, "q_id")
-    )
-    cand = pairs.select(
-        F.col(f"q.{id_col}").alias("q_id"),
-        F.col(f"c.{id_col}").alias("c_id"),
-        F.col("c.codes").alias("codes"),
-    ).join(dt, "q_id")
-    contrib = F.zip_with(
-        F.col("dtab"), F.col("codes"), lambda row, c: F.element_at(row, c + 1)
-    )
-    scored = (
-        cand.select(
-            "q_id", "c_id",
-            F.aggregate(contrib, F.lit(0.0), lambda a, x: a + x).alias("adist"),
-        )
-        .groupBy("q_id", "c_id")
-        .agg(F.min("adist").alias("adist"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
         .select("q_id", "c_id", F.round("adist", 6).alias("adist"), "rank")
     )
 

@@ -202,18 +202,13 @@ C4_SPAM_WORDS = ("viagra", "casino", "clickbait")
 _C4_TERMINAL = '[.!?"”]$'
 
 
-def c4_rules(
-    text: Column,
-    *,
-    min_words_per_line: int = 5,
-    min_sentences: int = 3,
-    require_terminal_punct: bool = True,
-    bad_phrases: tuple[str, ...] = C4_BAD_PHRASES,
-    bad_words: tuple[str, ...] = C4_SPAM_WORDS,
-) -> dict[str, Column]:
-    """C4 cleaning heuristics (Raffel et al. 2020, "Exploring the
-    Limits of Transfer Learning...", §2.2 — the other canonical public
-    filter suite next to Gopher's). Two layers, both returned:
+def c4_filter(
+    docs,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    **kw,
+) -> "DataFrame":
+    """C4 cleaning heuristics (Raffel et al. 2020, §2.2) per document.
 
     LINE filter — a line is retained only if it (a) ends in terminal
     punctuation (``. ! ?`` or a closing quote), (b) has at least
@@ -222,73 +217,13 @@ def c4_rules(
     from the retained lines (newline-joined, order preserved);
     ``n_lines`` / ``n_kept_lines`` are the before/after counts.
 
-    PAGE rules — boolean per rule plus the ``keep`` conjunction:
+    PAGE rules — one boolean per rule plus the ``keep`` conjunction:
+    ``r_min_sentences`` (the CLEANED page has ≥ ``min_sentences``
+    terminal marks), ``r_no_lorem``, ``r_no_braces`` (no ``{``),
+    ``r_no_policy`` (none of ``bad_phrases`` except lorem ipsum, which
+    has its own rule; vacuously true when nothing else is listed) and
+    ``r_no_badwords`` (no token in the ``bad_words`` blocklist).
 
-    - ``r_min_sentences``: the CLEANED page has ≥ ``min_sentences``
-      sentences (terminal-mark count — the paper's 3-sentence floor)
-    - ``r_no_lorem``: no "lorem ipsum"
-    - ``r_no_braces``: no ``{`` (code markers)
-    - ``r_no_policy``: none of the policy/boilerplate phrases
-      (``C4_BAD_PHRASES`` minus lorem, which gets its own rule)
-    - ``r_no_badwords``: no token matches the blocklist
-
-    Every predicate is an integer/boolean Catalyst expression —
-    map-only, no shuffle, no UDF, byte-exact under any engine's
-    replay (the catalog oracle re-runs the identical rules in DuckDB).
-    100 TB: embarrassingly parallel, whole-stage codegen.
-    """
-    lines = F.split(text, r"\n")
-    conds = [
-        lambda ln: F.size(F.split(F.trim(ln), r"\s+"))
-        >= min_words_per_line,
-        lambda ln: ~F.lower(ln).contains("javascript"),
-    ]
-    if require_terminal_punct:
-        conds.insert(0, lambda ln: F.rtrim(ln).rlike(_C4_TERMINAL))
-    kept = F.filter(
-        lines, lambda ln: _reduce(lambda a, c: a & c(ln), conds[1:], conds[0](ln))
-    )
-    clean = F.array_join(kept, "\n")
-    n_sentences = F.length(clean) - F.length(
-        F.regexp_replace(clean, "[.!?]", "")
-    )
-    low = F.lower(text)
-    toks_low = F.array_distinct(F.transform(tokens(low), F.lower))
-    policy = [p for p in bad_phrases if p != "lorem ipsum"]
-    rules: dict[str, Column] = {
-        "n_lines": F.size(lines),
-        "n_kept_lines": F.size(kept),
-        "clean": clean,
-        "r_min_sentences": n_sentences >= min_sentences,
-        "r_no_lorem": ~low.contains("lorem ipsum"),
-        "r_no_braces": ~text.contains("{"),
-        # vacuously true when the caller's phrase list leaves nothing
-        # beyond the dedicated lorem-ipsum rule
-        "r_no_policy": _reduce(
-            lambda a, p: a & ~low.contains(p), policy, F.lit(True)
-        ),
-        "r_no_badwords": F.size(
-            F.array_intersect(toks_low, F.lit(list(bad_words)))
-        )
-        == 0,
-    }
-    keep = None
-    for name in (
-        "r_min_sentences", "r_no_lorem", "r_no_braces",
-        "r_no_policy", "r_no_badwords",
-    ):
-        keep = rules[name] if keep is None else keep & rules[name]
-    rules["keep"] = keep
-    return rules
-
-
-def c4_filter(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **kw,
-) -> "DataFrame":
-    """DataFrame-level C4 pass — same semantics as ``c4_rules`` but
     STAGED so the expensive intermediates (the retained-line array, the
     rebuilt page, the lowercased text) each evaluate once: higher-order
     functions are interpreted without common-subexpression elimination,
@@ -651,14 +586,6 @@ def _lang_scores_from(toks: Column) -> dict[str, Column]:
     return out
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Per-language marker-token counts (the n-gram heuristic's
-    evidence). Each score re-tokenizes; prefer ``lang_id`` (which binds
-    the token array once) or hoist ``tokens(lower(text))`` to a column
-    when consuming several scores."""
-    return _lang_scores_from(tokens(F.lower(text)))
-
-
 def lang_id(text: Column) -> Column:
     """Predicted language = argmax marker count, ties broken by language
     code ascending ('und' when no marker hits at all).
@@ -696,18 +623,6 @@ def ngrams(text: Column, n: int) -> Column:
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def dup_ngram_fraction(text: Column, n: int = 2) -> Column:
-    """Repetition signal: fraction of n-grams that are repeats of an
-    earlier n-gram (1 - distinct/total). High values indicate boilerplate
-    or degenerate machine text. Map-only."""
-    g = ngrams(text, n)
-    total = F.size(g)
-    return F.when(
-        total > 0,
-        F.lit(1.0) - F.size(F.array_distinct(g)).cast("double") / total.cast("double"),
-    ).otherwise(F.lit(0.0))
 
 
 def repetition_signals(df, text_col: str = "text", id_col: str = "doc_id",
@@ -771,24 +686,6 @@ def repetition_signals(df, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
-def top_ngram_fraction(text: Column, n: int = 2) -> Column:
-    """Repetition signal: share of all n-grams taken by the single most
-    frequent one. Pure expression — O(distinct·total) per document; only
-    for short texts. For corpus-scale scans use `repetition_signals`
-    (explode→groupBy, linear per doc)."""
-    g = ngrams(text, n)
-    total = F.size(g)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(g),
-            lambda b: F.size(F.filter(g, lambda x: x == b)),
-        )
-    )
-    return F.when(
-        total > 0, top.cast("double") / total.cast("double")
-    ).otherwise(F.lit(0.0))
-
-
 # PII detection patterns — deliberately simple syntax that means the same
 # thing in Java regex (Spark) and RE2 (DuckDB), so the oracle can verify
 # the counts bit-for-bit.
@@ -845,19 +742,6 @@ def decontaminate(train, eval_set, text_col: str = "text", id_col: str = "doc_id
         (F.coalesce(F.sum("__hit"), F.lit(0)).cast("double")
          / F.count(F.lit(1)).cast("double")).alias("contamination_frac"),
     )
-
-
-def _bit(col: Column, b: int) -> Column:
-    return F.shiftright(col, b).bitwiseAND(F.lit(1))
-
-
-def simhash_bits() -> int:
-    return 32
-
-
-def simhash_weights(text: Column) -> Column:
-    """Token-hash array used by the SimHash aggregation (see dedup.simhash)."""
-    return F.transform(tokens(text), token_hash)
 
 
 def boilerplate_signals(

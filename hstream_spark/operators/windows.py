@@ -107,14 +107,3 @@ def sliding(
     for name, agg in aggs.items():
         out = out.withColumn(name, agg.over(spec))
     return out
-
-
-def with_window_bounds(df: DataFrame, unit: str = "second") -> DataFrame:
-    """Expose window start/end like the reference serializes them into the
-    sink key (Codegen/V1.hs:420-456): as epoch numbers, stable across TZ."""
-    factor = {"second": 1, "millisecond": 1000}[unit]
-    return df.select(
-        (F.unix_timestamp(F.col("window.start")) * factor).alias("window_start"),
-        (F.unix_timestamp(F.col("window.end")) * factor).alias("window_end"),
-        *[c for c in df.columns if c != "window"],
-    )

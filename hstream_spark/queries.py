@@ -3019,7 +3019,7 @@ def q_c4_quality_filters(spark, sf):
     boilerplate, token blocklist). One map-only projection over the
     pagified corpus; every predicate is a boolean Catalyst expression
     the oracle replays verbatim. 100 TB: embarrassingly parallel, no
-    shuffle, whole-stage codegen (operators/text.py c4_rules)."""
+    shuffle, whole-stage codegen (operators/text.py c4_filter)."""
     from hstream_spark.sources.tables import spread
 
     paged = _pagify(spread(load_table(spark, sf, "documents")))

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import logging
+import threading
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -137,18 +138,69 @@ def jdbc_source(spark: SparkSession, options: dict) -> DataFrame:
         raise ConnectorError(f"jdbc source failed (driver jar on classpath?): {exc}") from exc
 
 
-class _WatermarkTailer:
-    """Watermark-column polling shared by the CDC tailers: each
-    ``poll()`` fetches the rows past the high-water mark ``last``,
-    emits them and advances ``last``.
+class _Tailer:
+    """Background polling lifecycle shared by every ingestion tailer.
 
-    ``poll_failures`` counts polls that raised (the background loop
-    logs them and retries next interval) and ``last_error`` describes
-    the latest. ``start()`` spawns a daemon polling thread; ``stop()``
-    matches the StreamingQuery handle shape so engine PAUSE/TERMINATE/
-    shutdown manage it uniformly."""
+    ``poll()`` runs one ``_poll_once()`` and returns the rows it
+    appended; a poll that raises is counted in ``poll_failures`` and
+    described in ``last_error``. ``start()`` spawns a daemon thread
+    that polls every ``poll_interval`` seconds, logging a failed poll
+    and retrying next interval; ``stop()`` ends it. The shape matches
+    the StreamingQuery handle so engine PAUSE/TERMINATE/shutdown
+    manage every tailer uniformly."""
 
     _name: str  # polling thread and log name
+
+    def __init__(self, poll_interval: float):
+        self.poll_interval = float(poll_interval)
+        self.poll_failures = 0
+        self.last_error: Optional[str] = None
+        self._stop = threading.Event()
+        self._thread: Optional[threading.Thread] = None
+
+    def _poll_once(self) -> int:
+        raise NotImplementedError
+
+    def poll(self) -> int:
+        try:
+            return self._poll_once()
+        except Exception as exc:
+            self.poll_failures += 1
+            self.last_error = f"{type(exc).__name__}: {exc}"
+            raise
+
+    def _after_failed_poll(self) -> None:
+        """Runs on the background thread after a poll raised."""
+
+    def _loop(self) -> None:
+        while not self._stop.wait(self.poll_interval):
+            try:
+                self.poll()
+            except Exception:  # noqa: BLE001 — counted by poll(); retry
+                _LOG.exception("%s poll failed; retrying next interval",
+                               self._name)
+                self._after_failed_poll()
+
+    def start(self) -> "_Tailer":
+        if self._thread is None:
+            self._thread = threading.Thread(
+                target=self._loop, name=self._name, daemon=True
+            )
+            self._thread.start()
+        return self
+
+    def stop(self) -> None:
+        self._stop.set()
+        if self._thread is not None:
+            self._thread.join(timeout=30)
+            self._thread = None
+
+
+class _WatermarkTailer(_Tailer):
+    """Watermark-column polling shared by the CDC tailers: each
+    ``poll()`` fetches the rows past the high-water mark ``last``,
+    emits them and advances ``last``."""
+
     _row = "row"  # what one source record is called in errors
     _columns = "columns"
 
@@ -161,33 +213,17 @@ class _WatermarkTailer:
         last=None,
         poll_interval: float = 5.0,
     ):
-        import threading
-
+        super().__init__(poll_interval)
         self.spark = spark
         self.options = dict(options)
         self.emit = emit
         self.watermark_col = watermark_col
         self.last = last
-        self.poll_interval = float(poll_interval)
-        self.poll_failures = 0
-        self.last_error: Optional[str] = None
-        self._stop = threading.Event()
-        self._thread: Optional[threading.Thread] = None
-        self._threading = threading
 
     def _fetch(self) -> Optional[DataFrame]:
         """The source rows past ``last`` (all rows while ``last`` is
         None); None when the source reports none."""
         raise NotImplementedError
-
-    def poll(self) -> int:
-        """One incremental read; returns rows appended."""
-        try:
-            return self._poll_once()
-        except Exception as exc:
-            self.poll_failures += 1
-            self.last_error = f"{type(exc).__name__}: {exc}"
-            raise
 
     def _poll_once(self) -> int:
         inc = self._fetch()
@@ -220,28 +256,6 @@ class _WatermarkTailer:
             return int(agg["n"])
         finally:
             inc.unpersist()
-
-    def _loop(self) -> None:
-        while not self._stop.wait(self.poll_interval):
-            try:
-                self.poll()
-            except Exception:  # noqa: BLE001 — counted by poll(); retry
-                _LOG.exception("%s poll failed; retrying next interval",
-                               self._name)
-
-    def start(self) -> "_WatermarkTailer":
-        if self._thread is None:
-            self._thread = self._threading.Thread(
-                target=self._loop, name=self._name, daemon=True
-            )
-            self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=30)
-            self._thread = None
 
 
 class JdbcCdcTailer(_WatermarkTailer):
@@ -291,13 +305,6 @@ def blackhole_sink() -> SinkFn:
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").format("noop").save()
-
-    return write
-
-
-def parquet_dir_sink(path: str) -> SinkFn:
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("append").parquet(path)
 
     return write
 
@@ -887,7 +894,7 @@ def kafka_sink(options: dict) -> SinkFn:
     return write
 
 
-class KafkaIngestTailer:
+class KafkaIngestTailer(_Tailer):
     """Continuous Kafka → stream ingestion over the wire-protocol client
     — the engine half of the reference's Kafka-compatible surface
     (/root/reference/hstream-kafka/): a stream declared ``WITH
@@ -917,9 +924,11 @@ class KafkaIngestTailer:
     slow pollers aren't evicted between polls.
 
     ``poll_failures`` counts polls that raised (the background loop
-    logs them and retries next interval), ``offset_resets`` counts
-    out-of-range auto-resets (records lost to retention), and
-    ``last_error`` describes the latest of either."""
+    logs them, closes the client and retries next interval),
+    ``offset_resets`` counts out-of-range auto-resets (records lost to
+    retention), and ``last_error`` describes the latest of either."""
+
+    _name = "kafka-ingest-tailer"
 
     def __init__(
         self,
@@ -934,8 +943,6 @@ class KafkaIngestTailer:
         coordinated: bool = False,
         client_options: Optional[dict] = None,
     ):
-        import threading
-
         if coordinated and not group_id:
             raise ConnectorError(
                 "coordinated tailing requires a consumer group_id"
@@ -957,7 +964,7 @@ class KafkaIngestTailer:
         self.topic = topic
         self.emit = emit
         self.offsets_path = offsets_path
-        self.poll_interval = float(poll_interval)
+        super().__init__(poll_interval)
         self.max_batch_bytes = int(max_batch_bytes)
         self.starting = starting
         self.group_id = group_id
@@ -978,12 +985,7 @@ class KafkaIngestTailer:
             except (OSError, ValueError):
                 self.offsets = {}
         self._client = None
-        self._stop = threading.Event()
-        self._thread = None
-        self._threading = threading
-        self.poll_failures = 0
         self.offset_resets = 0
-        self.last_error: Optional[str] = None
         # poll() runs on BOTH the background _loop thread and the
         # engine's synchronous read-your-writes path (INSERT through
         # the topic); without mutual exclusion both can fetch the same
@@ -1000,7 +1002,6 @@ class KafkaIngestTailer:
             # a real broker holds the JoinGroup barrier until a dead
             # member's session expires, and if the socket read loses
             # that race the dance spins on transport errors
-            # (join_group's documented hazard)
             self._client = KafkaClient(
                 self.bootstrap,
                 timeout=max(30.0, self.session_timeout_ms / 1000.0 + 15.0),
@@ -1074,12 +1075,7 @@ class KafkaIngestTailer:
         run requires the fetch→emit→commit cycle to be atomic across
         callers)."""
         with self._poll_lock:
-            try:
-                return self._poll_locked()
-            except Exception as exc:
-                self.poll_failures += 1
-                self.last_error = f"{type(exc).__name__}: {exc}"
-                raise
+            return super().poll()
 
     def _ensure_membership(self, client) -> list[int]:
         """Coordinated mode: keep a live consumer-group membership and
@@ -1115,7 +1111,7 @@ class KafkaIngestTailer:
         )
         return assigned
 
-    def _poll_locked(self) -> int:
+    def _poll_once(self) -> int:
         from hstream_spark.sources.kafka_wire import EARLIEST, LATEST
 
         client = self._get_client()
@@ -1313,30 +1309,15 @@ class KafkaIngestTailer:
             }
         return out
 
-    def _loop(self) -> None:
-        while not self._stop.wait(self.poll_interval):
-            try:
-                self.poll()
-            except Exception:  # noqa: BLE001 — counted by poll(); retry
-                _LOG.exception("kafka tailer poll failed; retrying next interval")
-                with self._poll_lock:
-                    if self._client is not None:
-                        self._client.close()
-                        self._client = None
-
-    def start(self) -> "KafkaIngestTailer":
-        if self._thread is None:
-            self._thread = self._threading.Thread(
-                target=self._loop, name="kafka-ingest-tailer", daemon=True
-            )
-            self._thread.start()
-        return self
+    def _after_failed_poll(self) -> None:
+        # a failed poll may leave the connection mid-response: reconnect
+        with self._poll_lock:
+            if self._client is not None:
+                self._client.close()
+                self._client = None
 
     def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=30)
-            self._thread = None
+        super().stop()
         with self._poll_lock:
             if self._membership is not None and self._client is not None:
                 try:

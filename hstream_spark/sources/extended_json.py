@@ -30,8 +30,7 @@ the map lookups).
 The reference REJECTS malformed wrappers at ingestion (RefineException,
 Old.hs:171-198). A distributed scan cannot throw per-row without
 killing the job, so malformed wrappers decode to NULL — the standard
-PERMISSIVE-mode trade; ``ej_errors`` surfaces them for a dead-letter
-stream.
+PERMISSIVE-mode trade.
 """
 
 from __future__ import annotations
@@ -41,17 +40,6 @@ from typing import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# logical type name (matches the DDL type map in streaming/runtime.py)
-# -> wrapper key in the wire format
-_WRAP_KEY = {
-    "INTEGER": "$numberLong",
-    "FLOAT": "$numberDouble",
-    "DATE": "$date",
-    "TIME": "$time",
-    "TIMESTAMP": "$timestamp",
-    "INTERVAL": "$interval",
-}
 
 
 def _wrapped(raw: Column, key: str) -> Column:
@@ -150,26 +138,6 @@ def decode_record(
             raise ValueError(f"unknown logical type {ltype!r} for field {name!r}")
         cols.append(DECODERS[ltype](raw[name]).alias(name))
     return df.select(*cols)
-
-
-def ej_errors(df: DataFrame, payload_col: str, fields: Mapping[str, str]) -> DataFrame:
-    """Rows whose wrapper fields are present but undecodable — the
-    dead-letter stream for the reference's RefineException cases
-    (Old.hs:171-198): wrapper key present but its value doesn't parse."""
-    raw = F.from_json(F.col(payload_col), "map<string,string>")
-    conds = []
-    for name, ltype in fields.items():
-        key = _WRAP_KEY.get(ltype)
-        if key is None:
-            continue
-        txt = _wrapped(raw[name], key)
-        conds.append(txt.isNotNull() & DECODERS[ltype](raw[name]).isNull())
-    if not conds:
-        return df.limit(0)
-    pred = conds[0]
-    for c in conds[1:]:
-        pred = pred | c
-    return df.filter(pred)
 
 
 # ---------------------------------------------------------------------------

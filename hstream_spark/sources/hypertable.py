@@ -26,7 +26,7 @@ import os
 import shutil
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CHUNK_COL = "dt"
@@ -49,20 +49,6 @@ def write_time_partitioned(
         .mode(mode)
         .parquet(path)
     )
-
-
-def read_time_range(
-    spark: SparkSession, path: str, lo: str | None = None, hi: str | None = None
-) -> DataFrame:
-    """Scan a hypertable with chunk pruning: ``lo``/``hi`` are chunk
-    strings (inclusive); the comparison is on the partition column, so
-    it prunes directories, not rows."""
-    df = spark.read.parquet(path)
-    if lo is not None:
-        df = df.filter(F.col(CHUNK_COL) >= lo)
-    if hi is not None:
-        df = df.filter(F.col(CHUNK_COL) <= hi)
-    return df
 
 
 def chunks(path: str) -> list[str]:

@@ -31,12 +31,6 @@ class _PartitionLog:
         self.next_offset = 0
         self.log_start = 0  # first retained offset (advances on truncation)
 
-    def truncate_before(self, offset: int) -> None:
-        """Retention: drop batches entirely below ``offset`` — fetches
-        below the new log start answer OFFSET_OUT_OF_RANGE like a real
-        broker whose segments aged out."""
-        self.batches = [b for b in self.batches if b[1] >= offset]
-        self.log_start = min(offset, self.next_offset)
 
     def append(self, record_set: bytes) -> int:
         records = W.decode_record_batches(record_set)  # validates CRC (+codec)

@@ -40,15 +40,13 @@ Scope (all from the public Kafka protocol specification):
   warning stub — Handler/Produce.hs:143-155); single-leader
   topologies are resolved via Metadata.
 
-On a real Spark cluster the idiomatic path is the official
-``spark-sql-kafka-0-10`` connector (``readStream.format("kafka")``) —
-see ``kafka_readstream``; this wire client is the jar-free local path
-and the integration-test substrate (``kafka_stub.KafkaStubBroker``).
+This wire client is the engine's jar-free Kafka path (streams ingest
+through ``connectors.KafkaIngestTailer``) and the integration-test
+substrate (``kafka_stub.KafkaStubBroker``).
 """
 
 from __future__ import annotations
 
-import os
 import socket
 import struct
 import threading
@@ -971,16 +969,6 @@ class KafkaClient:
 
     # -- APIs --------------------------------------------------------------
 
-    def api_versions(self) -> dict[int, tuple[int, int]]:
-        r = self._call(API_VERSIONS, 0, b"")
-        err = r.int16()
-        if err:
-            raise KafkaWireError(f"ApiVersions error {err}")
-        out = {}
-        for _ in range(r.int32()):
-            k, lo, hi = r.int16(), r.int16(), r.int16()
-            out[k] = (lo, hi)
-        return out
 
     def metadata(self, topics: Optional[list[str]] = None) -> dict:
         body = (
@@ -1180,28 +1168,6 @@ class KafkaClient:
                     out[pid] = off
         return out
 
-    def join_group(self, group: str, topics: list[str],
-                   member_id: str = "",
-                   session_timeout_ms: int = 10000) -> dict:
-        """JoinGroup v0 with the standard 'consumer'/'range' protocol.
-        Returns {generation, member_id, leader, members} — ``members``
-        (member_id → subscribed topics) is populated only for the
-        elected leader, which then computes the assignment.
-
-        ``session_timeout_ms`` defaults BELOW the client's 30 s socket
-        timeout: a real broker can hold the join barrier open until a
-        dead member's session expires, and the request must outlive
-        that wait (equal timeouts make the socket read lose the race
-        and the dance spin on transport errors)."""
-        err, res = self._join_group_raw(
-            group, topics, member_id, session_timeout_ms
-        )
-        if err:
-            self._coordinators.pop(group, None)
-            raise KafkaWireError(
-                f"JoinGroup error code {err} for group {group!r}"
-            )
-        return res
 
     def _join_group_raw(self, group: str, topics: list[str],
                         member_id: str,
@@ -1255,18 +1221,6 @@ class KafkaClient:
         err = r.int16()
         return err, (r.bytes_() or b"") if not err else b""
 
-    def sync_group(self, group: str, generation: int, member_id: str,
-                   assignments: Optional[dict[str, bytes]] = None) -> bytes:
-        """SyncGroup v0: the leader submits everyone's assignment blobs;
-        followers submit none. Returns THIS member's assignment."""
-        err, blob = self._sync_group_raw(
-            group, generation, member_id, assignments
-        )
-        if err:
-            raise KafkaWireError(
-                f"SyncGroup error code {err} for group {group!r}"
-            )
-        return blob
 
     def heartbeat(self, group: str, generation: int, member_id: str) -> int:
         """Heartbeat v0 — returns the error CODE (0 = stable;
@@ -1416,38 +1370,6 @@ class KafkaClient:
         r.int32()  # throttle
         return base
 
-    def fetch(
-        self,
-        topic: str,
-        partition: int,
-        offset: int,
-        max_bytes: int = 4 << 20,
-        max_wait_ms: int = 100,
-    ) -> tuple[list[tuple[int, Optional[bytes], Optional[bytes], int]], int]:
-        """Fetch from ``offset`` → (records, high_watermark); records =
-        [(offset, key, value, timestamp_ms)]."""
-        records, hwm, _next = self.fetch_records(
-            topic, partition, offset, max_bytes, max_wait_ms
-        )
-        return records, hwm
-
-    def fetch_records(
-        self,
-        topic: str,
-        partition: int,
-        offset: int,
-        max_bytes: int = 4 << 20,
-        max_wait_ms: int = 100,
-    ) -> tuple[list[tuple[int, Optional[bytes], Optional[bytes], int]], int, Optional[int]]:
-        """``fetch`` plus the position to resume from: (records,
-        high_watermark, next_offset). ``next_offset`` is the end of the
-        last COMPLETE batch in the response (None when nothing complete
-        arrived) — commit THIS, not last-record+1, so control batches
-        and compaction gaps don't stall the consumer."""
-        res = self.fetch_records_multi(
-            topic, {partition: offset}, max_bytes, max_wait_ms
-        )
-        return res.get(partition, ([], 0, None))
 
     def fetch_records_multi(
         self,
@@ -1514,152 +1436,3 @@ class KafkaClient:
                     ]
                     out[pid] = (recs, hwm, end_off)
         return out
-
-
-_CERT_BUNDLE_DIR: list = []  # lazily-created process-private 0700 dir
-_CERT_BUNDLES: dict = {}  # cache key -> bundle path
-_CERT_BUNDLE_LOCK = threading.Lock()
-_CERT_BUNDLE_SEQ = [0]
-
-
-def _client_cert_bundle(certfile: str, keyfile: str) -> str:
-    """Cert+key PEM bundle for the JVM PEM keystore, deduped per
-    (certfile, keyfile) pair and written 0600 inside one
-    process-private ``mkdtemp`` dir (0700 by default) — so repeated
-    streams reuse one bundle instead of leaking a file per call, and a
-    crashed process leaves the key unreadable to other users rather
-    than a world-listable PEM in the shared temp dir.
-
-    The cache key includes each source file's (mtime_ns, size): a
-    cert-manager-style in-place rotation of the pair invalidates the
-    cached bundle instead of handing the JVM the EXPIRED certificate
-    for the rest of the process lifetime. A lock serializes the
-    check-then-create so two streams starting concurrently can't
-    interleave writes into one half-built bundle."""
-    import atexit
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    def _stamp(p: str) -> tuple:
-        st = os.stat(p)
-        return (os.path.realpath(p), st.st_mtime_ns, st.st_size)
-
-    key = (_stamp(certfile), _stamp(keyfile))
-    with _CERT_BUNDLE_LOCK:
-        cached = _CERT_BUNDLES.get(key)
-        if cached is not None and os.path.exists(cached):
-            return cached
-        if not _CERT_BUNDLE_DIR or not os.path.isdir(_CERT_BUNDLE_DIR[0]):
-            d = _tempfile.mkdtemp(prefix="hstream-mtls-")
-            _CERT_BUNDLE_DIR[:] = [d]
-            atexit.register(lambda p=d: _shutil.rmtree(p, ignore_errors=True))
-        _CERT_BUNDLE_SEQ[0] += 1
-        bundle = os.path.join(
-            _CERT_BUNDLE_DIR[0], f"bundle-{_CERT_BUNDLE_SEQ[0]}.pem"
-        )
-        fd = os.open(bundle, os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o600)
-        with os.fdopen(fd, "w") as out:
-            for path in (certfile, keyfile):
-                with open(path) as fh:
-                    out.write(fh.read())
-                out.write("\n")
-        _CERT_BUNDLES[key] = bundle
-        return bundle
-
-
-def kafka_readstream(spark, topic: str, bootstrap: str,
-                     starting_offsets: str = "earliest",
-                     client_options: Optional[dict] = None):
-    """The cluster-idiomatic path: the official Spark Kafka connector
-    (requires the ``spark-sql-kafka-0-10`` jar on the classpath).
-    Raises KafkaWireError with guidance when the jar is absent — the
-    engine then falls back to the wire-client ingestion tailer.
-
-    ``client_options`` takes the same SASL/TLS dict as ``KafkaClient``
-    (``connectors.kafka_client_options`` output) and maps it onto the
-    connector's ``kafka.*`` options — security.protocol, sasl.mechanism
-    and a PLAIN/SCRAM JAAS config — so one WITH-clause drives both the
-    jar path and the wire-client fallback identically."""
-    opts = dict(client_options or {})
-    kafka_opts: dict[str, str] = {}
-    mech = opts.get("sasl_mechanism")
-    tls = bool(opts.get("tls"))
-    if mech:
-        kafka_opts["kafka.security.protocol"] = (
-            "SASL_SSL" if tls else "SASL_PLAINTEXT"
-        )
-        kafka_opts["kafka.sasl.mechanism"] = mech
-        module = (
-            "org.apache.kafka.common.security.plain.PlainLoginModule"
-            if mech == "PLAIN"
-            else "org.apache.kafka.common.security.scram.ScramLoginModule"
-        )
-        def _jaas_escape(v: str) -> str:
-            # backslashes FIRST, then quotes — else an escaped quote's
-            # backslash gets double-escaped / a trailing backslash eats
-            # the closing quote
-            return v.replace("\\", "\\\\").replace('"', '\\"')
-
-        user = _jaas_escape(str(opts.get("sasl_username", "")))
-        pw = _jaas_escape(str(opts.get("sasl_password", "")))
-        kafka_opts["kafka.sasl.jaas.config"] = (
-            f'{module} required username="{user}" password="{pw}";'
-        )
-    elif tls:
-        kafka_opts["kafka.security.protocol"] = "SSL"
-    if opts.get("tls_cafile"):
-        # the JVM client wants a truststore; a PEM CA file maps via
-        # ssl.truststore.type=PEM (Kafka 2.7+)
-        kafka_opts["kafka.ssl.truststore.type"] = "PEM"
-        kafka_opts["kafka.ssl.truststore.location"] = str(opts["tls_cafile"])
-    # options built by kafka_client_options arrive pre-validated, but
-    # this is a public entry point that accepts the dict directly — a
-    # keyfile without its certfile must fail loudly here too, never
-    # silently connect without a client certificate
-    from hstream_spark.sources.tls_util import validate_client_cert_opts
-
-    validate_client_cert_opts(
-        opts.get("tls_certfile"), opts.get("tls_keyfile"),
-        KafkaWireError, "KAFKA_TLS",
-    )
-    if opts.get("tls_certfile"):
-        # mTLS client certificate. With a separate keyfile the JVM PEM
-        # keystore can't point at two locations, but Kafka 2.7+ accepts
-        # the PEM CONTENT inline (ssl.keystore.key /
-        # ssl.keystore.certificate.chain); a bundled cert+key PEM maps
-        # by location.
-        kafka_opts["kafka.ssl.keystore.type"] = "PEM"
-        if opts.get("tls_keyfile"):
-            # NEVER put the key PEM content into a source option
-            # (ssl.keystore.key): Spark's default redaction regex does
-            # not match it, so the private key would render in plain
-            # text anywhere options surface (explain output, SQL tab,
-            # shared event logs). Bundle cert+key into a 0600 PEM
-            # inside a process-private 0700 dir and pass it by
-            # location like the single-file branch.
-            kafka_opts["kafka.ssl.keystore.location"] = (
-                _client_cert_bundle(
-                    str(opts["tls_certfile"]), str(opts["tls_keyfile"])
-                )
-            )
-        else:
-            kafka_opts["kafka.ssl.keystore.location"] = str(
-                opts["tls_certfile"]
-            )
-    if opts.get("tls_verify") is False:
-        kafka_opts["kafka.ssl.endpoint.identification.algorithm"] = ""
-    try:
-        reader = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("subscribe", topic)
-            .option("startingOffsets", starting_offsets)
-        )
-        for k, v in kafka_opts.items():
-            reader = reader.option(k, v)
-        return reader.load()
-    except Exception as exc:  # noqa: BLE001 — jar missing
-        raise KafkaWireError(
-            "spark-sql-kafka connector unavailable "
-            f"(add the spark-sql-kafka-0-10 jar for the native path): {exc}"
-        ) from exc

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import glob
 import os
-from collections.abc import Sequence
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -106,42 +105,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "normalization is not implemented"
             )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; returns the frames."""
-    out = {}
-    for name in TABLES:
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
-            df = load_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: Sequence[str],
-    buckets: int = 32,
-    sort_by: Sequence[str] | None = None,
-    path: str | None = None,
-) -> None:
-    """Persist a DataFrame as a bucketed (and optionally sorted) table.
-
-    Joins and aggregations between tables bucketed on the same keys with
-    the same bucket count read co-located — NO exchange on either side
-    (and no sort when ``sort_by`` matches the join keys). At 100 TB this
-    converts every recurring fact-fact join on the bucket keys from a
-    full shuffle into a map-side zip of bucket files; the one-time
-    bucketing write is amortized across every downstream query.
-    """
-    writer = df.write.mode("overwrite").bucketBy(buckets, *keys)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    if path is not None:
-        writer = writer.option("path", path)  # external table location
-    writer.saveAsTable(table)
 
 
 def spread(df, partitions: int | None = None):

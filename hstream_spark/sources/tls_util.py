@@ -24,7 +24,6 @@ def validate_client_cert_opts(
     keyfile: Optional[str],
     err_cls: type,
     label: str = "TLS",
-    check_exists: bool = True,
 ) -> None:
     """Option-surface rules, raised as ``err_cls`` (DDL-time check)."""
     if keyfile and not certfile:
@@ -32,7 +31,7 @@ def validate_client_cert_opts(
             f"{label}_KEYFILE requires {label}_CERTFILE (the certificate "
             "the key belongs to)"
         )
-    if check_exists and certfile:
+    if certfile:
         for suffix, path in (("CERTFILE", certfile), ("KEYFILE", keyfile)):
             if path and not os.path.exists(str(path)):
                 raise err_cls(f"{label}_{suffix}={path!r} does not exist")

@@ -230,7 +230,6 @@ class QueryInfo:
 class ViewInfo:
     name: str
     sql: str
-    table: str  # legacy memory-sink name
     handle: Optional[object] = None
     state_dir: str = ""  # versioned keyed-parquet state (see _view_upsert)
     schema: Optional[T.StructType] = None
@@ -244,11 +243,6 @@ class ViewInfo:
     # sliding views: batches carry several rows per key (one per input
     # record); the LATEST by this column wins the upsert
     order_col: Optional[str] = None
-    # producer guarantees one row per key per trigger (Spark's own
-    # update-mode aggregate emits each touched group exactly once), so
-    # the upsert can skip its defensive dropDuplicates — one less
-    # shuffle per trigger
-    batch_unique: bool = False
     # GROUP BY keys the user's projection dropped, re-added as hidden
     # __gk_* state columns: they key the upsert (otherwise the state
     # would be keyless and forget untouched groups every trigger) and
@@ -1012,12 +1006,12 @@ class HStreamEngine:
                 .filter(F.col("__rn") == 1)
                 .drop("__rn")
             )
-        elif key_cols and not vi.batch_unique:
-            batch = batch_df.dropDuplicates(key_cols)
         else:
-            # Spark's update-mode aggregate already emits one row per
-            # touched group per trigger — re-deduplicating would add a
-            # whole shuffle to every trigger for nothing
+            # every other view's producer emits one row per key per
+            # trigger: Spark's update-mode aggregate and the complete
+            # fallback's full result once per group, the SESSION
+            # operator once per merged session — re-deduplicating would
+            # add a whole shuffle to every trigger for nothing
             batch = batch_df
         # write-time retention filter: rows whose window closed beyond
         # the horizon never ENTER state. Without this, an epoch replay
@@ -1671,10 +1665,8 @@ class HStreamEngine:
         the tailer registers as an implicit SOURCE connector so
         PAUSE/RESUME/TERMINATE/shutdown manage its lifecycle uniformly.
         Committed offsets live in a sidecar in the stream directory, so
-        DDL-log replay on restart resumes instead of re-reading.  On a
-        cluster with the spark-sql-kafka jar, map the stream straight to
-        ``kafka_wire.kafka_readstream`` instead. ``kafka`` is the parsed
-        ``_validate_kafka_opts`` tuple."""
+        DDL-log replay on restart resumes instead of re-reading.
+        ``kafka`` is the parsed ``_validate_kafka_opts`` tuple."""
         topic, bootstrap, poll_ms, starting, group, coord, client_options = kafka
         cname = f"__kafka_{info.name}"
         conn = ConnectorInfo(
@@ -2021,7 +2013,6 @@ class HStreamEngine:
             raise CompileError(f"view {stmt.name!r} already exists")
         if not _aggregated(stmt.select):
             raise CompileError("CREATE VIEW requires an aggregation (GROUP BY)")
-        table = f"__view_{stmt.name}"
         # WITH (DURATION = INTERVAL …): windowed-view state retention —
         # mirrors CREATE STREAM's DURATION (SQL-v1.cf:53) on the view's
         # durable state. Validated against the window shape below (a
@@ -2157,15 +2148,9 @@ class HStreamEngine:
                 )
         os.makedirs(state_dir, exist_ok=True)
         vi = ViewInfo(
-            stmt.name, sql, table, None, state_dir, out.schema, tuple(key_cols),
+            stmt.name, sql, None, state_dir, out.schema, tuple(key_cols),
             merge_on_overlap=window_kind == "SESSION" and stateful,
             replace_all=session_fellback, order_col=order_col,
-            # plain/TUMBLE/HOP views (Spark's update-mode aggregate and
-            # the complete-fallback's full result) and SESSION views
-            # (the stateful operator emits each merged session once)
-            # all produce one row per key per trigger, so the upsert
-            # skips its defensive per-trigger dropDuplicates shuffle
-            batch_unique=order_col is None,
             # hidden state columns stripped from every read: dropped
             # group keys, the HAVING boolean, and the sliding path's
             # internal ordering timestamp

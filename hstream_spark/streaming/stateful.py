@@ -9,75 +9,17 @@ accumulators Spark lacks as native *streaming* aggregates — the shape
 matches the reference exactly: per-key state in the state store,
 step per batch, emit updated accumulator downstream.
 
-``running_topk`` is the worked example: TOPK(value, k) as a true
-incremental streaming aggregate (the reference's TOPK — AggOp.hs:
-104-105,153-157 — with a working step function). State per key is the
-current top-k list (bounded, so state size is O(k) regardless of
-stream length); each trigger emits the updated top-k — an update
-changelog.
+The session- and sliding-window aggregates below are its users; a
+``TOPK`` view compiles through ``AGG.topk`` in the SQL engine instead.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def _topk_step(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-    k: int,
-    value_col: str,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        (current,) = state.get
-        current = list(current)
-    else:
-        current = []
-    for pdf in batches:
-        for v in pdf[value_col]:
-            current.append(float(v))
-    # step+merge: sort desc, keep k (AggOp.hs merge semantics)
-    current = sorted(current, reverse=True)[:k]
-    state.update((current,))
-    yield pd.DataFrame({"key": [key[0]], "topk": [current]})
-
-
-def running_topk(
-    grouped_stream: DataFrame,
-    key_col: str,
-    value_col: str,
-    k: int,
-) -> DataFrame:
-    """Incremental per-key TOPK over a streaming DataFrame.
-
-    Returns an update stream of (key, topk array). State is the bounded
-    top-k list per key in Spark's state store — checkpointed, recovered
-    on restart, exactly the reference's changelog'd accumulator.
-    """
-
-    def step(key, batches, state):
-        return _topk_step(key, batches, state, k, value_col)
-
-    return (
-        grouped_stream.groupBy(key_col)
-        .applyInPandasWithState(
-            step,
-            outputStructType=f"key {_spark_type_of(grouped_stream, key_col)}, topk array<double>",
-            stateStructType="topk array<double>",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _spark_type_of(df: DataFrame, col: str) -> str:
-    return dict(df.dtypes)[col]
 
 
 # ---------------------------------------------------------------------------
@@ -523,30 +465,3 @@ def sliding_aggregate(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    keys: list[str],
-    ts_col: str = "_ts",
-    watermark: str | None = "24 hours",
-) -> DataFrame:
-    """Exact streaming deduplication on ``keys`` with bounded state.
-
-    `dropDuplicatesWithinWatermark` keeps one state entry per key and
-    EVICTS it once the event-time watermark passes — without the
-    watermark bound, streaming dedup state grows forever (the reason
-    plain `dropDuplicates` is unusable on an unbounded 100 TB/day
-    stream). Duplicates arriving later than the watermark are NOT
-    caught — the same trade-off the reference makes for late records
-    (TimeWindowedStream.hs:99-113: beyond grace → dropped).
-
-    Pass ``watermark=None`` when the stream already carries one (e.g.
-    frames from `HStreamEngine._resolve_stream`, which watermarks the
-    event-time column with the engine grace) — Spark rejects redefining
-    a watermark.
-
-    The batch analogue is `operators/dedup.py::exact_dedup`.
-    """
-    wm = stream if watermark is None else stream.withWatermark(ts_col, watermark)
-    return wm.dropDuplicatesWithinWatermark(keys)

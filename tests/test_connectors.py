@@ -807,7 +807,7 @@ class TestKafkaWireProtocol:
                 assert [(r["a"], r["s"]) for r in rows] == [(7, "x")]
                 # ... and visible to an external topic consumer
                 ext = KafkaClient(broker.bootstrap)
-                recs, hwm = ext.fetch("ins_t", 0, 0)
+                recs, hwm = ext.fetch_records_multi("ins_t", {0: 0})[0][:2]
                 ext.close()
                 assert hwm == 1
                 assert _json.loads(recs[0][2].decode()) == {"a": 7, "s": "x"}
@@ -834,7 +834,7 @@ class TestKafkaWireProtocol:
             )
             info.handle.processAllAvailable()
             consumer = KafkaClient(broker.bootstrap)
-            recs, hwm = consumer.fetch("sink_t", 0, 0)
+            recs, hwm = consumer.fetch_records_multi("sink_t", {0: 0})[0][:2]
             consumer.close()
             assert hwm == 2
             vals = sorted(
@@ -866,7 +866,7 @@ class TestKafkaWireProtocol:
             attrs = log.batches[0][2][8 + 4 + 4 + 1 + 4 + 1]  # low attr byte
             assert attrs & 0x07 == 1  # gzip codec bit survived the broker
             consumer = KafkaClient(broker.bootstrap)
-            recs, hwm = consumer.fetch("gz_sink", 0, 0)
+            recs, hwm = consumer.fetch_records_multi("gz_sink", {0: 0})[0][:2]
             consumer.close()
             assert hwm == 1
             assert _json.loads(recs[0][2].decode())["a"] == 7
@@ -921,7 +921,7 @@ class TestKafkaWireProtocol:
             seen: dict[str, set] = {}
             total = 0
             for p in range(3):
-                recs, _hwm = consumer.fetch("keyed_t", p, 0)
+                recs, _hwm = consumer.fetch_records_multi("keyed_t", {p: 0})[p][:2]
                 for (_o, key, value, _t) in recs:
                     total += 1
                     uid = key.decode()
@@ -970,7 +970,7 @@ class TestKafkaWireProtocol:
                     f"\"bootstrap_servers\" = '{broker.bootstrap}');"
                 )
                 conn.handle.processAllAvailable()
-                recs, _hwm = client.fetch("out_t", 0, 0)
+                recs, _hwm = client.fetch_records_multi("out_t", {0: 0})[0][:2]
                 got = sorted(
                     (d["v"], d["v10"])
                     for d in (_json.loads(v.decode()) for (_o, _k, v, _t) in recs)
@@ -1664,7 +1664,7 @@ class TestKafkaSinkSASL:
                 broker.bootstrap, sasl_mechanism="PLAIN",
                 sasl_username="svc", sasl_password="tok",
             )
-            recs, hwm = consumer.fetch("sec_sink", 0, 0)
+            recs, hwm = consumer.fetch_records_multi("sec_sink", {0: 0})[0][:2]
             consumer.close()
             assert hwm == 1
             assert _json.loads(recs[0][2].decode())["a"] == 7
@@ -1725,7 +1725,7 @@ class TestTimeTypeThroughConnectors:
             )
             info.handle.processAllAvailable()
             c = KafkaClient(broker.bootstrap)
-            recs, hwm = c.fetch("tsink", 0, 0)
+            recs, hwm = c.fetch_records_multi("tsink", {0: 0})[0][:2]
             c.close()
             assert hwm == 1
             doc = _json.loads(recs[0][2].decode())
@@ -1759,7 +1759,7 @@ class TestTimeTypeThroughConnectors:
                     broker.bootstrap, sasl_mechanism="PLAIN",
                     sasl_username="svc", sasl_password="tok",
                 )
-                recs, hwm = ext.fetch("ins_t", 0, 0)
+                recs, hwm = ext.fetch_records_multi("ins_t", {0: 0})[0][:2]
                 ext.close()
                 assert hwm == 1  # externally visible in the topic
             finally:
@@ -2007,7 +2007,7 @@ class TestSecretIndirection:
                 broker.bootstrap, sasl_mechanism="PLAIN",
                 sasl_username="svc", sasl_password="tok",
             )
-            recs, hwm = consumer.fetch("env_sink", 0, 0)
+            recs, hwm = consumer.fetch_records_multi("env_sink", {0: 0})[0][:2]
             consumer.close()
             assert hwm == 1
             assert _json.loads(recs[0][2].decode())["a"] == 9

@@ -20,12 +20,12 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_all_catalog_entries_analyze_on_bare_driver_session():
+def test_all_catalog_entries_analyze_on_bare_driver_session(sf_dir):
     proc = subprocess.run(
         [
             sys.executable,
             os.path.join(REPO, "tools", "vanilla_session_check.py"),
-            "/root/testdata/sf0.001",
+            sf_dir,
         ],
         capture_output=True,
         text=True,

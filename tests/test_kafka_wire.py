@@ -300,7 +300,7 @@ def test_gzip_topic_produce_fetch_round_trip():
             log = broker._topics["gz"][0]
             attrs = log.batches[0][2][8 + 4 + 4 + 1 + 4 + 1]  # low attr byte
             assert attrs & 0x07 == 1
-            got, hwm = client.fetch("gz", 0, 0)
+            got, hwm = client.fetch_records_multi("gz", {0: 0})[0][:2]
             assert hwm == 53
             assert [(o, v) for (o, _k, v, _t) in got][:3] == [
                 (0, b'{"i": 0}'), (1, b'{"i": 1}'), (2, b'{"i": 2}')
@@ -399,7 +399,7 @@ def test_partition_error_code_invalidates_leader_cache():
             # fetch a partition the broker doesn't know → error code 3
             client._leaders[("lc", 9)] = client._leaders[("lc", 0)]
             with pytest.raises(KafkaWireError, match="error code 3"):
-                client.fetch("lc", 9, 0)
+                client.fetch_records_multi("lc", {9: 0})
             assert ("lc", 9) not in client._leaders
         finally:
             client.close()
@@ -1050,7 +1050,7 @@ def test_sasl_plain_accept_and_produce_fetch():
             sasl_username="alice", sasl_password="secret",
         )
         client.produce("auth_t", [(None, b"v1", 1000)])
-        recs, hwm = client.fetch("auth_t", 0, 0)
+        recs, hwm = client.fetch_records_multi("auth_t", {0: 0})[0][:2]
         client.close()
         assert [r[2] for r in recs] == [b"v1"] and hwm == 1
 
@@ -1100,7 +1100,7 @@ def test_sasl_scram_sha256_accept_round_trip():
             sasl_username="bob", sasl_password="hunter2",
         )
         client.produce("scram_t", [(None, b"x", 1)], partition=1)
-        recs, _hwm = client.fetch("scram_t", 1, 0)
+        recs, _hwm = client.fetch_records_multi("scram_t", {1: 0})[1][:2]
         client.close()
         assert [r[2] for r in recs] == [b"x"]
 
@@ -1237,7 +1237,7 @@ def test_tls_sasl_e2e_produce_fetch():
             sasl_username="alice", sasl_password="secret",
         )
         client.produce("tls_t", [(b"k", b"enc", 7)])
-        recs, _ = client.fetch("tls_t", 0, 0)
+        recs, _ = client.fetch_records_multi("tls_t", {0: 0})[0][:2]
         client.close()
         assert [(r[1], r[2]) for r in recs] == [(b"k", b"enc")]
 
@@ -1409,50 +1409,6 @@ def test_list_offsets_multi_and_batched_lag(tmp_path):
         t.stop()
 
 
-def test_kafka_readstream_maps_sasl_to_connector_options():
-    """The jar-path option mapping is pure dict logic — verify the
-    kafka.* options it would set without needing the jar."""
-    from hstream_spark.sources.kafka_wire import kafka_readstream
-
-    class _Opt:
-        def __init__(self):
-            self.opts = {}
-        def option(self, k, v):
-            self.opts[k] = v
-            return self
-        def load(self):
-            raise RuntimeError("no jar in test")
-
-    class _RS:
-        def __init__(self):
-            self.r = _Opt()
-        def format(self, f):
-            assert f == "kafka"
-            return self.r
-
-    class _Spark:
-        readStream = _RS()
-
-    sp = _Spark()
-    import pytest as _pytest
-
-    from hstream_spark.sources.kafka_wire import KafkaWireError
-
-    with _pytest.raises(KafkaWireError, match="spark-sql-kafka"):
-        kafka_readstream(
-            sp, "t", "h:9092",
-            client_options={
-                "sasl_mechanism": "SCRAM-SHA-256", "sasl_username": "u",
-                "sasl_password": "p", "tls": True, "tls_cafile": "/ca.pem",
-            },
-        )
-    o = sp.readStream.r.opts
-    assert o["kafka.security.protocol"] == "SASL_SSL"
-    assert o["kafka.sasl.mechanism"] == "SCRAM-SHA-256"
-    assert "ScramLoginModule" in o["kafka.sasl.jaas.config"]
-    assert o["kafka.ssl.truststore.type"] == "PEM"
-
-
 def test_scram_rfc_test_vectors():
     """Pin ScramClient against the OFFICIAL example conversations:
     RFC 5802 §5 (SCRAM-SHA-1, user 'user' / pass 'pencil') and
@@ -1496,6 +1452,14 @@ def test_scram_rfc_test_vectors():
     s1.verify_server_final(b"v=rmF9pqV8S7suAoZWja4dJRkFsKQ=")
 
 
+def _age_out(log, offset):
+    """Retention on a stub partition: drop batches entirely below
+    ``offset``, so fetches below the new log start answer
+    OFFSET_OUT_OF_RANGE like a real broker whose segments aged out."""
+    log.batches = [b for b in log.batches if b[1] >= offset]
+    log.log_start = min(offset, log.next_offset)
+
+
 def test_tailer_auto_offset_reset_after_retention(tmp_path):
     """A committed offset that retention aged out must not wedge the
     tailer: the fetch answers OFFSET_OUT_OF_RANGE and the tailer
@@ -1524,7 +1488,7 @@ def test_tailer_auto_offset_reset_after_retention(tmp_path):
         client.produce(
             "ret_t", [(None, b'{"i": %d}' % i, i) for i in range(6, 10)]
         )
-        broker._topics["ret_t"][0].truncate_before(8)
+        _age_out(broker._topics["ret_t"][0], 8)
         # committed position 6 < log_start 8 -> OFFSET_OUT_OF_RANGE ->
         # earliest policy resets to 8 and ingests the retained records
         assert t.poll() == 2
@@ -1554,7 +1518,7 @@ def test_tailer_counts_offset_resets(tmp_path):
         assert t.poll() == 3
         assert (t.offset_resets, t.poll_failures, t.last_error) == (0, 0, None)
         client.produce("rc_t", [(None, b'{"i": %d}' % i, i) for i in range(3, 7)])
-        broker._topics["rc_t"][0].truncate_before(5)  # 3..4 aged out
+        _age_out(broker._topics["rc_t"][0], 5)  # 3..4 aged out
         assert t.poll() == 2
         assert t.offset_resets == 1
         assert "out of range" in t.last_error and "reset to 5" in t.last_error
@@ -1712,7 +1676,7 @@ def test_mtls_client_certificate_accept_and_reject():
             tls_certfile=ccert, tls_keyfile=ckey,
         )
         client.produce("mt", [(b"k", b"v", 1)])
-        recs, hwm = client.fetch("mt", 0, 0)
+        recs, hwm = client.fetch_records_multi("mt", {0: 0})[0][:2]
         client.close()
         assert hwm == 1 and recs[0][1:3] == (b"k", b"v")
         # no client certificate: the broker aborts the handshake
@@ -1747,107 +1711,6 @@ def test_mtls_option_validation():
         "kafka_tls_certfile": certf, "kafka_tls_keyfile": keyf,
     })
     assert out == {"tls_certfile": certf, "tls_keyfile": keyf, "tls": True}
-
-
-def test_mtls_readstream_option_mapping():
-    """The jar path maps a cert/key pair onto Kafka's PEM keystore
-    options. A split pair bundles into a 0600 temp PEM passed by
-    LOCATION — key CONTENT must never enter a source option, since
-    Spark's default redaction regex doesn't match ssl.keystore.key and
-    options render in explain/SQL-tab/event-log surfaces."""
-    import pytest as _pytest
-
-    from hstream_spark.sources.kafka_wire import KafkaWireError, kafka_readstream
-
-    pair = _self_signed_pair("rs-client")
-    if pair is None:
-        _pytest.skip("cryptography lib unavailable for cert generation")
-    certf, keyf = pair
-
-    class _Opt:
-        def __init__(self):
-            self.opts = {}
-        def option(self, k, v):
-            self.opts[k] = v
-            return self
-        def load(self):
-            raise RuntimeError("no jar in test")
-
-    class _RS:
-        def __init__(self):
-            self.r = _Opt()
-        def format(self, f):
-            return self.r
-
-    class _Spark:
-        readStream = _RS()
-
-    sp = _Spark()
-    with _pytest.raises(KafkaWireError, match="spark-sql-kafka"):
-        kafka_readstream(
-            sp, "t", "h:9092",
-            client_options={
-                "tls": True, "tls_certfile": certf, "tls_keyfile": keyf,
-            },
-        )
-    o = sp.readStream.r.opts
-    assert o["kafka.security.protocol"] == "SSL"
-    assert o["kafka.ssl.keystore.type"] == "PEM"
-    # no PEM content (especially not the private key) in any option
-    assert all("PRIVATE KEY" not in str(v) for v in o.values())
-    assert "kafka.ssl.keystore.key" not in o
-    assert "kafka.ssl.keystore.certificate.chain" not in o
-    bundle = o["kafka.ssl.keystore.location"]
-    assert bundle != certf and bundle.endswith(".pem")
-    import os as _os
-    import stat as _stat
-
-    assert _stat.S_IMODE(_os.stat(bundle).st_mode) == 0o600
-    content = open(bundle).read()
-    assert "BEGIN CERTIFICATE" in content and "PRIVATE KEY" in content
-
-    sp2 = _Spark()
-    with _pytest.raises(KafkaWireError, match="spark-sql-kafka"):
-        kafka_readstream(
-            sp2, "t", "h:9092",
-            client_options={"tls": True, "tls_certfile": certf},
-        )
-    assert sp2.readStream.r.opts["kafka.ssl.keystore.location"] == certf
-
-def test_mtls_bundle_deduped_and_private_dir():
-    """Repeated streams with the same (cert, key) pair reuse ONE bundle
-    (no per-call temp-file leak), and the bundle lives inside a
-    process-private 0700 dir so a crashed process leaves the key
-    unreadable to other users rather than world-listable in /tmp."""
-    import os as _os
-    import stat as _stat
-
-    import pytest as _pytest
-
-    from hstream_spark.sources.kafka_wire import _client_cert_bundle
-
-    pair = _self_signed_pair("dedupe-client")
-    if pair is None:
-        _pytest.skip("cryptography lib unavailable for cert generation")
-    certf, keyf = pair
-
-    b1 = _client_cert_bundle(certf, keyf)
-    b2 = _client_cert_bundle(certf, keyf)
-    assert b1 == b2  # deduped per (cert, key) pair
-    d = _os.path.dirname(b1)
-    assert _stat.S_IMODE(_os.stat(d).st_mode) == 0o700
-    assert _stat.S_IMODE(_os.stat(b1).st_mode) == 0o600
-
-    # a DIFFERENT pair gets its own bundle in the same private dir
-    pair2 = _self_signed_pair("dedupe-client-2")
-    assert pair2 is not None
-    b3 = _client_cert_bundle(*pair2)
-    assert b3 != b1 and _os.path.dirname(b3) == d
-
-    # deleted bundle is rebuilt rather than returned stale
-    _os.unlink(b1)
-    b4 = _client_cert_bundle(certf, keyf)
-    assert _os.path.exists(b4)
 
 
 def test_leave_during_join_barrier_keeps_pending_joiner():

@@ -1,6 +1,6 @@
 """Multimodal binary-column plumbing: feature extraction, frame
 sampling, resize — exact byte behavior through the real mapInPandas
-path, plus the decode stubs' gating."""
+path."""
 
 from __future__ import annotations
 
@@ -53,74 +53,3 @@ def test_resize_payload_nearest_neighbor(spark, bin_df):
     assert out[2] == b"xxxxyyyy"
     # empty stays empty
     assert out[3] == b""
-
-
-def _has(mod: str) -> bool:
-    import importlib.util
-
-    return importlib.util.find_spec(mod) is not None
-
-
-@pytest.mark.skipif(_has("PIL"), reason="PIL present: real decode covered below")
-def test_image_decode_gates_cleanly_without_pil():
-    with pytest.raises(NotImplementedError, match="PIL"):
-        MM.decode_image(b"\x89PNG")
-
-
-@pytest.mark.skipif(
-    _has("soundfile"), reason="soundfile present: real decode covered below"
-)
-def test_non_wav_audio_gates_cleanly_without_soundfile():
-    with pytest.raises(NotImplementedError, match="soundfile"):
-        MM.decode_audio(b"fLaC....")
-
-
-def test_wav_decode_via_stdlib():
-    """PCM WAV decodes everywhere (stdlib wave): author a 2-channel
-    16-bit WAV and get back the exact sample matrix + rate."""
-    import io
-    import struct
-    import wave
-
-    samples = [(0, 1), (2, -3), (32767, -32768)]
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(16000)
-        for left, right in samples:
-            w.writeframes(struct.pack("<hh", left, right))
-    arr, rate = MM.decode_audio(buf.getvalue())
-    assert rate == 16000
-    assert arr.shape == (3, 2)
-    assert [tuple(int(v) for v in row) for row in arr] == samples
-
-
-@pytest.mark.skipif(not _has("PIL"), reason="PIL not installed (optional extra)")
-def test_image_decode_real_when_pil_present():
-    import io
-
-    from PIL import Image
-
-    im = Image.new("RGB", (4, 2), (255, 0, 0))
-    buf = io.BytesIO()
-    im.save(buf, format="PNG")
-    arr = MM.decode_image(buf.getvalue())
-    assert arr.shape == (2, 4, 3)
-    assert tuple(int(v) for v in arr[0, 0]) == (255, 0, 0)
-
-
-@pytest.mark.skipif(
-    not _has("soundfile"), reason="soundfile not installed (optional extra)"
-)
-def test_audio_decode_real_when_soundfile_present():
-    import io
-
-    import numpy as np
-    import soundfile
-
-    buf = io.BytesIO()
-    data = np.zeros((8, 1), dtype="float32")
-    soundfile.write(buf, data, 8000, format="FLAC")
-    arr, rate = MM.decode_audio(buf.getvalue())
-    assert rate == 8000 and len(arr) == 8

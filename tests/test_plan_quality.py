@@ -182,7 +182,7 @@ def test_shingle_md5_pass_runs_once(spark, sf_dir):
     that property against refactors and Catalyst rule changes.
 
     Cache is cleared first: earlier tests legitimately leave shingle
-    sets persisted for the session (dedup's cache_sets contract), and
+    sets persisted for the session (dedup persists them), and
     the cache manager substitutes a matching InMemoryRelation whose
     nested plan string double-counts md5 — this test pins the shape of
     the FRESH plan, not cache-substitution behavior."""
@@ -255,3 +255,119 @@ def test_operators_read_no_environment():
         if re.search(r"\benviron\b|\bgetenv\b", line)
     ]
     assert hits == []
+
+
+# Reached only from tests, on purpose: each is the Catalyst-expression
+# reference that the named test compares its production ``*_np`` kernel
+# against.
+_REFERENCE_ONLY = {
+    "hstream_spark.operators.similarity.sq_encode":
+        "tests/test_similarity.py::TestScalarQuantization::"
+        "test_np_kernels_match_expression_path",
+    "hstream_spark.operators.similarity.sq_adc_topk":
+        "tests/test_similarity.py::TestScalarQuantization::"
+        "test_np_kernels_match_expression_path",
+    "hstream_spark.operators.similarity.pq_encode":
+        "tests/test_similarity.py::test_pq_encode_np_matches_expression_path",
+    "hstream_spark.operators.similarity.semantic_dedup":
+        "tests/test_similarity.py::"
+        "test_semantic_dedup_np_matches_expression_path",
+}
+
+
+def _unreached_definitions(repo) -> list[str]:
+    """Top-level functions, classes and methods under ``hstream_spark/``
+    that no program root reaches by name.
+
+    The roots are every name in ``__spark_entry__.py``, ``bench.py``,
+    ``examples/``, ``tools/``, ``perfbench/`` and ``hstream_spark/plans/``,
+    the ``@register``-ed catalog builders, ``HStreamEngine``'s public
+    methods, module-level statements that run on import, and
+    ``_REFERENCE_ONLY``. A reached definition reaches every name its
+    body mentions (``x`` and ``obj.x`` alike); a method counts only once
+    its class is reached, and a reached class reaches its dunders."""
+    import ast
+
+    def refs(nodes):
+        out = set()
+        for node in nodes:
+            for sub in ast.walk(node):
+                if isinstance(sub, ast.Name):
+                    out.add(sub.id)
+                elif isinstance(sub, ast.Attribute):
+                    out.add(sub.attr)
+        return out
+
+    names: set[str] = set()
+    for rel in ("__spark_entry__.py", "bench.py", "examples", "tools",
+                "perfbench", "hstream_spark/plans"):
+        path = repo / rel
+        for f in [path] if path.is_file() else sorted(path.rglob("*.py")):
+            names |= refs([ast.parse(f.read_text())])
+
+    # key -> (name, owning class key or None, referenced names, reported)
+    defs: dict[str, tuple] = {}
+    reached: set[str] = set()
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    for f in sorted((repo / "hstream_spark").rglob("*.py")):
+        mod = ".".join(f.relative_to(repo).with_suffix("").parts)
+        if mod.startswith("hstream_spark.plans"):
+            continue
+        for node in ast.parse(f.read_text()).body:
+            key = f"{mod}.{getattr(node, 'name', '')}"
+            if isinstance(node, funcs):
+                defs[key] = (node.name, None, refs([node]), True)
+                if any(isinstance(d, ast.Call)
+                       and getattr(d.func, "id", None) == "register"
+                       for d in node.decorator_list):
+                    reached.add(key)
+            elif isinstance(node, ast.ClassDef):
+                body = [n for n in node.body if not isinstance(n, funcs)]
+                head = node.bases + node.keywords + node.decorator_list
+                defs[key] = (node.name, None, refs(head + body), True)
+                for m in node.body:
+                    if isinstance(m, funcs):
+                        mkey = f"{key}.{m.name}"
+                        defs[mkey] = (m.name, key, refs([m]), True)
+                        if node.name == "HStreamEngine" and not m.name.startswith("_"):
+                            reached |= {key, mkey}
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = getattr(node, "targets", [getattr(node, "target", None)])
+                for t in targets:
+                    if isinstance(t, ast.Name):
+                        defs[f"{mod}.{t.id}"] = (t.id, None, refs([node]), False)
+                    else:
+                        names |= refs([node])
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                names |= refs([node])
+    reached |= set(_REFERENCE_ONLY)
+    for key in reached:
+        names |= defs[key][2]
+    grew = True
+    while grew:
+        grew = False
+        for key, (name, owner, body, _) in defs.items():
+            if key in reached or (owner is not None and owner not in reached):
+                continue
+            dunder = owner is not None and name.startswith("__") and name.endswith("__")
+            if name in names or dunder:
+                reached.add(key)
+                names |= body
+                grew = True
+    return sorted(
+        key for key, (_, owner, _, reported) in defs.items()
+        if reported and key not in reached
+        and (owner is None or owner in reached)
+    )
+
+
+def test_library_code_is_reached():
+    """Library code that no program path reaches is not part of the
+    engine: it is either deleted or the reference a named test compares
+    a reached twin against (``_REFERENCE_ONLY``). A test alone does not
+    keep a definition alive."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    unreached = _unreached_definitions(repo)
+    assert not unreached, "no program path reaches:\n" + "\n".join(unreached)

@@ -118,7 +118,7 @@ class TestTernary:
     def test_between_symmetric(self, spark):
         v = F.lit(5)
         assert one(spark, S.between_symmetric(v, F.lit(9), F.lit(1))) is True
-        assert one(spark, S.not_between_symmetric(v, F.lit(6), F.lit(9))) is True
+        assert one(spark, S.between_symmetric(v, F.lit(6), F.lit(9))) is False
 
 
 class TestDates:

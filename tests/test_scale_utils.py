@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hstream_spark.operators.joins import salted_join
-from hstream_spark.sources.tables import load_table, write_bucketed
+from hstream_spark.sources.tables import load_table
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
@@ -32,33 +32,6 @@ def test_salted_join_rejects_full(spark):
     df = spark.createDataFrame([(1,)], "k long")
     with pytest.raises(ValueError):
         salted_join(df, df, on="k", how="full")
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts
-    join with zero Exchange nodes — the co-location contract."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    write_bucketed(
-        orders, "b_orders", ["o_custkey"], buckets=8, sort_by=["o_custkey"],
-        path=str(tmp_path / "b_orders"),
-    )
-    write_bucketed(
-        cust.withColumnRenamed("c_custkey", "o_custkey"),
-        "b_cust", ["o_custkey"], buckets=8, sort_by=["o_custkey"],
-        path=str(tmp_path / "b_cust"),
-    )
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("b_orders").join(spark.table("b_cust"), "o_custkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_cust")
 
 
 def test_cap_per_group_deterministic_and_bounded(spark):

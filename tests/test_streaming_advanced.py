@@ -1,6 +1,5 @@
 """Advanced streaming: stream-stream interval joins through the SQL
-frontend in true streaming mode, and the custom stateful TOPK
-operator (applyInPandasWithState)."""
+frontend in true streaming mode, and stateful TOPK views."""
 
 from __future__ import annotations
 
@@ -217,49 +216,29 @@ def test_push_query_emits_update_stream(engine):
 
 
 @pytest.mark.slow
-def test_running_topk_stateful(engine, spark):
-    from hstream_spark.streaming.stateful import running_topk
-
+def test_topk_view_incremental_across_batches(engine):
+    """A plain GROUP BY view's TOPK compiles through ``AGG.topk``: each
+    key keeps its top-k, and a later trigger merges with the stored
+    state instead of replacing it."""
     engine.execute("CREATE STREAM vals (k STRING, v FLOAT);")
     for k, v in [("a", 1.0), ("a", 5.0), ("a", 3.0), ("b", 9.0)]:
         engine.execute(f"INSERT INTO vals (k, v) VALUES ('{k}', {v});")
-    stream = engine._resolve_stream("vals")
-    out = running_topk(stream.select("k", "v"), "k", "v", k=2)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("topk_out")
-        .start()
+    engine.execute(
+        "CREATE VIEW topk_v AS SELECT k, TOPK(v, 2) AS t FROM vals GROUP BY k;"
     )
-    q.processAllAvailable()
-    rows = {r["key"]: list(r["topk"]) for r in spark.sql("SELECT * FROM topk_out").collect()}
-    q.stop()
-    assert rows["a"] == [5.0, 3.0]
-    assert rows["b"] == [9.0]
+    handle = engine.views["topk_v"].handle
+    handle.processAllAvailable()
 
+    def rows():
+        return {
+            r["k"]: list(r["t"])
+            for r in engine.execute("SELECT k, t FROM topk_v;").collect()
+        }
 
-@pytest.mark.slow
-def test_stateful_topk_incremental_across_batches(engine, spark):
-    from hstream_spark.streaming.stateful import running_topk
-
-    engine.execute("CREATE STREAM vals2 (k STRING, v FLOAT);")
-    engine.execute("INSERT INTO vals2 (k, v) VALUES ('a', 1.0);")
-    stream = engine._resolve_stream("vals2")
-    out = running_topk(stream.select("k", "v"), "k", "v", k=3)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("topk_inc")
-        .start()
-    )
-    q.processAllAvailable()
-    # second batch arrives later; state must carry the first value
-    engine.execute("INSERT INTO vals2 (k, v) VALUES ('a', 7.0);")
-    q.processAllAvailable()
-    rows = [list(r["topk"]) for r in spark.sql(
-        "SELECT * FROM topk_inc WHERE key = 'a'").collect()]
-    q.stop()
-    assert [7.0, 1.0] in rows  # final accumulator includes both batches
+    assert rows() == {"a": [5.0, 3.0], "b": [9.0]}
+    engine.execute("INSERT INTO vals (k, v) VALUES ('a', 7.0);")
+    handle.processAllAvailable()
+    assert rows() == {"a": [7.0, 5.0], "b": [9.0]}
 
 
 @pytest.mark.slow
@@ -288,38 +267,6 @@ def test_streaming_session_window_view(engine):
     rows = engine.execute("SELECT k, n FROM sess_view;").collect()
     counts = sorted(r["n"] for r in rows)
     assert counts == [2, 3]
-
-
-@pytest.mark.slow
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Streaming exact dedup: duplicate keys inside the watermark window
-    collapse to one row; state is evicted past the watermark."""
-    from hstream_spark.streaming.runtime import HStreamEngine
-    from hstream_spark.streaming.stateful import streaming_dedup
-
-    eng = HStreamEngine(spark, str(tmp_path / "dd"))
-    try:
-        eng.execute("CREATE STREAM dup_ev (k STRING, v INTEGER);")
-        for _ in range(3):
-            eng.execute("INSERT INTO dup_ev (k, v) VALUES ('x', 1);")
-        eng.execute("INSERT INTO dup_ev (k, v) VALUES ('y', 2);")
-        src = eng._resolve_stream("dup_ev")
-        out = streaming_dedup(src, ["k"], watermark=None)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("dedup_sink")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "dd_ck"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            rows = spark.sql("SELECT k FROM dedup_sink").collect()
-            assert sorted(r["k"] for r in rows) == ["x", "y"]
-        finally:
-            q.stop()
-    finally:
-        eng.shutdown()
 
 
 @pytest.mark.slow
@@ -684,9 +631,8 @@ class TestViewHavingAndFallbackBound:
         import os
 
         os.makedirs(state_dir)
-        vi = ViewInfo("cfb", "", "", None, state_dir, schema, ("k",),
-                      replace_all=True, batch_unique=True,
-                      complete_max_rows=5)
+        vi = ViewInfo("cfb", "", None, state_dir, schema, ("k",),
+                      replace_all=True, complete_max_rows=5)
         small = spark.createDataFrame([(f"k{i}", i) for i in range(3)],
                                       schema)
         HStreamEngine._view_upsert(vi, small)

@@ -1163,14 +1163,14 @@ def test_should_compact_decision(tmp_path):
     from hstream_spark.streaming.runtime import HStreamEngine, ViewInfo
 
     # dense deltas: folds exactly at the every-8 floor, like round 8
-    vi = ViewInfo("d", "", "", None, str(tmp_path))
+    vi = ViewInfo("d", "", None, str(tmp_path))
     vi.delta_rows_cache.update(
         {"v0": 100, **{f"v0_d{k}": 50 for k in range(1, 9)}}
     )
     assert not HStreamEngine._should_compact(vi, 0, list(range(1, 8)))
     assert HStreamEngine._should_compact(vi, 0, list(range(1, 9)))
     # sparse deltas on a big base: the floor fold DEFERS (Σ=8 < 50)…
-    vi2 = ViewInfo("d2", "", "", None, str(tmp_path / "x"))
+    vi2 = ViewInfo("d2", "", None, str(tmp_path / "x"))
     vi2.delta_rows_cache.update(
         {"v0": 100, **{f"v0_d{k}": 1 for k in range(1, 64)}}
     )
@@ -1314,8 +1314,7 @@ class TestViewStateCrashInjection:
         state_dir = str(tmp_path / f"vs_{name}")
         os.makedirs(state_dir, exist_ok=True)
         kw.setdefault("key_cols", ("k",))
-        kw.setdefault("batch_unique", True)
-        return ViewInfo(name, "", "", None, state_dir, schema, **kw)
+        return ViewInfo(name, "", None, state_dir, schema, **kw)
 
     def _read(self, spark, vi):
         from hstream_spark.streaming.runtime import HStreamEngine

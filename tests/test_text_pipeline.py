@@ -34,16 +34,12 @@ def test_repetition_fractions(spark):
     )
     rows = {
         r["id"]: r
-        for r in df.select(
-            "id",
-            TX.dup_ngram_fraction(F.col("text"), 2).alias("dup"),
-            TX.top_ngram_fraction(F.col("text"), 2).alias("top"),
-        ).collect()
+        for r in TX.repetition_signals(df, id_col="id", n=2).collect()
     }
-    assert rows[1]["dup"] == 0.75  # 4 bigrams, 1 distinct
-    assert rows[1]["top"] == 1.0
-    assert rows[2]["dup"] == 0.0
-    assert rows[2]["top"] == 0.25
+    assert rows[1]["dup_bigram_frac"] == 0.75  # 4 bigrams, 1 distinct
+    assert rows[1]["top_bigram_frac"] == 1.0
+    assert rows[2]["dup_bigram_frac"] == 0.0
+    assert rows[2]["top_bigram_frac"] == 0.25
 
 
 def test_pii_counts(spark):
@@ -1195,9 +1191,7 @@ class TestCappedSimhash:
 
 
 def test_c4_rules_boundaries(spark):
-    from pyspark.sql import functions as F
-
-    from hstream_spark.operators.text import c4_rules
+    from hstream_spark.operators.text import c4_filter
 
     good3 = (
         "One fine long sentence ends right here now.\n"
@@ -1218,11 +1212,7 @@ def test_c4_rules_boundaries(spark):
         ],
         "doc_id long, text string",
     )
-    r = c4_rules(F.col("text"))
-    rows = {
-        row["doc_id"]: row
-        for row in docs.select("doc_id", *[r[k].alias(k) for k in r]).collect()
-    }
+    rows = {row["doc_id"]: row for row in c4_filter(docs).collect()}
     assert rows[1]["keep"] is True and rows[1]["n_kept_lines"] == 3
     # the three LINE rules drop the offending line but keep the page
     assert rows[2]["n_kept_lines"] == 3 and rows[2]["keep"] is True
@@ -1240,21 +1230,16 @@ def test_c4_rules_boundaries(spark):
 
 
 def test_c4_rules_optional_terminal_punct(spark):
-    from pyspark.sql import functions as F
-
-    from hstream_spark.operators.text import c4_rules
+    from hstream_spark.operators.text import c4_filter
 
     docs = spark.createDataFrame(
         [(1, "five plain words without punctuation\nshort one")],
         "doc_id long, text string",
     )
-    strict = c4_rules(F.col("text"))
-    loose = c4_rules(F.col("text"), require_terminal_punct=False)
-    row_s, row_l = (
-        docs.select(
-            strict["n_kept_lines"].alias("s"), loose["n_kept_lines"].alias("l")
-        ).collect()
-    )[0].asDict().values()
+    row_s = c4_filter(docs).collect()[0]["n_kept_lines"]
+    row_l = c4_filter(
+        docs, require_terminal_punct=False
+    ).collect()[0]["n_kept_lines"]
     assert row_s == 0      # no line ends in terminal punctuation
     assert row_l == 1      # ≥5-word line survives without the punct rule
 
@@ -1262,18 +1247,13 @@ def test_c4_rules_optional_terminal_punct(spark):
 def test_c4_rules_empty_policy_is_vacuously_true(spark):
     """bad_phrases=() or the lorem-only tuple must not crash — the
     policy rule is vacuously true, the lorem rule stands alone."""
-    from pyspark.sql import functions as F
-
-    from hstream_spark.operators.text import c4_filter, c4_rules
+    from hstream_spark.operators.text import c4_filter
 
     docs = spark.createDataFrame(
         [(1, "a perfectly ordinary sentence that keeps going fine here.")],
         "doc_id long, text string",
     )
     for phrases in ((), ("lorem ipsum",)):
-        r = c4_rules(F.col("text"), bad_phrases=phrases)
-        row = docs.select(r["r_no_policy"].alias("p")).collect()[0]
-        assert row["p"] is True
         out = c4_filter(docs, bad_phrases=phrases).collect()[0]
         assert out["r_no_policy"] is True
 
@@ -1412,7 +1392,6 @@ def test_fineweb_filter_rules(spark):
 
 def test_line_index_roundtrip_and_append(spark, tmp_path):
     from hstream_spark.operators.dedup import (
-        append_lines_to_index,
         build_line_index,
         dedup_lines,
         dedup_lines_against_index,
@@ -1437,13 +1416,13 @@ def test_line_index_roundtrip_and_append(spark, tmp_path):
     assert rows[2]["clean_text"] == "another new line"
     assert rows[1]["n_lines_before"] == 3 and rows[1]["n_lines_after"] == 2
 
-    # fold the accepted batch in; a replayed identical batch now loses
-    # every line to the index
+    # fold the accepted batch in (rebuild over corpus + accepted); a
+    # replayed identical batch now loses every line to the index
     accepted = spark.createDataFrame(
         [(1, rows[1]["clean_text"]), (2, rows[2]["clean_text"])],
-        "doc_id long, clean_text string",
+        "doc_id long, text string",
     )
-    append_lines_to_index(accepted, path)
+    build_line_index(corpus.unionByName(accepted), path)
     replay = {r["doc_id"]: r.asDict()
               for r in dedup_lines_against_index(spark, batch, path).collect()}
     assert replay[1]["n_lines_after"] == 0 and replay[1]["clean_text"] == ""

@@ -111,8 +111,8 @@ def test_arrow_fold_matches_spark_fold_keyed(spark, tmp_path, monkeypatch):
     non-ASCII strings, with timestamp, decimal and array values: the
     newest version of each key wins on both paths, and -0.0/0.0 and
     two NaN payloads are one key each, as in Spark."""
-    vi = ViewInfo("kf", "", "", None, str(tmp_path / "kf"), _KEYED,
-                  ("k", "f"), batch_unique=True)
+    vi = ViewInfo("kf", "", None, str(tmp_path / "kf"), _KEYED,
+                  ("k", "f"))
     base, _ = _lay_state(spark, vi, [
         [_kv(None, 1.0, 1), _kv("é", -0.0, 2), _kv("日本", _NAN2, 3),
          _kv("x", 2.0, 4), _kv("y", None, 5), _kv("😀", 7.5, 6)],
@@ -139,8 +139,7 @@ def test_arrow_fold_matches_spark_fold_keyless(spark, tmp_path, monkeypatch):
     """A keyless view's newest delta is its state."""
     schema = T.StructType([T.StructField("n", T.LongType()),
                            T.StructField("s", T.StringType())])
-    vi = ViewInfo("nl", "", "", None, str(tmp_path / "nl"), schema, (),
-                  batch_unique=True)
+    vi = ViewInfo("nl", "", None, str(tmp_path / "nl"), schema, ())
     _lay_state(spark, vi, [[(1, "a"), (2, "b")], [(3, "ç")], [(4, "d"), (5, None)]])
     rows = _assert_fold_parity(spark, vi, tmp_path, monkeypatch, "keyless")
     assert sorted((r["n"], r["s"]) for r in rows) == [(4, "d"), (5, None)]
@@ -155,9 +154,8 @@ def test_arrow_fold_matches_spark_fold_retention(spark, tmp_path, monkeypatch):
         T.StructField("window_end", T.TimestampType()),
         T.StructField("n", T.LongType()),
     ])
-    vi = ViewInfo("rt", "", "", None, str(tmp_path / "rt"), schema,
-                  ("window_start", "window_end", "k"), batch_unique=True,
-                  retention_secs=30.0)
+    vi = ViewInfo("rt", "", None, str(tmp_path / "rt"), schema,
+                  ("window_start", "window_end", "k"), retention_secs=30.0)
 
     def w(k, i, n):
         return (k, _T0 + dt.timedelta(seconds=10 * i),
@@ -181,8 +179,8 @@ def test_session_and_nested_keys_stay_on_spark(tmp_path):
     driver fold, whatever their size."""
     schema = T.StructType([T.StructField("a", T.ArrayType(T.LongType())),
                            T.StructField("n", T.LongType())])
-    nested = ViewInfo("na", "", "", None, str(tmp_path), schema, ("a",))
-    session = ViewInfo("se", "", "", None, str(tmp_path), schema, ("n",),
+    nested = ViewInfo("na", "", None, str(tmp_path), schema, ("a",))
+    session = ViewInfo("se", "", None, str(tmp_path), schema, ("n",),
                        merge_on_overlap=True)
     for vi in (nested, session):
         vi.delta_bytes_cache.update({"v0": 1, "v0_d1": 1})

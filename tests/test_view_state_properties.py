@@ -75,9 +75,8 @@ def _mk_vi(name, schema_str, key_cols, **kw):
              "timestamp": T.TimestampType()}[ctype],
         ))
     state_dir = tempfile.mkdtemp(prefix=f"prop_{name}_")
-    return ViewInfo(name, "", "", None, state_dir,
-                    T.StructType(fields), tuple(key_cols),
-                    batch_unique=True, **kw)
+    return ViewInfo(name, "", None, state_dir,
+                    T.StructType(fields), tuple(key_cols), **kw)
 
 
 def _apply_with_faults(spark, vi, rows_df, fault):

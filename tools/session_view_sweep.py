@@ -95,9 +95,9 @@ def run_case(spark, n_keys, mode, probes=5):
         T.StructField("n", T.LongType()),
     ])
     state_dir = tempfile.mkdtemp(prefix=f"svs_{mode}_{n_keys}_")
-    vi = ViewInfo("sv", "", "", None, state_dir, schema,
+    vi = ViewInfo("sv", "", None, state_dir, schema,
                   ("window_start", "window_end", "k"),
-                  merge_on_overlap=True, batch_unique=True)
+                  merge_on_overlap=True)
     base_s = 1_700_000_000
 
     def batch(lo, hi, end_off=10):
@@ -149,10 +149,10 @@ def run_read_fanout(spark, n_keys, session_mode, checkpoints=(8, 32, 64)):
     state_dir = tempfile.mkdtemp(
         prefix=f"svr_{'sess' if session_mode else 'keyed'}_{n_keys}_"
     )
-    vi = ViewInfo("sv", "", "", None, state_dir, schema,
+    vi = ViewInfo("sv", "", None, state_dir, schema,
                   ("window_start", "window_end", "k")
                   if session_mode else ("k",),
-                  merge_on_overlap=session_mode, batch_unique=True)
+                  merge_on_overlap=session_mode)
     base_s = 1_700_000_000
 
     def batch(lo, hi, end_off=10):

@@ -47,9 +47,8 @@ def run_mode(spark, retention):
         T.StructField("n", T.LongType()),
     ])
     state_dir = tempfile.mkdtemp(prefix="vret_sweep_")
-    vi = ViewInfo("rt", "", "", None, state_dir, schema,
-                  ("window_start", "window_end", "k"), batch_unique=True,
-                  retention_secs=retention)
+    vi = ViewInfo("rt", "", None, state_dir, schema,
+                  ("window_start", "window_end", "k"), retention_secs=retention)
     base_s = 1_700_000_000
     sizes = []
     for t in range(TRIGGERS):
@@ -65,7 +64,7 @@ def run_mode(spark, retention):
         for name in os.listdir(state_dir):
             p = os.path.join(state_dir, name)
             if os.path.isdir(p) and name.startswith("v"):
-                r = HStreamEngine._parquet_dir_rows(p)
+                r = HStreamEngine._parquet_dir_size(p)[0]
                 if r > 0:
                     total += r
         sizes.append(total)
