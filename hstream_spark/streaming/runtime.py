@@ -44,6 +44,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -170,6 +171,65 @@ _ARROW_PAGE_TYPES = {
     T.StringType: ("string", lambda v: type(v) is str),
     T.BooleanType: ("bool", lambda v: type(v) is bool),
 }
+
+# Leaf types whose rows ``toArrow()`` and pyarrow's parquet writer store
+# as Spark's own parquet writer does, read back under the stream's or
+# view's schema (tests/test_driver_write.py round-trips every one of
+# them, nested in arrays, maps and structs too). TIME, intervals, NULL,
+# variant and UDT columns take the Spark write.
+_DRIVER_WRITE_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.StringType, T.BinaryType, T.DecimalType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _driver_writable(t: T.DataType) -> bool:
+    """Is every leaf of ``t`` in ``_DRIVER_WRITE_TYPES``?"""
+    if isinstance(t, T.ArrayType):
+        return _driver_writable(t.elementType)
+    if isinstance(t, T.MapType):
+        return _driver_writable(t.keyType) and _driver_writable(t.valueType)
+    if isinstance(t, T.StructType):
+        return all(_driver_writable(f.dataType) for f in t.fields)
+    return isinstance(t, _DRIVER_WRITE_TYPES)
+
+
+def _nan_canonical(a: pa.Array) -> pa.Array:
+    """``a`` with every NaN, nested ones too, turned into the one NaN
+    Spark's row writer stores; -0.0 stays, as it does there. ``toArrow``
+    keeps a NaN's payload bits, and the driver-side fold groups float
+    keys by their bits. An array with no NaN is returned as it is."""
+    t = a.type
+    if pa.types.is_floating(t):
+        nan = pc.is_nan(a)
+        if not pc.any(nan).as_py():
+            return a
+        return pc.if_else(nan, pa.scalar(math.nan, t), a)
+    if pa.types.is_struct(t):
+        kids = [a.field(i) for i in range(t.num_fields)]
+        new = [_nan_canonical(k) for k in kids]
+        if all(n is k for n, k in zip(new, kids)):
+            return a
+        return pa.StructArray.from_arrays(new, fields=list(t),
+                                          mask=a.is_null())
+    if pa.types.is_map(t):
+        keys, items = a.keys, a.items
+        new_keys, new_items = _nan_canonical(keys), _nan_canonical(items)
+        if new_keys is keys and new_items is items:
+            return a
+        # a null offset marks a null map
+        offsets = pa.array(a.offsets.to_numpy(), mask=np.append(
+            a.is_null().to_numpy(zero_copy_only=False), False))
+        return pa.MapArray.from_arrays(offsets, new_keys, new_items, type=t)
+    if pa.types.is_list(t):
+        values = a.values
+        new = _nan_canonical(values)
+        if new is values:
+            return a
+        return pa.ListArray.from_arrays(a.offsets, new, type=t,
+                                        mask=a.is_null())
+    return a
 
 
 def _payload_default(v):
@@ -651,27 +711,32 @@ class HStreamEngine:
     # this whole section is exactly MERGE INTO.
 
     # Compaction cadence is SIZE-ADAPTIVE (round-9): _VIEW_COMPACT_EVERY
-    # is the FLOOR — never fold more often than every N deltas; a fold
-    # is an extra Spark job whose fixed cost dominated the sf1 reduce
-    # sweep when dense (touch-most-groups) workloads folded every 2
-    # triggers under a pure row-fraction rule. At the floor, a fold
-    # only fires when the deltas carry ≥ _VIEW_COMPACT_FRACTION of the
-    # base's rows — otherwise tiny deltas on a large base keep
-    # accumulating (deferring the O(base) rewrite) up to
-    # _VIEW_COMPACT_MAX_DELTAS, which hard-caps the reader's union
-    # fan-out regardless of row counts. Counts come from parquet
-    # footers via the per-ViewInfo cache (zero extra jobs). Net: dense
-    # workloads keep exactly the round-8 cadence; sparse ones stop
-    # rewriting a 1M-row base to absorb a handful of 100-row deltas.
+    # is the FLOOR — never fold more often than every N deltas. A fold
+    # rewrites the whole base: in the driver for small state, on the
+    # Spark plan past _DRIVER_ARROW_MAX_BYTES, where its job's fixed
+    # cost dominated the sf1 reduce sweep when dense (touch-most-groups)
+    # workloads folded every 2 triggers under a pure row-fraction rule.
+    # At the floor, a fold only fires when the deltas carry
+    # ≥ _VIEW_COMPACT_FRACTION of the base's rows — otherwise tiny
+    # deltas on a large base keep accumulating (deferring the O(base)
+    # rewrite) up to _VIEW_COMPACT_MAX_DELTAS, which hard-caps the
+    # reader's union fan-out regardless of row counts. Counts come from
+    # parquet footers via the per-ViewInfo cache (zero extra jobs).
+    # Net: dense workloads keep exactly the round-8 cadence; sparse ones
+    # stop rewriting a 1M-row base to absorb a handful of 100-row deltas.
     _VIEW_COMPACT_EVERY = 8  # cadence floor
     _VIEW_COMPACT_MAX_DELTAS = 64  # hard cap on read-side delta fan-out
     _VIEW_COMPACT_FRACTION = 0.5  # defer floor folds until Σ ≥ ½ base
-    # Folds whose base+deltas hold at most this many uncompressed footer
-    # bytes merge in the driver with pyarrow (_arrow_fold), with no
-    # Spark job; larger state folds on the Spark plan. pyarrow won at
-    # every size measured, so the cap bounds driver memory, not speed:
-    # see README § Streaming runtime for the peak-RSS measurement.
-    _VIEW_ARROW_FOLD_MAX_BYTES = 64 << 20
+    # The most bytes the driver holds in Arrow for one write or fold:
+    # a fold whose base+deltas hold at most this many uncompressed
+    # footer bytes merges in the driver (_arrow_fold), and a frame
+    # Spark estimates at most this large is written from the driver
+    # (_write_rows); past it both run on Spark. The driver paths cost
+    # less CPU at every size measured (a driver write past ~32 MiB
+    # takes more wall time than Spark's parallel write tasks), so the
+    # cap bounds driver memory: see README § Streaming runtime for the
+    # peak-RSS measurements.
+    _DRIVER_ARROW_MAX_BYTES = 64 << 20
 
     @staticmethod
     def _view_layout(state_dir: str) -> tuple[Optional[int], list[int]]:
@@ -875,12 +940,6 @@ class HStreamEngine:
         return best
 
     @staticmethod
-    def _footer_bytes(md) -> int:
-        """Uncompressed data bytes one parquet footer records."""
-        return sum(md.row_group(g).total_byte_size
-                   for g in range(md.num_row_groups))
-
-    @staticmethod
     def _parquet_dir_size(path: str) -> tuple[int, int]:
         """(rows, uncompressed bytes) of a local parquet dir, from the
         file footers — driver-side metadata only, no Spark job."""
@@ -889,7 +948,8 @@ class HStreamEngine:
             if name.endswith(".parquet"):
                 md = pq.ParquetFile(os.path.join(path, name)).metadata
                 rows += md.num_rows
-                nbytes += HStreamEngine._footer_bytes(md)
+                nbytes += sum(md.row_group(g).total_byte_size
+                              for g in range(md.num_row_groups))
         return rows, nbytes
 
     @staticmethod
@@ -917,32 +977,22 @@ class HStreamEngine:
     def _commit_state(vi: ViewInfo, state, name: str,
                       written: Optional[str]) -> tuple[int, int]:
         """The one state write: ``state`` — a DataFrame, or a pyarrow
-        Table from the driver-side fold — into the dot-tmp dir
-        ``.tmp_<name>`` (invisible to the listing readers use), then an
-        atomic rename to ``name``; returns its (rows, footer bytes),
-        taken from the written footers. A write that ADDS state (the
-        first base, a delta) names the fault window ``written`` between
-        write and rename and is discarded when empty — an idle trigger
-        must not accrete empty deltas and re-compact O(state) forever.
-        A generation that REPLACES state (complete refresh, fold) is
-        kept even when empty: empty is then the state."""
+        Table from the driver-side fold — through ``_write_rows`` into
+        the dot-tmp dir ``.tmp_<name>`` (invisible to the listing
+        readers use), then an atomic rename to ``name``; returns its
+        (rows, footer bytes), taken from the written footers. A write
+        that ADDS state (the first base, a delta) names the fault
+        window ``written`` between write and rename and is discarded
+        when empty — an idle trigger must not accrete empty deltas and
+        re-compact O(state) forever. A generation that REPLACES state
+        (complete refresh, fold) is kept even when empty: empty is then
+        the state, a dir with no part file when the driver wrote it."""
         tmp = os.path.join(vi.state_dir, f".tmp_{name}")
         dst = os.path.join(vi.state_dir, name)
-        if isinstance(state, pa.Table):
-            # a crashed earlier write may have left the dir behind
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.makedirs(tmp)
-            footers: list = []
-            pq.write_table(
-                state,
-                os.path.join(tmp, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
-                compression="snappy", metadata_collector=footers,
-            )
-            rows = state.num_rows
-            nbytes = HStreamEngine._footer_bytes(footers[0])
-        else:
-            state.write.mode("overwrite").parquet(tmp)
-            rows, nbytes = HStreamEngine._parquet_dir_size(tmp)
+        # a crashed earlier write may have left the dir behind
+        shutil.rmtree(tmp, ignore_errors=True)
+        HStreamEngine._write_rows(state, tmp)
+        rows, nbytes = HStreamEngine._parquet_dir_size(tmp)
         if written is not None and rows == 0:
             shutil.rmtree(tmp, ignore_errors=True)
             return 0, 0
@@ -1094,8 +1144,8 @@ class HStreamEngine:
         high-water mark is rebuilt from every live dir's statistics.
         Small keyed or keyless state merges in the driver
         (``_arrow_fold``); SESSION views and state past
-        ``_VIEW_ARROW_FOLD_MAX_BYTES`` run the Spark read plan and
-        write it."""
+        ``_DRIVER_ARROW_MAX_BYTES`` run the Spark read plan, whose rows
+        ``_write_rows`` writes like any other frame's."""
         if vi.we_high_water is None:
             for d in [f"v{base}"] + [f"v{base}_d{j}" for j in ks]:
                 HStreamEngine._advance_high_water(
@@ -1123,7 +1173,7 @@ class HStreamEngine:
     def _arrow_foldable(vi: ViewInfo, base: int, ks: list) -> bool:
         """Does this fold merge in the driver? Keyed latest-wins and
         keyless views do, while base+deltas hold at most
-        ``_VIEW_ARROW_FOLD_MAX_BYTES`` footer bytes (cached, no job).
+        ``_DRIVER_ARROW_MAX_BYTES`` footer bytes (cached, no job).
         SESSION views resolve overlap, not key equality, and pyarrow
         cannot group on list, map or struct keys: those stay on the
         Spark plan."""
@@ -1136,29 +1186,30 @@ class HStreamEngine:
         live = [f"v{base}"] + [f"v{base}_d{k}" for k in ks]
         return (sum(HStreamEngine._state_size(vi, d, vi.delta_bytes_cache)
                     for d in live)
-                <= HStreamEngine._VIEW_ARROW_FOLD_MAX_BYTES)
+                <= HStreamEngine._DRIVER_ARROW_MAX_BYTES)
 
     @staticmethod
     def _arrow_fold(vi: ViewInfo, base: int, ks: list) -> pa.Table:
         """The rows the Spark fold writes — ``_retained`` over
         ``_view_state_frame`` — merged with pyarrow in the driver. Base
-        and deltas are read under the base footer's schema and
-        concatenated in version order; per key the row with the highest
-        index (the newest version) wins. A keyless view's newest delta
-        is its state. Float keys group with -0.0 turned into 0.0:
-        Spark's key equality takes them as one value, while Arrow's
-        hash grouping compares bits. NaN keys need no rewrite, because
-        Spark's row writer stores every NaN as the one canonical NaN."""
-        import numpy as np
-
+        and deltas are read under the oldest footer's schema (a
+        driver-written generation that folded to nothing holds no
+        part) and concatenated in version order; per key the row with
+        the highest index (the newest version) wins. A keyless view's
+        newest delta is its state. Float keys group with -0.0 turned
+        into 0.0: Spark's key equality takes them as one value, while
+        Arrow's hash grouping compares bits. NaN keys need no rewrite,
+        because every state write stores the one canonical NaN
+        (Spark's row writer, and ``_nan_canonical`` in the driver)."""
         dirs = [f"v{base}"] + [f"v{base}_d{k}" for k in ks]
         if not vi.key_cols:
             dirs = dirs[-1:]
-        first = pq.read_table(os.path.join(vi.state_dir, dirs[0]))
+        paths = [os.path.join(vi.state_dir, d) for d in dirs]
+        schema = next((pq.read_schema(os.path.join(p, f))
+                       for p in paths for f in sorted(os.listdir(p))
+                       if f.endswith(".parquet")), None)
         state = pa.concat_tables(
-            [first] + [pq.read_table(os.path.join(vi.state_dir, d),
-                                     schema=first.schema)
-                       for d in dirs[1:]]
+            [pq.read_table(p, schema=schema) for p in paths]
         )
         if len(dirs) > 1:
             cols = {}
@@ -1216,9 +1267,10 @@ class HStreamEngine:
     @staticmethod
     def _should_compact(vi: ViewInfo, base: int, ks: list) -> bool:
         """Size-adaptive fold-down decision from parquet footers only.
-        _VIEW_COMPACT_EVERY is the cadence FLOOR (a fold is an extra
-        Spark job; folding more often than round 8's fixed cadence
-        regressed the dense-workload sf1 reduce sweep); at the floor a
+        _VIEW_COMPACT_EVERY is the cadence FLOOR (a fold rewrites the
+        whole base, and past the driver cap it is a Spark job; folding
+        more often than round 8's fixed cadence regressed the
+        dense-workload sf1 reduce sweep); at the floor a
         fold fires only when the deltas carry ≥ _VIEW_COMPACT_FRACTION
         of the base's rows — tiny deltas on a large base defer the
         O(base) rewrite up to _VIEW_COMPACT_MAX_DELTAS, the hard cap on
@@ -1694,8 +1746,8 @@ class HStreamEngine:
         same as the reference's FlowObject ingestion).
 
         A page ``_arrow_page`` can build is written in-process (one
-        pyarrow file, no Spark job); every other page runs the Spark
-        ``from_json`` append below."""
+        pyarrow file, no Spark job); every other page is parsed by the
+        Spark ``from_json`` plan below and written by ``_write_rows``."""
         if not records:
             return 0
         self._settle_layout(info)
@@ -1704,7 +1756,7 @@ class HStreamEngine:
                 self._evolve_payload_schema(info, rec)
         page = self._arrow_page(info, records)
         if page is not None:
-            self._write_arrow_page(info, page)
+            self._write_rows(page, info.path)
             return len(records)
         rows = [
             (json.dumps(rec, default=_payload_default), float(ts))
@@ -1755,10 +1807,10 @@ class HStreamEngine:
         # one part file per append: INSERT/poll batches are driver-sized
         # (a few rows to a few thousand), but createDataFrame spreads
         # them over defaultParallelism partitions — without the coalesce
-        # every single-row INSERT writes one empty part plus one 1-row
-        # part, doubling the small-file accumulation compact() exists to
-        # fix
-        out.coalesce(1).write.mode("append").parquet(info.path)
+        # a Spark write of a single-row INSERT writes one empty part
+        # plus one 1-row part, doubling the small-file accumulation
+        # compact() exists to fix (a driver write is one part anyway)
+        self._write_rows(out.coalesce(1), info.path)
         return len(rows)
 
     def _arrow_page(self, info: StreamInfo, records: list):
@@ -1802,18 +1854,45 @@ class HStreamEngine:
         arrays.append(pa.array(ts, pa.timestamp("us", tz="UTC")))
         return pa.table(arrays, names=names)
 
-    def _write_arrow_page(self, info: StreamInfo, page) -> None:
-        """One snappy parquet part per page, written under a dot-prefixed
-        temp name (hidden from Spark's listing and every ``.parquet``
-        scan here) and renamed into place: the stream's file source
-        sees the whole page or none of it, and the caller commits its
-        offsets only after the rename."""
+    @staticmethod
+    def _write_rows(rows, path: str) -> None:
+        """The one write of rows into a stream directory or a view-state
+        temp dir. ``rows`` is a DataFrame, or a pyarrow Table already
+        in the driver (a Kafka page, a driver-side fold).
+
+        A DataFrame whose every column type is in
+        ``_DRIVER_WRITE_TYPES`` and whose optimized plan Spark itself
+        estimates at most ``_DRIVER_ARROW_MAX_BYTES`` (the estimate it
+        uses to pick a broadcast side; joins and JDBC or rate sources
+        estimate huge) is collected with ``toArrow()``, one job; any
+        other runs Spark's parquet write. A driver write stores every
+        NaN canonical, as Spark's writer does, and writes one snappy
+        parquet part under a dot-prefixed temp name (hidden from
+        Spark's listing and every ``.parquet`` scan here), renamed into
+        place: a reader sees the whole part or none of it, and a caller
+        that commits offsets or an epoch marker does so after the
+        rename. An empty table writes no part."""
+        if isinstance(rows, DataFrame):
+            if not (_driver_writable(rows.schema)
+                    and rows._jdf.queryExecution().optimizedPlan().stats()
+                    .sizeInBytes() <= HStreamEngine._DRIVER_ARROW_MAX_BYTES):
+                rows.write.mode("append").parquet(path)
+                return
+            rows = rows.toArrow()
+            rows = pa.Table.from_arrays([
+                pa.chunked_array([_nan_canonical(c) for c in col.chunks],
+                                 col.type)
+                for col in rows.columns
+            ], schema=rows.schema)
+        os.makedirs(path, exist_ok=True)
+        if rows.num_rows == 0:
+            return
         name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
-        tmp = os.path.join(info.path, f".{name}.tmp")
+        tmp = os.path.join(path, f".{name}.tmp")
         try:
-            pq.write_table(page, tmp, compression="snappy")
+            pq.write_table(rows, tmp, compression="snappy")
             _fault("append-written")
-            os.replace(tmp, os.path.join(info.path, name))
+            os.replace(tmp, os.path.join(path, name))
         except BaseException:
             if os.path.exists(tmp):
                 os.remove(tmp)
@@ -1955,14 +2034,17 @@ class HStreamEngine:
         foreachBatch is at-least-once (a crash between the sink write
         and the offset commit replays the epoch), so the sink records
         the last epoch it wrote and skips replays — the standard
-        batchId-dedup pattern. Delivery is exactly-once across stop/
-        restart and Spark-side epoch replays; a hard crash INSIDE the
-        window between the parquet append and the marker os.replace
-        can still duplicate that one epoch on recovery (at-least-once
-        in that narrow window — a transactional sink table, e.g.
-        Delta/Iceberg MERGE keyed by epoch, closes it). With
-        ``payload`` the sink stream is value-typed: rows JSON-encode
-        via to_json (map-only)."""
+        batchId-dedup pattern. The page goes through ``_write_rows``,
+        so readers see all of it or none of it: a driver-written page
+        appears with its part's rename, a Spark-written one with its
+        job's commit. Delivery is exactly-once across stop/restart and
+        Spark-side epoch replays; a hard crash INSIDE the window after
+        the page appears and before the marker's os.replace can still
+        duplicate that one epoch on recovery (at-least-once in that
+        narrow window — a transactional sink table, e.g. Delta/Iceberg
+        MERGE keyed by epoch, closes it). With ``payload`` the sink
+        stream is value-typed: rows JSON-encode via to_json
+        (map-only)."""
 
         marker = os.path.join(checkpoint_dir, "_sink_epoch")
 
@@ -1984,14 +2066,15 @@ class HStreamEngine:
             if coalesce_to:
                 # stateless (append) queries keep the source's split
                 # count — a 64-file trigger otherwise fans out into 64
-                # write tasks producing 64 tiny part files per trigger:
-                # most of the map path's addBatch time is task launch +
-                # parquet open/commit overhead, and the file count
-                # compounds for every downstream reader's listing.
+                # tasks, and a Spark write into 64 tiny part files per
+                # trigger: most of the map path's addBatch time is task
+                # launch + parquet open/commit overhead, and the file
+                # count compounds for every downstream reader's listing.
                 # Shuffled (aggregate) batches already arrive at
                 # streaming_shuffle_partitions, so this is a no-op there.
+                # A driver write is one part file whatever the count.
                 out_df = out_df.coalesce(coalesce_to)
-            out_df.write.mode("append").parquet(sink_path)
+            HStreamEngine._write_rows(out_df, sink_path)
             os.makedirs(checkpoint_dir, exist_ok=True)
             tmp = marker + ".tmp"
             with open(tmp, "w") as f:
@@ -2265,16 +2348,15 @@ class HStreamEngine:
                 else:
                     snap = C.jdbc_source(self.spark, opts)
                 snap = snap.withColumn(EVENT_TIME_COL, F.current_timestamp())
-                snap = self._claim_or_encode(target, snap)
-                snap.write.mode("append").parquet(target.path)
+                self._write_rows(self._claim_or_encode(target, snap),
+                                 target.path)
             else:
                 target = self._require_stream(info.target)
 
                 def _emit(df: DataFrame) -> None:
                     out = df.withColumn(EVENT_TIME_COL, F.current_timestamp())
-                    self._claim_or_encode(target, out).write.mode(
-                        "append"
-                    ).parquet(target.path)
+                    self._write_rows(self._claim_or_encode(target, out),
+                                     target.path)
 
                 tailer_cls = (
                     C.MongoCdcTailer if ctype == "mongodb" else C.JdbcCdcTailer
@@ -2328,9 +2410,8 @@ class HStreamEngine:
                     self._save_stream_schema(target)
 
             def _gen_write(batch_df: DataFrame, _eid: int) -> None:
-                self._claim_or_encode(target, batch_df).write.mode(
-                    "append"
-                ).parquet(target.path)
+                self._write_rows(self._claim_or_encode(target, batch_df),
+                                 target.path)
 
             self._start_query(
                 (info,), lambda: rate, "append", _gen_write,
@@ -2470,7 +2551,7 @@ class HStreamEngine:
                 f"INSERT value types conflict with stream {info.name!r} "
                 f"schema ({exc})"
             ) from exc
-        row_df.coalesce(1).write.mode("append").parquet(info.path)
+        self._write_rows(row_df.coalesce(1), info.path)
         self.vacuum(stmt.stream)
         return 1
 

@@ -18,7 +18,7 @@ sys.path.insert(
 
 
 @pytest.mark.slow
-def test_composed_pipeline_across_compaction(spark):
+def test_composed_pipeline_across_compaction(spark, sf_dir):
     # 9 cycles crosses TWO stream compactions (cycles 3 and 7), the
     # cycle-8 index compaction, and the 3-minute view retention
     # horizon: the rewritten segments must NOT re-enter the batch step
@@ -27,7 +27,7 @@ def test_composed_pipeline_across_compaction(spark):
     # cycles>=9 plateau invariants inside soak() are exercised
     from curation_soak import soak
 
-    result = soak(spark, "/root/testdata/sf0.001", cycles=9, per_cycle=40)
+    result = soak(spark, sf_dir, cycles=9, per_cycle=40)
     s = result["summary"]
     cycles = result["cycles"]
 

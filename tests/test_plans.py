@@ -11,8 +11,7 @@ import re
 import pytest
 
 from hstream_spark.queries import REGISTRY
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR as SF
 
 
 def plan_of(spark, name: str) -> str:

@@ -867,7 +867,7 @@ class TestScalarQuantization:
         codes = {r["vec_id"]: r["codes"] for r in sq_encode(emb, mns, mxs).collect()}
         assert codes[0][0] == 0 and codes[1][0] == 0
 
-    def test_np_kernels_match_expression_path(self, spark):
+    def test_np_kernels_match_expression_path(self, spark, sf_dir):
         """The catalog entry runs the Arrow/numpy kernels; the Catalyst
         expression path must agree byte-exactly (all-int64 pipeline)."""
         from pyspark.sql import functions as F
@@ -880,7 +880,7 @@ class TestScalarQuantization:
             sq_train,
         )
 
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         mns, mxs = sq_train(emb)
         c_expr = {r["vec_id"]: list(r["codes"])
                   for r in sq_encode(emb, mns, mxs).collect()}
@@ -958,7 +958,8 @@ class TestScalarQuantization:
                 for r in sq_adc_topk(codes, q, mns, mxs, k=3).collect()]
         assert got == want
 
-    def test_persisted_index_matches_direct_path(self, spark, tmp_path):
+    def test_persisted_index_matches_direct_path(self, spark, sf_dir,
+                                                 tmp_path):
         from pyspark.sql import functions as F
 
         from hstream_spark.operators.similarity import (
@@ -969,7 +970,7 @@ class TestScalarQuantization:
             sq_train,
         )
 
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         path = str(tmp_path / "sqidx")
         build_sq_index(emb, path)
         q = emb.where(F.col("vec_id") < 2)

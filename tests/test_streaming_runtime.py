@@ -1750,3 +1750,34 @@ def test_runtime_has_one_start_path():
            / "streaming" / "runtime.py").read_text()
     assert len(re.findall(r"writeStream", src)) == 1
     assert len(re.findall(r"\.starter\s*=(?!=)", src)) == 1
+
+
+def test_runtime_has_one_append_path():
+    """Every write of rows into a stream or view state goes through
+    ``_write_rows``, which picks the driver's Arrow write or Spark's by
+    the frame's size estimate and types; only ``compact()``, which
+    rewrites a stream's parts, runs Spark's writer beside it. A
+    DataFrame ``.write`` anywhere else is a second append path that
+    skips the gate, the NaN canonicalization and the temp-file
+    rename."""
+    import ast
+    import pathlib
+
+    src = (pathlib.Path(__file__).resolve().parents[1] / "hstream_spark"
+           / "streaming" / "runtime.py").read_text()
+    calls = set()  # file handles' write(...) calls, not DataFrame.write
+
+    def visit(node, scope):
+        if isinstance(node, ast.Call):
+            calls.add(id(node.func))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = f"{scope}.{node.name}" if scope else node.name
+        if (isinstance(node, ast.Attribute) and node.attr == "write"
+                and id(node) not in calls):
+            writers.append(scope)
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    writers: list = []
+    visit(ast.parse(src), "")
+    assert sorted(writers) == ["_write_rows", "compact"], writers

@@ -1078,10 +1078,10 @@ class TestCappedMinhashLSH:
     wherever buckets fit the cap; an adversarial hot bucket must yield
     bounded pair counts while the dup CLUSTER stays connected."""
 
-    def test_capped_equals_uncapped_on_standard_corpus(self, spark):
+    def test_capped_equals_uncapped_on_standard_corpus(self, spark, sf_dir):
         from hstream_spark.operators import dedup as D
 
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         base = sorted(
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
             for r in D.minhash_near_duplicates(docs, threshold=0.5).collect()
@@ -1146,10 +1146,10 @@ class TestCappedSimhash:
     decisions when buckets fit the cap, bounded pairs + connected
     clusters when they don't)."""
 
-    def test_capped_equals_uncapped_when_buckets_fit(self, spark):
+    def test_capped_equals_uncapped_when_buckets_fit(self, spark, sf_dir):
         from hstream_spark.operators import dedup as D
 
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         base = sorted(
             (r["doc_a"], r["doc_b"], r["hamming"])
             for r in D.simhash_near_duplicates(docs, max_hamming=3).collect()

@@ -1,4 +1,4 @@
-"""Driver-side view fold: below ``_VIEW_ARROW_FOLD_MAX_BYTES`` the
+"""Driver-side view fold: below ``_DRIVER_ARROW_MAX_BYTES`` the
 pyarrow merge must write exactly the rows the Spark fold writes
 (``_retained`` over ``_view_state_frame``) and run no Spark job; above
 it the fold stays on the Spark plan."""
@@ -74,7 +74,7 @@ def _assert_fold_parity(spark, vi, tmp_path, monkeypatch, name):
     assert HStreamEngine._arrow_foldable(vi, base, ks)
     assert _fold_jobs(spark, vi, base, ks, f"arrow-fold-{name}") == []
 
-    monkeypatch.setattr(HStreamEngine, "_VIEW_ARROW_FOLD_MAX_BYTES", 0)
+    monkeypatch.setattr(HStreamEngine, "_DRIVER_ARROW_MAX_BYTES", 0)
     assert not HStreamEngine._arrow_foldable(spark_vi, base, ks)
     assert _fold_jobs(spark, spark_vi, base, ks, f"spark-fold-{name}") != []
     monkeypatch.undo()

@@ -111,7 +111,7 @@ def _fold_often(request, monkeypatch):
     """Low cadence floor + no size deferral: random sequences reach the
     compaction branches within a handful of batches (production floor
     is 8 — unreachable in short examples). Every machine runs at the
-    default ``_VIEW_ARROW_FOLD_MAX_BYTES`` (keyed and keyless folds
+    default ``_DRIVER_ARROW_MAX_BYTES`` (keyed and keyless folds
     merge in the driver) and at 0 (every fold runs the Spark plan);
     SESSION folds take the Spark plan at both."""
     import hstream_spark.streaming.runtime as R
@@ -119,7 +119,7 @@ def _fold_often(request, monkeypatch):
     monkeypatch.setattr(R.HStreamEngine, "_VIEW_COMPACT_EVERY", 2)
     monkeypatch.setattr(R.HStreamEngine, "_VIEW_COMPACT_FRACTION", 0.0)
     if request.param is not None:
-        monkeypatch.setattr(R.HStreamEngine, "_VIEW_ARROW_FOLD_MAX_BYTES",
+        monkeypatch.setattr(R.HStreamEngine, "_DRIVER_ARROW_MAX_BYTES",
                             request.param)
 
 
