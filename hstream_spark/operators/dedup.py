@@ -586,18 +586,18 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
     )
 
 
-def _guard_block_size(docs: DataFrame, block_cols: list[str],
-                      max_block: Optional[int], op_name: str) -> None:
+# Largest block the quadratic within-block pair operators accept.
+_MAX_BLOCK = 20_000
+
+
+def _guard_block_size(docs: DataFrame, block_cols: list[str], op_name: str) -> None:
     """Enforce the 'blocks must be bounded' contract of the quadratic
     within-block baselines: a skewed block key (one language, one
     domain) silently turns O(Σ block²) into O(corpus²). One cheap
     count-per-block aggregation over the BLOCK COLUMNS ONLY (block
     size doesn't depend on text, so the scan column-prunes to the keys
     and no shingle work runs; model-sized driver traffic — a single
-    max) fails loudly with the scale path instead. ``max_block=None``
-    opts out deliberately."""
-    if max_block is None:
-        return
+    max) fails loudly with the scale path instead."""
     top = (
         docs.select(*[F.col(c) for c in block_cols])
         .groupBy(*block_cols)
@@ -605,12 +605,12 @@ def _guard_block_size(docs: DataFrame, block_cols: list[str],
         .agg(F.max("__n").alias("mx"), F.sum("__n").alias("n"))
         .collect()[0]
     )
-    if (top["mx"] or 0) > max_block:
+    if (top["mx"] or 0) > _MAX_BLOCK:
         raise ValueError(
             f"{op_name}: largest block has {top['mx']} rows "
-            f"(> max_block={max_block}); the within-block self-join is "
+            f"(> _MAX_BLOCK={_MAX_BLOCK}); the within-block self-join is "
             f"quadratic, so this block alone yields ~{top['mx']}^2 pairs. "
-            "Use finer block_cols, raise max_block deliberately, or use "
+            "Use finer block_cols, or use "
             "minhash_near_duplicates / dedup_minhash_lsh (banded LSH) as "
             "the corpus-scale candidate generator."
         )
@@ -618,12 +618,11 @@ def _guard_block_size(docs: DataFrame, block_cols: list[str],
 
 def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str], threshold: float = 0.3,
                         text_col: str = "text", id_col: str = "doc_id",
-                        n: int = 2,
-                        max_block: Optional[int] = 20_000) -> DataFrame:
+                        n: int = 2) -> DataFrame:
     """Exact word-n-gram Jaccard over all pairs within a block.
 
     Brute-force baseline: O(block²) — block sizes are ENFORCED bounded
-    (loud error past ``max_block``, the `max_queries` pattern; LSH is
+    (loud error past ``_MAX_BLOCK``, the ``_MAX_QUERIES`` pattern; LSH is
     the unblocked-corpus scale path).
     """
     from hstream_spark.sources.tables import spread
@@ -637,7 +636,7 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str], threshold: float
         *block_cols, "doc_id",
         shingles_from_hashes(F.col("_th"), n).alias("hs"),
     ).persist()
-    _guard_block_size(docs, block_cols, max_block, "ngram_jaccard_pairs")
+    _guard_block_size(docs, block_cols, "ngram_jaccard_pairs")
     a = sets.select(*block_cols, F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
     b = sets.select(*block_cols, F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
     joined = a.join(b, block_cols).filter(F.col("doc_a") < F.col("doc_b"))
@@ -1182,8 +1181,6 @@ def index_file_counts(path: str) -> dict:
 def compact_dedup_index(
     spark,
     path: str,
-    retain_ids: Optional[DataFrame] = None,
-    id_col: str = "doc_id",
     target_files: int = 4,
 ) -> dict:
     """Rewrite the standing dedup index into coalesced files — the
@@ -1196,12 +1193,7 @@ def compact_dedup_index(
     - ``bands/`` re-clusters on the band key (one shuffle task per
       band → ~1 file per band partition, preserving the partition
       pruning the warm path depends on);
-    - ``sets``/``digests`` coalesce to ``target_files`` (map-only);
-    - ``retain_ids`` (optional, one ``id_col`` column) drops band/set
-      rows for documents REMOVED from the corpus — retention without a
-      full rebuild. Digests are text-keyed, not id-keyed, so retention
-      leaves them; rebuild via ``build_dedup_index`` when exact-dup
-      retention matters.
+    - ``sets``/``digests`` coalesce to ``target_files`` (map-only).
 
     Each component rewrites to ``<comp>__compact`` then swaps
     directories (old moved aside and deleted) — readers racing the
@@ -1230,10 +1222,6 @@ def compact_dedup_index(
 
     bands = spark.read.parquet(_os.path.join(path, "bands"))
     sets = spark.read.parquet(_os.path.join(path, "sets"))
-    if retain_ids is not None:
-        keep = retain_ids.select(F.col(id_col)).distinct()
-        bands = bands.join(keep, id_col, "left_semi")
-        sets = sets.join(keep, id_col, "left_semi")
     # one shuffle task per band value → one file per band partition
     _swap(
         "bands",
@@ -1325,7 +1313,6 @@ def containment_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_block: Optional[int] = 20_000,
 ) -> DataFrame:
     """Near-containment detection: pairs where most of document A's
     distinct n-gram set also appears in document B —
@@ -1360,7 +1347,7 @@ def containment_pairs(
             F.transform(ngrams(F.col(text_col), n), lambda g: F.xxhash64(g))
         ).alias("__g"),
     ).where(F.size("__g") > 0).persist()
-    _guard_block_size(docs, block_cols, max_block, "containment_pairs")
+    _guard_block_size(docs, block_cols, "containment_pairs")
     # prefix: any floor((1-t)*|A|)+1 grams satisfy the filter — which
     # ones is pure optimization, and the canonical All-Pairs choice is
     # the RAREST (global document frequency ascending): on a
@@ -1455,8 +1442,7 @@ def lsh_bucket_stats(docs: DataFrame, text_col: str = "text",
     )
 
 
-def lsh_recall_eval(docs: DataFrame, thresholds=(0.3, 0.5, 0.7),
-                    max_id: Optional[int] = None, text_col: str = "text",
+def lsh_recall_eval(docs: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id") -> DataFrame:
     """Recall of MinHash-LSH candidate generation against exact
     shingle-Jaccard ground truth — the measurement behind the
@@ -1467,20 +1453,20 @@ def lsh_recall_eval(docs: DataFrame, thresholds=(0.3, 0.5, 0.7),
     shingle hash, pair counts by groupBy), never an all-pairs cross
     join — it scales with shared-shingle pairs, not corpus². That
     truth join is still the expensive thing LSH exists to avoid, so at
-    corpus scale run this on a SAMPLE (``max_id``, or sample upstream)
-    and tune parameters from the sample's recall. One row per
-    threshold: true near-dup pairs at that Jaccard, how many the band
+    corpus scale run this on a sample taken upstream and tune
+    parameters from the sample's recall. One row per threshold (0.3,
+    0.5, 0.7): true near-dup pairs at that Jaccard, how many the band
     index surfaced, and recall; plus the total candidate count (the
     precision denominator / join cost).
     """
-    sample = docs.where(F.col(id_col) < max_id) if max_id is not None else docs
+    thresholds = (0.3, 0.5, 0.7)
     # exclude unshingleable docs (see lsh_bucket_stats) — they can be
     # neither ground truth nor candidates. NOTE: the returned frame is
     # lazy, so the persisted shingle sets stay cached for the session
     # (like minhash_near_duplicates); long-lived services should
     # unpersist via spark.catalog.clearCache() between evaluations.
     sets = (
-        doc_shingle_sets(sample, text_col, id_col, nonempty=True)
+        doc_shingle_sets(docs, text_col, id_col, nonempty=True)
         .persist()
     )
     ex = sets.select("doc_id", F.explode("hs").alias("h"))
@@ -1523,26 +1509,23 @@ def lsh_recall_eval(docs: DataFrame, thresholds=(0.3, 0.5, 0.7),
     # distinct runs twice. The distinct pair list is tiny, so the
     # checkpoint is near-free.
     cand = cand.localCheckpoint()
-    if thresholds:
-        # pairs below every threshold contribute 0 to each __true_i
-        # (otherwise-0 arm) and 0 to each __hit_i (null hit coalesced),
-        # so dropping them BEFORE the scoring join is exact — the join
-        # and final aggregation then run over the near-dup pairs only,
-        # not every co-shingle pair (1.13M rows at sf0.1)
-        jac = jac.where(F.col("jaccard") >= float(min(
-            float(t) for t in thresholds
-        )))
+    # pairs below every threshold contribute 0 to each __true_i
+    # (otherwise-0 arm) and 0 to each __hit_i (null hit coalesced),
+    # so dropping them BEFORE the scoring join is exact — the join
+    # and final aggregation then run over the near-dup pairs only,
+    # not every co-shingle pair (1.13M rows at sf0.1)
+    jac = jac.where(F.col("jaccard") >= min(thresholds))
     scored = jac.join(
         cand.withColumn("__hit", F.lit(1)), ["doc_a", "doc_b"], "left"
     )
     aggs = []
     for i, t in enumerate(thresholds):
-        hit = F.when(F.col("jaccard") >= float(t), F.col("__hit"))
+        hit = F.when(F.col("jaccard") >= t, F.col("__hit"))
         # coalesce AFTER the sum too: an empty sample aggregates to
         # NULL, but the contract (and the DuckDB oracle) is 0 counts
         # with one row per threshold
         aggs.append(F.coalesce(
-            F.sum(F.when(F.col("jaccard") >= float(t), 1).otherwise(0)),
+            F.sum(F.when(F.col("jaccard") >= t, 1).otherwise(0)),
             F.lit(0),
         ).alias(f"__true_{i}"))
         aggs.append(F.coalesce(
@@ -1551,7 +1534,7 @@ def lsh_recall_eval(docs: DataFrame, thresholds=(0.3, 0.5, 0.7),
     one = scored.agg(*aggs)
     total = cand.agg(F.count("*").alias("total_candidates"))
     stack = ", ".join(
-        f"{float(t)}D, __true_{i}, __hit_{i}" for i, t in enumerate(thresholds)
+        f"{t}D, __true_{i}, __hit_{i}" for i, t in enumerate(thresholds)
     )
     return (
         one.crossJoin(F.broadcast(total))  # 1-row scalar broadcast

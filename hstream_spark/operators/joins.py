@@ -129,12 +129,12 @@ def salted_join(
     right: DataFrame,
     on: str | Sequence[str],
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-mitigated equi-join: hot keys on the (large) left side are
-    spread across ``salt`` sub-partitions; the right side is replicated
-    ``salt``-fold so every sub-partition can match. Result is identical
-    to ``left.join(right, on, how)`` — only the shuffle layout changes.
+    """Skew-mitigated inner equi-join: hot keys on the (large) left side
+    are spread across ``salt`` sub-partitions; the right side is
+    replicated ``salt``-fold so every sub-partition can match. Result is
+    identical to ``left.join(right, on)`` — only the shuffle layout
+    changes.
 
     Use when BOTH sides are too big to broadcast and a few keys carry a
     disproportionate share of rows (AQE's skew-join handles sort-merge
@@ -143,31 +143,28 @@ def salted_join(
     hashes the whole row, so rows of one hot key scatter uniformly.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    if how not in {"inner", "left"}:
-        # replicated right rows would duplicate right-side non-matches
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     l2 = left.withColumn(
         "_salt", F.pmod(F.hash(*[F.col(c) for c in left.columns]), F.lit(salt))
     )
     r2 = right.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
-    return l2.join(r2, keys + ["_salt"], how).drop("_salt")
+    return l2.join(r2, keys + ["_salt"]).drop("_salt")
 
 
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | Sequence[str],
+    tiebreak: str,
     left_ts: str = "ts",
     right_ts: str = "ts",
-    tiebreak: str | None = None,
-    how: str = "left",
 ) -> DataFrame:
     """As-of join (extension — the reference has none, SURVEY §2.3):
     for each left row, attach the most recent right row with
-    ``right_ts <= left_ts`` in the same key group. ``tiebreak`` names a
-    right column that breaks equal-timestamp ties (max wins).
+    ``right_ts <= left_ts`` in the same key group, or nulls when there
+    is none (a left join). ``tiebreak`` names a right column that breaks
+    equal-timestamp ties (max wins).
 
     Scale design: NOT a time-range join (which explodes to every
     earlier match and re-filters). Both sides are unioned with a side
@@ -179,8 +176,6 @@ def asof_join(
     visible (inclusive as-of-backward).
     """
     keys = [on] if isinstance(on, str) else list(on)
-    if how not in {"left", "inner"}:
-        raise ValueError(f"asof_join supports left/inner, got {how!r}")
     lcols = [c for c in left.columns if c not in keys]
     rcols = [c for c in right.columns if c not in keys]
     rschema = right.select(*rcols).schema
@@ -201,12 +196,10 @@ def asof_join(
     )
     from pyspark.sql import Window
 
-    order = [F.col("_ts").asc(), F.col("_side").asc()]
-    if tiebreak is not None:
-        order.append(F.col("_r").getField(tiebreak).asc())
     w = (
         Window.partitionBy(*keys)
-        .orderBy(*order)
+        .orderBy(F.col("_ts").asc(), F.col("_side").asc(),
+                 F.col("_r").getField(tiebreak).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     u = l2.unionByName(r2)
@@ -214,8 +207,6 @@ def asof_join(
         u.withColumn("_m", F.last("_r", ignorenulls=True).over(w))
         .filter(F.col("_side") == 1)
     )
-    if how == "inner":
-        matched = matched.filter(F.col("_m").isNotNull())
     out_cols = (
         [F.col(k) for k in keys]
         + [F.col("_l").getField(c).alias(c) for c in lcols]
@@ -278,7 +269,7 @@ def range_join(
     value_col: str,
     lo_col: str,
     hi_col: str,
-    bucket_width: float | None = None,
+    bucket_width: float,
     how: str = "inner",
 ) -> DataFrame:
     """Numeric range join: left rows matched to right rows whose
@@ -287,18 +278,14 @@ def range_join(
     price-band enrichment.
 
     Naively this is a theta join (BroadcastNestedLoop when the right
-    side is big enough to matter). With ``bucket_width`` set, both
-    sides key on fixed-width value buckets — the right interval
-    EXPLODES into every bucket it overlaps — and the join becomes a
-    bucket equi-join plus an exact refine filter: one hash shuffle,
-    right-side replication factor = avg interval width / bucket_width.
-    Pick bucket_width ≈ the median interval width so replication stays
-    O(1). With ``bucket_width=None`` the right side broadcasts (small
-    band tables — the common case).
+    side is big enough to matter). Here both sides key on fixed-width
+    value buckets — the right interval EXPLODES into every bucket it
+    overlaps — and the join becomes a bucket equi-join plus an exact
+    refine filter: one hash shuffle, right-side replication factor =
+    avg interval width / bucket_width. Pick bucket_width ≈ the median
+    interval width so replication stays O(1).
     """
     cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) <= F.col(hi_col))
-    if bucket_width is None:
-        return left.join(F.broadcast(right), cond, how)
     lb = left.withColumn("__rb", F.floor(F.col(value_col) / bucket_width))
     rb = right.withColumn(
         "__rb",

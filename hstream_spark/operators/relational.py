@@ -71,13 +71,13 @@ def union(left: DataFrame, right: DataFrame) -> DataFrame:
 
 def profile_table(
     df: DataFrame,
-    columns: list[str] | None = None,
     approx_distinct: bool = False,
 ) -> DataFrame:
     """Data profiling — the schema-quality report a pipeline runs before
-    committing 100 TB to training: per column, row count, null count and
-    rate, distinct count, and min/max (rendered as strings so one tidy
-    schema covers every column type).
+    committing 100 TB to training: per column of ``df`` (select first
+    to profile fewer), row count, null count and rate, distinct count,
+    and min/max (rendered as strings so one tidy schema covers every
+    column type).
 
     One wide aggregate computes every column's counts/extremes in a
     single pass (map-side partial, one 1-row reduction). Distinct
@@ -94,7 +94,7 @@ def profile_table(
     """
     from functools import reduce
 
-    cols = columns or df.columns
+    cols = df.columns
     approx_aggs = (
         [
             F.approx_count_distinct(F.col(c)).alias(f"__dist_{i}")

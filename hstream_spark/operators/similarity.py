@@ -17,8 +17,6 @@
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -100,6 +98,11 @@ def brute_force_topk(
     )
 
 
+# Largest query side the top-k kernels accept: it is collected to the
+# driver or broadcast into every scoring task.
+_MAX_QUERIES = 100_000
+
+
 def brute_force_topk_np(
     corpus: DataFrame,
     queries: DataFrame,
@@ -107,7 +110,6 @@ def brute_force_topk_np(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     digits: int = 8,
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Vectorized exact cosine top-k: the query matrix is collected
     (queries are the small side by construction) and broadcast into an
@@ -129,13 +131,13 @@ def brute_force_topk_np(
     # it must be driver/executor-memory sized; fail loudly (with the fix)
     # instead of OOMing the driver when someone points it at a corpus
     qrows = (
-        queries.select(F.col(id_col), F.col(vec_col)).limit(max_queries + 1).collect()
+        queries.select(F.col(id_col), F.col(vec_col)).limit(_MAX_QUERIES + 1).collect()
     )
-    if len(qrows) > max_queries:
+    if len(qrows) > _MAX_QUERIES:
         raise ValueError(
-            f"brute_force_topk_np: query side exceeds max_queries={max_queries} "
+            f"brute_force_topk_np: query side exceeds _MAX_QUERIES={_MAX_QUERIES} "
             "rows; it is collected to the driver and broadcast per task. "
-            "Pass a smaller query set (or raise max_queries deliberately), "
+            "Pass a smaller query set (or raise _MAX_QUERIES deliberately), "
             "or use ann_lsh_topk / ann_ivf_topk for corpus-x-corpus search."
         )
     q_ids = np.asarray([r[0] for r in qrows], dtype=np.int64)
@@ -267,8 +269,8 @@ def embedding_near_duplicates(
 
 def embedding_near_duplicates_capped(
     corpus: DataFrame,
+    dim: int,
     threshold: float = 0.9,
-    dim: int | None = None,
     planes: int = 8,
     tables: int = 2,
     cap: int = 64,
@@ -322,8 +324,6 @@ def embedding_near_duplicates_capped(
     join exchanges and its bogus-small post-broadcast size estimate
     can flip the self-join to a full-side broadcast.)
     """
-    if dim is None:
-        raise ValueError("dim is required for the LSH path")
     from pyspark.sql import Window as _W
 
     base = (
@@ -449,35 +449,30 @@ def train_ivf_quantizer(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    quantizer: list[tuple[int, list[float]]],
     k: int = 10,
-    n_clusters: int = 8,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quantizer: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are assigned to their
     nearest coarse centroid (inverted lists); each query scores only
     the lists of its ``nprobe`` nearest centroids.
 
-    The quantizer (n_clusters × dim doubles) is collected to the
-    driver and unrolled into literal expressions — assignment and
-    probe selection are then **map-only** (the standard IVF design:
-    the coarse quantizer is a tiny driver-side model, the inverted
-    lists are the distributed part). The only shuffle is the
-    candidate equi-join on the cluster id. At real scale n_clusters
-    is O(√n), keeping lists short and the join keys well-spread.
+    The quantizer (``(cluster_id, centroid)`` pairs, trained once by
+    ``train_ivf_quantizer`` or ``kmeans_fit``) is unrolled into literal
+    expressions — assignment and probe selection are then **map-only**
+    (the standard IVF design: the coarse quantizer is a tiny
+    driver-side model, the inverted lists are the distributed part).
+    The only shuffle is the candidate equi-join on the cluster id. At
+    real scale the quantizer has O(√n) centroids, keeping lists short
+    and the join keys well-spread.
     """
-    cents = (
-        quantizer
-        if quantizer is not None
-        else train_ivf_quantizer(corpus, n_clusters, id_col, vec_col)
-    )
     # centroid matrix + ids as two nested literals; per-row centroid
-    # cosines come from one transform fold (not n_clusters unrolled dot
-    # trees — plan-build cost scales with expression size)
-    cent_lit = F.lit([cvec for _, cvec in cents])
-    ids_lit = F.lit([cl for cl, _ in cents])
+    # cosines come from one transform fold (not one unrolled dot tree
+    # per centroid — plan-build cost scales with expression size)
+    cent_lit = F.lit([cvec for _, cvec in quantizer])
+    ids_lit = F.lit([cl for cl, _ in quantizer])
 
     def centroid_cos(vec: Column) -> Column:
         return F.transform(cent_lit, lambda c: dot(vec, c))
@@ -565,11 +560,9 @@ def lsh_topk(
 
 def kmeans_fit(
     corpus: DataFrame,
-    k: int = 8,
+    init: list[tuple[int, list[float]]],
     iters: int = 5,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    init: Optional[list[tuple[int, list[float]]]] = None,
     return_objectives: bool = False,
 ) -> (
     list[tuple[int, list[float]]]
@@ -589,13 +582,14 @@ def kmeans_fit(
     driver holds the model, executors hold the data, per-iteration
     traffic is model-sized, never data-sized.
 
-    Deterministic end to end: seed centroids are the id-hash group
-    means (`ivf_centroids`) — or the caller's ``init`` list of
-    ``(cluster_id, centroid)`` (already L2-normalized) — per-dimension
-    sums run in 2^-40 binary fixed point (exact integer arithmetic:
-    rounded int64 quanta accumulated as decimal(38,0), so the mean is
-    independent of shuffle/accumulation order and cannot silently wrap
-    the way a raw int64 sum would past ~2^23 rows per cell), ties break
+    Deterministic end to end: seed centroids are the caller's ``init``
+    list of ``(cluster_id, centroid)`` (already L2-normalized; the
+    production seed is `train_ivf_quantizer`'s id-hash group means) —
+    per-dimension sums run in 2^-40 binary fixed point (exact integer
+    arithmetic: rounded int64 quanta accumulated as decimal(38,0), so
+    the mean is independent of shuffle/accumulation order and cannot
+    silently wrap the way a raw int64 sum would past ~2^23 rows per
+    cell), ties break
     toward the lowest cluster id. A cluster that loses all members
     keeps its previous centroid. Binary (not decimal) quantization is
     deliberate: scaling by 2^40 is an EXACT double operation in every
@@ -625,9 +619,7 @@ def kmeans_fit(
         n = math.sqrt(s) or 1.0
         return [v / n for v in vals]
 
-    cents = init if init is not None else train_ivf_quantizer(
-        corpus, k, id_col, vec_col
-    )
+    cents = init
     base = corpus.select(normalized(F.col(vec_col)).alias("kvec"))
     objectives: list[float] = []
     for _ in range(iters):
@@ -845,7 +837,6 @@ def linear_probe_fit(
     iters: int = 3,
     lr: float = 0.5,
     vec_col: str = "embedding",
-    init: Optional[list[float]] = None,
 ) -> list[float]:
     """Distributed LINEAR PROBE trainer: least-squares gradient descent
     for ŷ = w·x + b over the first ``dim`` embedding dimensions — the
@@ -874,9 +865,7 @@ def linear_probe_fit(
     floating-op sequence the oracle's CTE chain replays.
     """
     scale = float(1 << 40)
-    w = list(init) if init is not None else [0.0] * (dim + 1)
-    if len(w) != dim + 1:
-        raise ValueError(f"init must have dim+1={dim + 1} weights (bias last)")
+    w = [0.0] * (dim + 1)
     base = corpus.filter(_probe_trainable(label, dim, vec_col)).select(
         F.slice(_to_double(F.col(vec_col)), 1, dim).alias("px"),
         label.cast("double").alias("py"),
@@ -926,7 +915,6 @@ def logistic_probe_fit(
     iters: int = 3,
     lr: float = 0.25,
     vec_col: str = "embedding",
-    init: Optional[list[float]] = None,
 ) -> tuple[list[float], list[float]]:
     """Distributed LOGISTIC-regression probe trainer — the shape real
     curation filters use (is this doc high-quality? in-domain?), run
@@ -952,9 +940,7 @@ def logistic_probe_fit(
     each update, plus after the final one). NULL label/embedding rows
     are excluded up front, mirroring ``linear_probe_fit``.
     """
-    w = list(init) if init is not None else [0.0] * (dim + 1)
-    if len(w) != dim + 1:
-        raise ValueError(f"init must have dim+1={dim + 1} weights (bias last)")
+    w = [0.0] * (dim + 1)
     base = corpus.filter(_probe_trainable(label, dim, vec_col)).select(
         F.slice(_to_double(F.col(vec_col)), 1, dim).alias("px"),
         label.cast("double").alias("py"),
@@ -1171,7 +1157,6 @@ def sq_adc_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Asymmetric top-k over scalar-quantized codes: the query stays
     exact (fixed-point), each corpus row dequantizes from its uint8
@@ -1181,12 +1166,12 @@ def sq_adc_topk(
     the 4× bandwidth cut is the point of SQ at corpus scale; the
     quantizer is two dim-length literals, no join for model access.
     Queries broadcast (small side by contract, loudly capped)."""
-    n = queries.limit(max_queries + 1).count()
-    if n > max_queries:
+    n = queries.limit(_MAX_QUERIES + 1).count()
+    if n > _MAX_QUERIES:
         raise ValueError(
-            f"sq_adc_topk: query side exceeds max_queries={max_queries} rows; "
+            f"sq_adc_topk: query side exceeds _MAX_QUERIES={_MAX_QUERIES} rows; "
             "it is broadcast against the code table. Pass a smaller query "
-            "set (or raise max_queries deliberately)."
+            "set (or raise _MAX_QUERIES deliberately)."
         )
     mn = F.lit(mns).cast("array<long>")
     mx = F.lit(mxs).cast("array<long>")
@@ -1299,7 +1284,6 @@ def sq_index_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Asymmetric top-k THROUGH a persisted SQ8 index: codes and
     quantizer read from disk, scoring identical to ``sq_adc_topk_np``
@@ -1313,7 +1297,7 @@ def sq_index_topk(
     codes = spark.read.parquet(_os.path.join(path, "codes"))
     return sq_adc_topk_np(
         codes, queries, q["mns"], q["mxs"], k=k,
-        id_col=id_col, vec_col=vec_col, max_queries=max_queries,
+        id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -1325,7 +1309,6 @@ def sq_adc_topk_np(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Vectorized twin of ``sq_adc_topk`` (the production kernel, same
     split as ``brute_force_topk`` / ``brute_force_topk_np``): queries
@@ -1342,13 +1325,13 @@ def sq_adc_topk_np(
     import pandas as pd
 
     qrows = (
-        queries.select(F.col(id_col), F.col(vec_col)).limit(max_queries + 1).collect()
+        queries.select(F.col(id_col), F.col(vec_col)).limit(_MAX_QUERIES + 1).collect()
     )
-    if len(qrows) > max_queries:
+    if len(qrows) > _MAX_QUERIES:
         raise ValueError(
-            f"sq_adc_topk_np: query side exceeds max_queries={max_queries} "
+            f"sq_adc_topk_np: query side exceeds _MAX_QUERIES={_MAX_QUERIES} "
             "rows; it is collected to the driver and broadcast per task. "
-            "Pass a smaller query set (or raise max_queries deliberately)."
+            "Pass a smaller query set (or raise _MAX_QUERIES deliberately)."
         )
     q_ids = np.asarray([r[0] for r in qrows], dtype=np.int64)
     Q = np.floor(
@@ -1489,7 +1472,6 @@ def pq_adc_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each corpus
     vector's approximate distance to a query is the sum over subspaces
@@ -1509,13 +1491,13 @@ def pq_adc_topk(
     """
     m = len(codebooks)
     qrows = (
-        queries.select(F.col(id_col), F.col(vec_col)).limit(max_queries + 1).collect()
+        queries.select(F.col(id_col), F.col(vec_col)).limit(_MAX_QUERIES + 1).collect()
     )
-    if len(qrows) > max_queries:
+    if len(qrows) > _MAX_QUERIES:
         raise ValueError(
-            f"pq_adc_topk: query side exceeds max_queries={max_queries} rows; "
+            f"pq_adc_topk: query side exceeds _MAX_QUERIES={_MAX_QUERIES} rows; "
             "it is collected to compute per-query distance tables. Pass a "
-            "smaller query set (or raise max_queries deliberately)."
+            "smaller query set (or raise _MAX_QUERIES deliberately)."
         )
     dsub = len(codebooks[0][0])
 

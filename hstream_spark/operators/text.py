@@ -377,7 +377,6 @@ def gopher_repetition(
     id_col: str = "doc_id",
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 10),
-    materialize: bool = True,
 ) -> "DataFrame":
     """Gopher repetition filters (Rae et al. 2021 appendix A1 — the
     repetition table that complements ``gopher_rules``' heuristics):
@@ -404,26 +403,21 @@ def gopher_repetition(
     persisted (StorageLevel default) before the branches fan out:
     tokenize/pagify are interpreted higher-order expressions, and
     re-deriving them per branch multiplied the whole scan cost by the
-    branch count (measured ~2× end-to-end). The in-array single-pass
-    form (``repetition_signals``) stays the cheap count-based signal;
-    this is the full char-accounting suite.
+    branch count (measured ~2× end-to-end). The returned rule table is
+    checkpointed eagerly and the tokenized cache released. The in-array
+    single-pass form (``repetition_signals``) stays the cheap
+    count-based signal; this is the full char-accounting suite.
     """
     text = F.col(text_col)
     did = F.col(id_col)
 
+    # cache the tokenized frame across the rule-family branches;
+    # released below once the tiny rule table is checkpointed
     base = docs.select(
         did,
         tokens(text).alias("__tk"),
         F.split(text, r"\n").alias("__lines"),
-    )
-    if materialize:
-        # cache the tokenized frame across the rule-family branches;
-        # released below once the tiny rule table is checkpointed. The
-        # lazy path deliberately skips it: a persist the caller can't
-        # see or unpersist would outlive the call (the only release
-        # would be a session-wide clearCache), so lazy composition
-        # trades ~branch-count re-tokenization for a leak-free plan.
-        base = base.persist()
+    ).persist()
     tk = F.col("__tk")
 
     def _grams(n: int) -> Column:
@@ -538,24 +532,16 @@ def gopher_repetition(
     res = out.select(*cols)
     keep = _reduce(lambda a, r: a & F.col(r), rule_names[1:], F.col(rule_names[0]))
     final = res.select("*", keep.alias("keep"))
-    if not materialize:
-        # Lazy composition path: the caller keeps the full lineage
-        # (recoverable after executor loss, predicate/column pruning
-        # still reaches the scan) but also inherits the persisted
-        # tokenized base — compose-and-execute promptly, then
-        # unpersist/clearCache.
-        return final
-    # materialize=True (default): the per-doc rule table (booleans +
-    # two longs per doc) is tiny next to the tokenized base, so run the
-    # job NOW, keep only ITS blocks, and release the fat cache rather
-    # than leaking it to the caller: localCheckpoint blocks are
+    # The per-doc rule table (booleans + two longs per doc) is tiny next
+    # to the tokenized base, so run the job NOW, keep only ITS blocks,
+    # and release the fat cache rather than leaking it to the caller:
+    # localCheckpoint blocks are
     # ContextCleaner-managed (freed when the returned frame is GC'd),
     # while a caller-invisible persist() would accumulate across
     # catalog/bench invocations. CLUSTER-MODE CAVEAT: localCheckpoint
     # truncates lineage to non-replicated executor blocks — an executor
     # loss makes the frame unrecoverable, and the eager job runs at
-    # construction time; long-lived cluster pipelines that need fault
-    # tolerance or lazy composition should pass materialize=False.
+    # construction time.
     final = final.localCheckpoint(eager=True)
     base.unpersist()
     return final
@@ -1280,12 +1266,11 @@ def quality_classifier(
     )
 
 
-def normalize_text(text: Column, lowercase: bool = False) -> Column:
+def normalize_text(text: Column) -> Column:
     """Curation text normalizer: strip control and zero-width
     characters, collapse runs of whitespace to single spaces, trim —
     the cleanup pass before tokenization/hashing so dedup keys don't
-    split on invisible bytes. Optional lowercasing for case-insensitive
-    pipelines.
+    split on invisible bytes. Case is kept.
 
     Pure regexp pipeline (map-only, codegen); the same steps express
     verbatim in SQL for the oracle.
@@ -1294,10 +1279,7 @@ def normalize_text(text: Column, lowercase: bool = False) -> Column:
         text, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F​‌‍﻿]", ""
     )
     out = F.regexp_replace(out, r"\s+", " ")
-    out = F.trim(out)
-    if lowercase:
-        out = F.lower(out)
-    return out
+    return F.trim(out)
 
 
 def pii_redact(text: Column) -> Column:

@@ -1315,8 +1315,7 @@ def q_ann_ivf_topk(spark, sf):
     if quant is None:
         quant = _IVF_QUANTIZERS[sf] = SIM.train_ivf_quantizer(emb, n_clusters=8)
     return SIM.ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 20), k=10, n_clusters=8, nprobe=2,
-        quantizer=quant,
+        emb, emb.filter(F.col("vec_id") < 20), quant, k=10, nprobe=2
     )
 
 
@@ -5780,7 +5779,7 @@ def q_embedding_kmeans(spark, sf):
     # replaces the separate kmeans_assign objective pass.
     seed = train_ivf_quantizer(emb, 4)  # the seed = iteration 0
     _discarded, objs = kmeans_fit(
-        emb, k=4, iters=4, init=seed, return_objectives=True
+        emb, init=seed, iters=4, return_objectives=True
     )
     objs = list(objs)
     rows = [
@@ -5953,7 +5952,7 @@ def q_kmeans_fit_fixed(spark, sf):
     from hstream_spark.operators.similarity import kmeans_assign, kmeans_fit
 
     emb = load_table(spark, sf, "embeddings")
-    cents = kmeans_fit(emb, k=4, iters=3, init=_seed_centroids(emb))
+    cents = kmeans_fit(emb, init=_seed_centroids(emb), iters=3)
     return kmeans_assign(emb, cents)
 
 

@@ -51,15 +51,13 @@ class ConnectorError(RuntimeError):
 
 def cdc_envelope(
     df: DataFrame,
-    payload_col: str = "value",
-    value_schema: Optional[str] = None,
+    payload_col: str,
+    value_schema: str,
 ) -> DataFrame:
     """Parse a Debezium-style CDC envelope
     ``{"op": "c|u|d|r", "ts_ms": ..., "before": {...}, "after": {...}}``
-    into (op, ts_ms, before, after) columns. With ``value_schema`` (a
-    DDL string) before/after become typed structs; otherwise they stay
-    JSON strings for downstream ``get_json_object`` access — the
-    schemaless mode matching the reference's dynamic rows.
+    into (op, ts_ms, before, after) columns; before/after become structs
+    typed by ``value_schema`` (a DDL string).
 
     Pure projection (JVM json path expressions): map-only at any scale.
     """
@@ -71,17 +69,15 @@ def cdc_envelope(
         F.get_json_object(c, "$.before").alias("before"),
         F.get_json_object(c, "$.after").alias("after"),
     )
-    if value_schema is not None:
-        out = out.withColumn("before", F.from_json(F.col("before"), value_schema))
-        out = out.withColumn("after", F.from_json(F.col("after"), value_schema))
-    return out
+    out = out.withColumn("before", F.from_json(F.col("before"), value_schema))
+    return out.withColumn("after", F.from_json(F.col("after"), value_schema))
 
 
 def cdc_apply(
     changes: DataFrame,
     key_cols: list[str],
+    order_cols: list[str],
     op_col: str = "op",
-    order_cols: Optional[list[str]] = None,
 ) -> DataFrame:
     """Materialize a changelog into its current table state: the latest
     change per key wins (ordered by ``order_cols``, e.g. ts + lsn), and
@@ -93,7 +89,6 @@ def cdc_apply(
     """
     from pyspark.sql import Window
 
-    order_cols = order_cols or ["ts_ms"]
     w = Window.partitionBy(*key_cols).orderBy(
         *[F.col(c).desc() for c in order_cols]
     )
@@ -1367,7 +1362,11 @@ def build_sink(ctype: str, options: dict) -> SinkFn:
     return SINK_BUILDERS[ctype](options)
 
 
-def mongodb_source(spark: SparkSession, options: dict, max_docs: int = 1_000_000,
+# Largest snapshot `mongodb_source` reads through its one cursor.
+_MONGO_MAX_DOCS = 1_000_000
+
+
+def mongodb_source(spark: SparkSession, options: dict,
                    filter: Optional[dict] = None,
                    empty_ok: bool = False) -> Optional[DataFrame]:
     """CDC-style snapshot source over the MongoDB wire protocol
@@ -1376,7 +1375,7 @@ def mongodb_source(spark: SparkSession, options: dict, max_docs: int = 1_000_000
     connector, no jar and no external client.
 
     The cursor is a single connection, so the snapshot reads through
-    the driver (capped at ``max_docs`` with a loud error — parallel
+    the driver (capped at ``_MONGO_MAX_DOCS`` with a loud error — parallel
     partitioned reads are the official connector's splitVector
     territory). ``filter`` is a MongoDB query document passed INSIDE
     the ``find`` command, so the SERVER evaluates it and only matching
@@ -1430,11 +1429,11 @@ def mongodb_source(spark: SparkSession, options: dict, max_docs: int = 1_000_000
             cid = int(cursor.get("id", 0))
             req = 1
             while cid:
-                if len(docs) > max_docs:
+                if len(docs) > _MONGO_MAX_DOCS:
                     raise ConnectorError(
-                        f"mongodb source exceeded max_docs={max_docs}; the "
-                        "snapshot reads through one cursor connection — "
-                        "bound the collection or raise max_docs deliberately"
+                        f"mongodb source exceeded _MONGO_MAX_DOCS={_MONGO_MAX_DOCS}; "
+                        "the snapshot reads through one cursor connection — "
+                        "bound the collection or raise _MONGO_MAX_DOCS deliberately"
                     )
                 req += 1
                 # cursor id MUST be BSON int64 (0x12): real mongod rejects

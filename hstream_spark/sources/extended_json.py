@@ -122,9 +122,10 @@ def decode_record(
     df: DataFrame,
     payload_col: str,
     fields: Mapping[str, str],
-    keep: list[str] | None = None,
+    keep: list[str],
 ) -> DataFrame:
-    """Lower an extended-JSON record column into typed columns.
+    """Lower an extended-JSON record column into typed columns, after
+    the ``keep`` columns of ``df``.
 
     ``fields`` maps output column name → logical type (the DDL names:
     INTEGER/FLOAT/BOOLEAN/STRING/BYTEA/DATE/TIME/TIMESTAMP/INTERVAL/
@@ -132,7 +133,7 @@ def decode_record(
     are scalar Catalyst expressions on the map entries.
     """
     raw = F.from_json(F.col(payload_col), "map<string,string>")
-    cols = [F.col(c) for c in (keep or [])]
+    cols = [F.col(c) for c in keep]
     for name, ltype in fields.items():
         if ltype not in DECODERS:
             raise ValueError(f"unknown logical type {ltype!r} for field {name!r}")

@@ -970,13 +970,8 @@ class KafkaClient:
     # -- APIs --------------------------------------------------------------
 
 
-    def metadata(self, topics: Optional[list[str]] = None) -> dict:
-        body = (
-            struct.pack(">i", -1)
-            if topics is None
-            else enc_array([enc_string(t) for t in topics])
-        )
-        r = self._call(API_METADATA, 1, body)
+    def metadata(self, topics: list[str]) -> dict:
+        r = self._call(API_METADATA, 1, enc_array([enc_string(t) for t in topics]))
         brokers = {}
         for _ in range(r.int32()):
             node, host, port = r.int32(), r.string(), r.int32()
@@ -1331,23 +1326,15 @@ class KafkaClient:
         topic: str,
         records: list[tuple[Optional[bytes], Optional[bytes], int]],
         partition: int = 0,
-        acks: int = -1,
         timeout_ms: int = 30000,
         compression: str = "none",
     ) -> int:
-        """Produce one batch; returns the assigned base offset."""
-        if acks == 0:
-            # with acks=0 the broker sends NO Produce response; this
-            # client's request loop always reads one, so the call would
-            # block until socket timeout and then fail spuriously
-            raise KafkaWireError(
-                "acks=0 is unsupported (fire-and-forget sends no "
-                "response to read); use acks=1 or acks=-1"
-            )
+        """Produce one batch with ``acks=-1`` (every in-sync replica);
+        returns the assigned base offset."""
         batch = encode_record_batch(records, compression=compression)
         body = (
             enc_nullable_string(None)  # transactional_id
-            + enc_int16(acks)
+            + enc_int16(-1)  # acks
             + enc_int32(timeout_ms)
             + enc_array([
                 enc_string(topic)

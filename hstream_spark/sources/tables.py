@@ -107,8 +107,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread(df, partitions: int | None = None):
-    """Repartition a small-file input for CPU-heavy per-row operators.
+def spread(df):
+    """Repartition a small-file input for CPU-heavy per-row operators
+    to the session's default parallelism.
 
     A tiny parquet file arrives as ONE partition (row groups don't
     split), so md5/fold-heavy projections (MinHash, SimHash,
@@ -117,7 +118,7 @@ def spread(df, partitions: int | None = None):
     fresh scan (the input-file count is the parallelism proxy); frames
     that were already repartitioned upstream don't need it.
     """
-    target = partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # file count as the parallelism proxy: metadata-only (~ms), whereas
     # df.rdd.getNumPartitions() converts the plan to an RDD (~0.9s of
     # driver time per fresh DataFrame)

@@ -1,5 +1,5 @@
 """As-of join semantics: inclusive backward match, tie-breaking,
-unmatched rows, inner mode, and the no-explosion plan shape."""
+unmatched rows, and the no-explosion plan shape."""
 
 from __future__ import annotations
 
@@ -44,23 +44,6 @@ def test_asof_left_matches(spark, sides):
     assert rows["p2"] == "c4"  # latest at-or-before 205
     assert rows["p3"] is None  # right rows exist but all later
     assert rows["p4"] is None  # key absent
-
-
-def test_asof_inner_drops_unmatched(spark, sides):
-    left, right = sides
-    pids = {
-        r.pid
-        for r in asof_join(
-            left, right, on="k", left_ts="ts", right_ts="ts", tiebreak="cid", how="inner"
-        ).collect()
-    }
-    assert pids == {"p1", "p2"}
-
-
-def test_asof_rejects_bad_how(spark, sides):
-    left, right = sides
-    with pytest.raises(ValueError):
-        asof_join(left, right, on="k", how="full")
 
 
 def test_asof_plan_has_no_join(spark, sides):

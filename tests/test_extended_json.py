@@ -41,7 +41,7 @@ WIRE = (
 
 def test_decode_record_all_wrappers(spark):
     df = spark.createDataFrame([(WIRE,)], "payload string")
-    row = EJ.decode_record(df, "payload", FIELDS).collect()[0]
+    row = EJ.decode_record(df, "payload", FIELDS, keep=[]).collect()[0]
     assert row["i"] == 42
     assert row["f"] == 1.5
     assert row["b"] is True
@@ -60,7 +60,8 @@ def test_decode_record_plain_spellings(spark):
         "payload string",
     )
     row = EJ.decode_record(
-        df, "payload", {"i": "INTEGER", "f": "FLOAT", "d": "DATE", "ts": "TIMESTAMP"}
+        df, "payload", {"i": "INTEGER", "f": "FLOAT", "d": "DATE", "ts": "TIMESTAMP"},
+        keep=[],
     ).collect()[0]
     assert row["i"] == 7
     assert row["f"] == 2.5
@@ -72,7 +73,7 @@ def test_malformed_wrapper_is_null(spark):
     good = '{"i": {"$numberLong": "1"}}'
     bad = '{"i": {"$numberLong": "junk"}}'
     df = spark.createDataFrame([(good,), (bad,)], "payload string")
-    vals = [r["i"] for r in EJ.decode_record(df, "payload", {"i": "INTEGER"}).collect()]
+    vals = [r["i"] for r in EJ.decode_record(df, "payload", {"i": "INTEGER"}, keep=[]).collect()]
     assert vals == [1, None]
 
 
@@ -84,7 +85,7 @@ def test_encode_decode_roundtrip(spark):
     )
     wire = EJ.encode_record(df, fields).select("payload")
     assert '"$numberLong":"3"' in wire.collect()[0]["payload"]
-    back = EJ.decode_record(wire, "payload", fields).collect()[0]
+    back = EJ.decode_record(wire, "payload", fields, keep=[]).collect()[0]
     assert (back["i"], back["f"], back["s"], bytes(back["by"])) == (3, 0.25, "x", b"\x00\xff")
 
 
@@ -146,7 +147,7 @@ def test_roundtrip_property(spark, recs):
         "i long, f double, s string, by binary",
     )
     wire = EJ.encode_record(df, fields).select("payload")
-    back = EJ.decode_record(wire, "payload", fields).collect()
+    back = EJ.decode_record(wire, "payload", fields, keep=[]).collect()
     got = sorted((r["i"], r["f"], r["s"], bytes(r["by"])) for r in back)
     want = sorted((i, f, s, bytes(b)) for i, f, s, b in recs)
     assert got == want

@@ -264,22 +264,6 @@ def test_unknown_compression_name_rejected():
         encode_record_batch([(None, b"v", 0)], compression="brotli")
 
 
-def test_produce_acks_zero_rejected():
-    """acks=0 gets no broker response; the client must refuse instead
-    of blocking until socket timeout."""
-    from hstream_spark.sources.kafka_stub import KafkaStubBroker
-    from hstream_spark.sources.kafka_wire import KafkaClient
-
-    with KafkaStubBroker() as broker:
-        broker.create_topic("a0")
-        client = KafkaClient(broker.bootstrap)
-        try:
-            with pytest.raises(KafkaWireError, match="acks=0"):
-                client.produce("a0", [(None, b"v", 0)], acks=0)
-        finally:
-            client.close()
-
-
 def test_gzip_topic_produce_fetch_round_trip():
     """Producer-compressed topic end to end: gzip batches survive the
     broker byte-for-byte (rebase happens OUTSIDE the CRC range) and the

@@ -275,6 +275,30 @@ _REFERENCE_ONLY = {
 }
 
 
+_PROGRAM_ROOTS = ("__spark_entry__.py", "bench.py", "examples", "tools",
+                  "perfbench", "hstream_spark")
+
+
+def _program_trees(repo) -> dict:
+    """Module name -> parsed AST of every program file: the package and
+    the scripts that drive it. Tests are not program."""
+    import ast
+
+    trees = {}
+    for rel in _PROGRAM_ROOTS:
+        path = repo / rel
+        for f in [path] if path.is_file() else sorted(path.rglob("*.py")):
+            mod = ".".join(f.relative_to(repo).with_suffix("").parts)
+            trees[mod] = ast.parse(f.read_text())
+    return trees
+
+
+def _is_library(mod: str) -> bool:
+    """Library modules hold the definitions the guards check; every
+    other program module (``plans/`` included) is only a caller."""
+    return mod.startswith("hstream_spark.") and not mod.startswith("hstream_spark.plans")
+
+
 def _unreached_definitions(repo) -> list[str]:
     """Top-level functions, classes and methods under ``hstream_spark/``
     that no program root reaches by name.
@@ -298,22 +322,20 @@ def _unreached_definitions(repo) -> list[str]:
                     out.add(sub.attr)
         return out
 
+    trees = _program_trees(repo)
     names: set[str] = set()
-    for rel in ("__spark_entry__.py", "bench.py", "examples", "tools",
-                "perfbench", "hstream_spark/plans"):
-        path = repo / rel
-        for f in [path] if path.is_file() else sorted(path.rglob("*.py")):
-            names |= refs([ast.parse(f.read_text())])
+    for mod, tree in trees.items():
+        if not _is_library(mod):
+            names |= refs([tree])
 
     # key -> (name, owning class key or None, referenced names, reported)
     defs: dict[str, tuple] = {}
     reached: set[str] = set()
     funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
-    for f in sorted((repo / "hstream_spark").rglob("*.py")):
-        mod = ".".join(f.relative_to(repo).with_suffix("").parts)
-        if mod.startswith("hstream_spark.plans"):
+    for mod, tree in trees.items():
+        if not _is_library(mod):
             continue
-        for node in ast.parse(f.read_text()).body:
+        for node in tree.body:
             key = f"{mod}.{getattr(node, 'name', '')}"
             if isinstance(node, funcs):
                 defs[key] = (node.name, None, refs([node]), True)
@@ -371,3 +393,103 @@ def test_library_code_is_reached():
     repo = pathlib.Path(__file__).resolve().parents[1]
     unreached = _unreached_definitions(repo)
     assert not unreached, "no program path reaches:\n" + "\n".join(unreached)
+
+
+# Branch-selecting parameters that no program caller sets, kept on
+# purpose: each is a scale mode the named test drives at both settings.
+_SCALE_MODES = {
+    "hstream_spark.operators.relational.profile_table(approx_distinct)":
+        "tests/test_plans.py::test_profile_table_approx_one_pass",
+    "hstream_spark.operators.text.lm_bigram_cross_entropy(broadcast_bigrams)":
+        "tests/test_plan_quality.py::test_bigram_lm_broadcast_gate",
+    "hstream_spark.operators.text.lm_trigram_cross_entropy(broadcast_tables)":
+        "tests/test_text_pipeline.py::test_trigram_lm_broadcast_gate",
+}
+
+
+def _unset_branch_parameters(repo) -> list[str]:
+    """Defaulted parameters of library functions and methods that pick a
+    code branch, yet no program call site passes.
+
+    A parameter picks a branch when its name appears in the test of an
+    ``if``, conditional expression or ``while``, a ``match`` subject, or
+    an ``and``/``or`` operand inside its own function. A call site is any
+    call by the function's name (``f(...)`` or ``obj.f(...)``) in a
+    program module; it passes a parameter by keyword, by position, or
+    through ``*args``/``**kwargs``. Constructors, ``HStreamEngine``'s
+    public methods, ``_REFERENCE_ONLY`` and ``_SCALE_MODES`` are exempt."""
+    import ast
+
+    trees = _program_trees(repo)
+    calls: dict[str, list[tuple[int, set, bool]]] = {}
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                kws = {k.arg for k in node.keywords}
+                spread = None in kws or any(isinstance(a, ast.Starred) for a in node.args)
+                calls.setdefault(name, []).append((len(node.args), kws, spread))
+
+    def tested(fn) -> set[str]:
+        exprs = []
+        for sub in ast.walk(fn):
+            if isinstance(sub, (ast.If, ast.IfExp, ast.While)):
+                exprs.append(sub.test)
+            elif isinstance(sub, ast.Match):
+                exprs.append(sub.subject)
+            elif isinstance(sub, ast.BoolOp):
+                exprs.extend(sub.values)
+        return {n.id for e in exprs for n in ast.walk(e) if isinstance(n, ast.Name)}
+
+    unset = []
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+    def visit(node, prefix, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, f"{prefix}.{child.name}", child)
+            elif isinstance(child, funcs):
+                key = f"{prefix}.{child.name}"
+                visit(child, key, None)
+                if (child.name == "__init__" or key in _REFERENCE_ONLY
+                        or (owner is not None and owner.name == "HStreamEngine"
+                            and not child.name.startswith("_"))):
+                    continue
+                a = child.args
+                positional = [p.arg for p in a.posonlyargs + a.args]
+                if owner is not None and not any(
+                        getattr(d, "id", None) == "staticmethod" for d in child.decorator_list):
+                    positional = positional[1:]
+                defaulted = positional[len(positional) - len(a.defaults):] if a.defaults else []
+                defaulted += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+                branch = tested(child)
+                for p in defaulted:
+                    label = f"{key}({p})"
+                    if p not in branch or label in _SCALE_MODES:
+                        continue
+                    pos = positional.index(p) if p in positional else None
+                    if not any(spread or p in kws or (pos is not None and n > pos)
+                               for n, kws, spread in calls.get(child.name, [])):
+                        unset.append(label)
+            else:
+                visit(child, prefix, owner)
+
+    for mod, tree in trees.items():
+        if _is_library(mod):
+            visit(tree, mod, None)
+    return sorted(unset)
+
+
+def test_branch_parameters_are_set_by_program():
+    """A parameter that selects a code branch earns its place only when
+    some program call site passes it: otherwise every program path takes
+    the default's side and the other side is reached only by tests.
+    Inline the default and delete the branch it never takes."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    for test in _SCALE_MODES.values():
+        path, name = test.split("::")
+        assert f"def {name}(" in (repo / path).read_text(), test
+    unset = _unset_branch_parameters(repo)
+    assert not unset, "no program call site passes:\n" + "\n".join(unset)

@@ -3,7 +3,6 @@ co-located joins (the no-exchange property bucketing buys)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from hstream_spark.operators.joins import salted_join
@@ -19,19 +18,6 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     plain = {tuple(r) for r in orders.join(cust, "o_custkey").collect()}
     salted = {tuple(r) for r in salted_join(orders, cust, on="o_custkey", salt=8).collect()}
     assert salted == plain
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    left = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    right = spark.createDataFrame([(1, "x")], "k long, w string")
-    rows = {r.k: r.w for r in salted_join(left, right, on="k", salt=4, how="left").collect()}
-    assert rows == {1: "x", 2: None}
-
-
-def test_salted_join_rejects_full(spark):
-    df = spark.createDataFrame([(1,)], "k long")
-    with pytest.raises(ValueError):
-        salted_join(df, df, on="k", how="full")
 
 
 def test_cap_per_group_deterministic_and_bounded(spark):

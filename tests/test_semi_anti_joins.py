@@ -92,8 +92,9 @@ def test_range_join_bucketed_matches_broadcast(spark):
         [(0, 0.0, 20.0), (1, 15.0, 60.0), (2, 55.0, 99.0)],
         "band long, lo double, hi double",
     )
+    cond = (F.col("v") >= F.col("lo")) & (F.col("v") <= F.col("hi"))
     bc = {(r["id"], r["band"])
-          for r in range_join(left, bands, "v", "lo", "hi").collect()}
+          for r in left.join(F.broadcast(bands), cond).collect()}
     bk = {(r["id"], r["band"])
           for r in range_join(left, bands, "v", "lo", "hi", bucket_width=25.0).collect()}
     assert bc == bk and bc

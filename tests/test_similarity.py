@@ -17,7 +17,8 @@ def emb(spark, sf_dir):
 
 
 def test_ivf_topk_shape_and_ranks(spark, emb):
-    res = SIM.ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10, n_clusters=8, nprobe=2)
+    quant = SIM.train_ivf_quantizer(emb, n_clusters=8)
+    res = SIM.ivf_topk(emb, emb.filter(F.col("vec_id") < 5), quant, k=10, nprobe=2)
     rows = res.collect()
     per_q = {}
     for r in rows:
@@ -32,7 +33,8 @@ def test_ivf_topk_shape_and_ranks(spark, emb):
 def test_ivf_recall_vs_brute_force(spark, emb):
     qs = emb.filter(F.col("vec_id") < 5)
     exact = {(r.q_id, r.c_id) for r in SIM.brute_force_topk(emb, qs, k=10).collect()}
-    approx = {(r.q_id, r.c_id) for r in SIM.ivf_topk(emb, qs, k=10, n_clusters=8, nprobe=2).collect()}
+    quant = SIM.train_ivf_quantizer(emb, n_clusters=8)
+    approx = {(r.q_id, r.c_id) for r in SIM.ivf_topk(emb, qs, quant, k=10, nprobe=2).collect()}
     recall = len(exact & approx) / len(exact)
     # nprobe=2 of 8 near-random clusters: recall well above the ~25%
     # mass of the probed lists because true neighbors skew into them
@@ -49,7 +51,8 @@ def test_bruteforce_np_matches_expression_path(spark, emb):
 
 def test_ivf_probe_join_is_equi(spark, emb):
     plan = (
-        SIM.ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
+        SIM.ivf_topk(emb, emb.filter(F.col("vec_id") < 5),
+                     SIM.train_ivf_quantizer(emb, n_clusters=8), k=10)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan
@@ -342,11 +345,11 @@ class TestKMeans:
             )
 
         seed = train_ivf_quantizer(emb, 4)
-        trained = kmeans_fit(emb, k=4, iters=3)
+        trained = kmeans_fit(emb, init=seed, iters=3)
         # Lloyd iterations must not worsen the (monotone) objective
         assert cohesion(trained) >= cohesion(seed) - 1e-12
         # bit-deterministic: same data, same result
-        again = kmeans_fit(emb, k=4, iters=3)
+        again = kmeans_fit(emb, init=seed, iters=3)
         assert trained == again
         assert len(trained) == 4
         for _, c in trained:
@@ -363,8 +366,8 @@ class TestKMeans:
 
         emb = load_table(spark, sf_dir, "embeddings")
         init = _seed_centroids(emb)
-        t1 = kmeans_fit(emb, k=4, iters=3, init=init)
-        t2 = kmeans_fit(emb.repartition(13), k=4, iters=3, init=init)
+        t1 = kmeans_fit(emb, init=init, iters=3)
+        t2 = kmeans_fit(emb.repartition(13), init=init, iters=3)
         assert t1 == t2
         assert [cl for cl, _ in t1] == [0, 1, 2, 3]
         assert t1 != sorted(init)  # it actually moved the centroids
@@ -390,13 +393,13 @@ class TestKMeans:
         emb = load_table(spark, sf_dir, "embeddings")
         seed = train_ivf_quantizer(emb, 4)
         fused, objs = kmeans_fit(
-            emb, k=4, iters=3, init=seed, return_objectives=True
+            emb, init=seed, iters=3, return_objectives=True
         )
-        assert kmeans_fit(emb, k=4, iters=3, init=seed) == fused
+        assert kmeans_fit(emb, init=seed, iters=3) == fused
         chained = seed
         models = [seed]
         for _ in range(3):
-            chained = kmeans_fit(emb, k=4, iters=1, init=chained)
+            chained = kmeans_fit(emb, init=chained, iters=1)
             models.append(chained)
         assert chained == fused
         assert len(objs) == 3
@@ -409,9 +412,10 @@ class TestKMeans:
             assert abs(got - ref) < 1e-9 * max(1.0, abs(ref))
 
 
-def test_bruteforce_np_rejects_oversized_query_side(spark, emb):
-    with pytest.raises(ValueError, match="max_queries"):
-        SIM.brute_force_topk_np(emb, emb, k=3, max_queries=10)
+def test_bruteforce_np_rejects_oversized_query_side(spark, emb, monkeypatch):
+    monkeypatch.setattr(SIM, "_MAX_QUERIES", 10)
+    with pytest.raises(ValueError, match="_MAX_QUERIES=10"):
+        SIM.brute_force_topk_np(emb, emb, k=3)
 
 
 def _lloyd_codebooks(emb, m, ks, iters):
@@ -581,11 +585,12 @@ class TestLinearProbe:
                 F.avg((F.col("score") - F.col("y")) ** 2).alias("m")
             ).collect()[0]["m"]
 
+        # full-batch GD from the zero start is deterministic, so the
+        # model after `iters` steps is the state of one chained descent
         losses = [mse([0.0] * 9)]
-        w = [0.0] * 9
-        for _ in range(4):
+        for iters in range(1, 5):
             w = SIM.linear_probe_fit(
-                df, label=F.col("y"), dim=8, iters=1, lr=0.5, init=w
+                df, label=F.col("y"), dim=8, iters=iters, lr=0.5
             )
             losses.append(mse(w))
         # GD strictly improves on a separable least-squares problem
@@ -616,25 +621,12 @@ class TestLinearProbe:
         w32 = SIM.linear_probe_fit(emb.repartition(32), F.col("y"), dim=8, iters=2)
         assert w1 == w32  # fixed-point sums are order-independent
 
-    def test_probe_rejects_bad_init(self, spark):
-        import pytest as _pytest
-
-        from pyspark.sql import functions as F
-
-        from hstream_spark.operators import similarity as SIM
-
-        emb = spark.createDataFrame(
-            [(0, [0.0] * 8, 0.0)], "vec_id long, embedding array<double>, y double"
-        )
-        with _pytest.raises(ValueError, match="dim\\+1"):
-            SIM.linear_probe_fit(emb, F.col("y"), dim=8, init=[0.0] * 3)
-
     def test_probe_skips_untrainable_rows(self, spark):
         """Short arrays / NULL elements / NULL labels drop out of BOTH
         the gradient sums and the n denominator (a counted-but-
         contributing-nothing row silently shrinks every step with a
         per-position-INCONSISTENT denominator); an all-bad corpus
-        raises instead of returning init or crashing on float(None)."""
+        raises instead of returning the zero start or crashing on float(None)."""
         import pytest as _pytest
 
         from pyspark.sql import functions as F
@@ -779,19 +771,6 @@ class TestLogisticProbe:
         with _pytest.raises(ValueError, match="no trainable rows"):
             SIM.logistic_probe_fit(bad, F.col("y"), dim=8, iters=1)
 
-    def test_logistic_probe_rejects_bad_init(self, spark):
-        import pytest as _pytest
-
-        from pyspark.sql import functions as F
-
-        from hstream_spark.operators import similarity as SIM
-
-        emb = spark.createDataFrame(
-            [(0, [0.0] * 8, 0.0)], "vec_id long, embedding array<double>, y double"
-        )
-        with _pytest.raises(ValueError, match="dim\\+1"):
-            SIM.logistic_probe_fit(emb, F.col("y"), dim=8, init=[0.0] * 3)
-
 
 class TestScalarQuantization:
     def _corpus(self, spark, dim=4):
@@ -840,7 +819,7 @@ class TestScalarQuantization:
         assert out[0]["sqdist"] < out[1]["sqdist"]
         assert all(r["sqdist"] >= 0 for r in out)
 
-    def test_adc_topk_query_cap_raises(self, spark):
+    def test_adc_topk_query_cap_raises(self, spark, monkeypatch):
         from hstream_spark.operators.similarity import (
             sq_adc_topk,
             sq_encode,
@@ -852,8 +831,9 @@ class TestScalarQuantization:
         codes = sq_encode(emb, mns, mxs)
         import pytest
 
-        with pytest.raises(ValueError, match="max_queries"):
-            sq_adc_topk(codes, emb, mns, mxs, k=1, max_queries=2)
+        monkeypatch.setattr(SIM, "_MAX_QUERIES", 2)
+        with pytest.raises(ValueError, match="_MAX_QUERIES=2"):
+            sq_adc_topk(codes, emb, mns, mxs, k=1)
 
     def test_constant_dimension_encodes_zero(self, spark):
         from hstream_spark.operators.similarity import sq_encode, sq_train

@@ -457,13 +457,14 @@ def test_containment_asymmetric(spark):
     assert not any(3 in k for k in out)
 
 
-def test_quadratic_block_guard_fails_loudly(spark):
+def test_quadratic_block_guard_fails_loudly(spark, monkeypatch):
     """The brute-force within-block pair operators enforce their
     'blocks must be bounded' contract: an oversized block raises with
     the LSH scale path in the message instead of silently running
-    O(block²) — the `max_queries` pattern applied per block."""
+    O(block²) — the `_MAX_QUERIES` pattern applied per block."""
     import pytest
 
+    from hstream_spark.operators import dedup
     from hstream_spark.operators.dedup import (
         containment_pairs,
         ngram_jaccard_pairs,
@@ -473,13 +474,15 @@ def test_quadratic_block_guard_fails_loudly(spark):
         [(i, f"some words here number {i}", "en") for i in range(30)],
         "doc_id long, text string, lang string",
     )
+    monkeypatch.setattr(dedup, "_MAX_BLOCK", 10)
     with pytest.raises(ValueError, match="minhash_near_duplicates"):
-        ngram_jaccard_pairs(docs, ["lang"], max_block=10)
-    with pytest.raises(ValueError, match="max_block=10"):
-        containment_pairs(docs, ["lang"], max_block=10)
-    # within bounds (or opted out) the operators run
-    assert ngram_jaccard_pairs(docs, ["lang"], max_block=None).count() >= 0
-    assert containment_pairs(docs, ["lang"], max_block=100).count() >= 0
+        ngram_jaccard_pairs(docs, ["lang"])
+    with pytest.raises(ValueError, match="_MAX_BLOCK=10"):
+        containment_pairs(docs, ["lang"])
+    # within bounds the operators run
+    monkeypatch.setattr(dedup, "_MAX_BLOCK", 100)
+    assert ngram_jaccard_pairs(docs, ["lang"]).count() >= 0
+    assert containment_pairs(docs, ["lang"]).count() >= 0
 
 
 def test_normalize_text_strips_and_collapses(spark):
@@ -498,10 +501,6 @@ def test_normalize_text_strips_and_collapses(spark):
     assert out[1] == "hello world again"
     assert out[2] == "UPPER Case"
     assert out[3] == ""
-    low = {r["doc_id"]: r["c"] for r in docs.select(
-        "doc_id", normalize_text(F.col("text"), lowercase=True).alias("c")
-    ).collect()}
-    assert low[2] == "upper case"
 
 
 def test_pii_redact_placeholders(spark):
@@ -957,33 +956,6 @@ def test_dedup_index_append_then_compact_parity(spark, sf_dir, tmp_path):
     )
 
 
-def test_dedup_index_compact_retention_drops_removed_ids(spark, tmp_path):
-    """retain_ids drops band/set rows of documents deleted from the
-    corpus: a probe that matched only a dropped doc stops flagging."""
-    from hstream_spark.operators.dedup import (
-        build_dedup_index,
-        compact_dedup_index,
-        dedup_with_index,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus = spark.createDataFrame(
-        [(1, base), (2, "totally different words entirely right here")],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "idx")
-    build_dedup_index(corpus, idx)
-    probe = spark.createDataFrame(
-        [(100, base + " extra")], "doc_id long, text string"
-    )
-    r0 = dedup_with_index(spark, probe, idx, threshold=0.5).collect()[0]
-    assert r0["near_dup"] is True
-    keep = spark.createDataFrame([(2,)], "doc_id long")
-    compact_dedup_index(spark, idx, retain_ids=keep)
-    r1 = dedup_with_index(spark, probe, idx, threshold=0.5).collect()[0]
-    assert r1["near_dup"] is False
-
-
 def test_lsh_bucket_stats_counts_and_pairs(spark):
     """Histogram invariants: sum over (size × n_buckets) per band =
     docs with a signature in that band; candidate_pairs = C(size,2)
@@ -1041,7 +1013,7 @@ def test_lsh_recall_eval_empty_sample_yields_threshold_rows(spark):
         [(100, "only one document beyond the sample bound")],
         "doc_id long, text string",
     )
-    rows = lsh_recall_eval(docs, max_id=60).collect()
+    rows = lsh_recall_eval(docs.where("doc_id < 60")).collect()
     assert len(rows) == 3
     assert all(r["true_pairs"] == 0 and r["hit_pairs"] == 0
                and r["recall"] is None and r["total_candidates"] == 0
